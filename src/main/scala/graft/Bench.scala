@@ -164,11 +164,8 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
     // ad-hoc knobs for local sweeps: SPARK_GRAFT_CONF="k1=v1;k2=v2"
-    val tuned = sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
-      .foldLeft(builder) { (b, kv) =>
-        val Array(k, v) = kv.split("=", 2); b.config(k, v)
-      }
+    val tuned = Explain.confEntries(sys.env.get("SPARK_GRAFT_CONF"))
+      .foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
     val spark = tuned.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

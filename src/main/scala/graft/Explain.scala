@@ -14,6 +14,21 @@ import org.apache.spark.sql.SparkSession
   * environment a bench block actually planned under.
   */
 object Explain {
+  /** `SPARK_GRAFT_CONF="k=v;k=v"` → (key, value) pairs, shared by Explain
+    * and Bench. Fails fast on an entry without '=': a silently dropped
+    * typo would plan under the WRONG environment — the exact mismatch a
+    * captured plan or a timed block must not hide. */
+  private[graft] def confEntries(raw: Option[String]): Seq[(String, String)] = {
+    val entries = raw.toSeq.flatMap(_.split(";")).map(_.trim)
+      .filter(_.nonEmpty)
+    val bad = entries.filterNot(_.contains("="))
+    require(bad.isEmpty,
+      s"SPARK_GRAFT_CONF entries without '=': ${bad.mkString(", ")}")
+    entries.map { kv =>
+      val Array(k, v) = kv.split("=", 2); (k.trim, v.trim)
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
@@ -27,18 +42,9 @@ object Explain {
         sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
-    // Fail fast on malformed SPARK_GRAFT_CONF entries: a silently dropped
-    // typo would capture a plan under the WRONG planning environment —
-    // the exact mismatch this tool exists to prevent (ADVICE r13).
-    val confEntries = sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.nonEmpty)
-    val bad = confEntries.filterNot(_.contains("="))
-    require(bad.isEmpty,
-      s"SPARK_GRAFT_CONF entries without '=': ${bad.mkString(", ")}")
-    val spark = confEntries
-      .foldLeft(builder) { (b, kv) =>
-        val Array(k, v) = kv.split("=", 2); b.config(k, v)
-      }.getOrCreate()
+    val spark = confEntries(sys.env.get("SPARK_GRAFT_CONF"))
+      .foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     for (n <- names) {
       println(s"=== $n ===")

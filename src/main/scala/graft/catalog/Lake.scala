@@ -710,16 +710,21 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
   }
 
   /** SQL entry point — the "attach and query" experience of the reference.
-    * DML/DDL statements (INSERT/UPDATE/DELETE/MERGE INTO, CREATE/ALTER/
-    * DROP TABLE, CREATE VIEW) route to the Lake API via [[LakeSql]]; plain
-    * queries register every lake table (current snapshot) as a temp view,
+    * DuckDB-only statements (DDL, CALL, SECRET, MACRO, BEGIN/COMMIT …)
+    * route to the Lake API via [[LakeSql]]; INSERT/DELETE/UPDATE/MERGE
+    * run as `spark.sql` runs them ([[runDml]]); plain queries register
+    * the lake tables they mention (current snapshot) as temp views,
     * expand stored macros, and delegate to Spark SQL. */
   def sql(sqlText: String): DataFrame = {
     val stmt = sqlText.trim.stripSuffix(";").trim
+    // DuckDB spellings Spark's parser lacks: AT (VERSION =>) time
+    // travel, metadata table functions in FROM, stored macros
+    def rewrite(q: String): String =
+      expandMacros(rewriteTableFns(rewriteAtClauses(q)),
+        meta.currentSnapshot().snapshotId)
     def runQuery(q0: String): DataFrame = {
       val snap = meta.currentSnapshot()
-      val q = expandMacros(rewriteTableFns(rewriteAtClauses(q0)),
-        snap.snapshotId)
+      val q = rewrite(q0)
       // virtual columns (reference ducklake_table_entry.cpp:398-411 +
       // virtualcolumns tests): when the query references one, views carry
       // rowid / snapshot_id / filename / file_row_number
@@ -770,7 +775,39 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
       })
       spark.sql(q)
     }
-    LakeSql.dispatch(this, spark, stmt, runQuery).getOrElse(runQuery(stmt))
+    LakeSql.dispatch(this, spark, stmt, runQuery).getOrElse(
+      if (DmlStatement.findPrefixOf(stmt).isDefined)
+        runDml(LakeSql.sparkDml(rewrite(stmt)))
+      else runQuery(stmt))
+  }
+
+  private val DmlStatement = """(?is)(INSERT|DELETE|UPDATE|MERGE)\s""".r
+
+  /** INSERT / DELETE / UPDATE / MERGE through the one statement path
+    * `spark.sql` takes: Spark's parser, bare lake names qualified with
+    * this handle's registry alias (names created inside an open
+    * transaction included), and the [[graft.plans.GraftExtensions]] DML
+    * commands — each returns DuckDB's one-row `Count`. */
+  private def runDml(stmt: String): DataFrame = {
+    require(spark.sessionState.analyzer.extendedResolutionRules.exists(
+      _.isInstanceOf[graft.plans.ResolveLakeRelation]),
+      "lake.sql DML needs the graft.plans.GraftExtensions session extension")
+    val plan = graft.plans.LakeNames.qualify(
+      spark.sessionState.sqlParser.parsePlan(stmt), sqlAlias(), this)()
+    org.apache.spark.sql.graftshim.DatasetBridge.ofRows(spark, plan)
+  }
+
+  /** Per-instance [[graft.plans.LakeRegistry]] alias, registered on first
+    * `sql` DML when the handle has none; [[detach]] removes it. */
+  @volatile private var ownAlias: Option[String] = None
+
+  private def sqlAlias(): String = synchronized {
+    graft.plans.LakeRegistry.aliasOf(this).getOrElse {
+      val alias = s"lake_sql_${Lake.aliasSeq.incrementAndGet()}"
+      graft.plans.LakeRegistry.register(alias, this)
+      ownAlias = Some(alias)
+      alias
+    }
   }
 
   private val TableFn =
@@ -1132,6 +1169,8 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
     * first, like the reference's detach. */
   def detach(): Unit = {
     if (txn.isDefined) rollback()
+    ownAlias.foreach(graft.plans.LakeRegistry.unregister)
+    ownAlias = None
     meta.shutdown()
   }
   def listSchemas(): Seq[String] =
@@ -1163,7 +1202,18 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
     * exactly-once — see [[MetadataManager.appendFiles]]). */
   def append(name: String, df: DataFrame,
       commitOptions: Seq[(String, String)],
-      batchGuard: Option[(String, Long)]): Snapshot = {
+      batchGuard: Option[(String, Long)]): Snapshot =
+    appendCounted(name, df, commitOptions, batchGuard)._1
+
+  /** [[append]] returning the rows it wrote — DuckDB's INSERT `Count`,
+    * taken from the inlined rows or the written files' record counts,
+    * never from an extra Spark job over the input. */
+  private[graft] def insert(name: String, df: DataFrame): Long =
+    appendCounted(name, df, Nil, None)._2
+
+  private def appendCounted(name: String, df: DataFrame,
+      commitOptions: Seq[(String, String)],
+      batchGuard: Option[(String, Long)]): (Snapshot, Long) = {
     require(commitOptions.isEmpty && batchGuard.isEmpty || txn.isEmpty,
       "commit options cannot be attached to a buffered transaction append")
     val snap = meta.currentSnapshot()
@@ -1184,7 +1234,8 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
       batchGuard.isEmpty) {
       val sample = aligned0.toJSON.take(inlineLimit + 1)
       if (sample.length <= inlineLimit)
-        return meta.appendInlined(t.tableId, sample.toSeq)
+        return (meta.appendInlined(t.tableId, sample.toSeq),
+          sample.length.toLong)
     }
 
     // sort-on-insert: inject the table's sort spec below the write
@@ -1216,10 +1267,11 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
       sortKeys = if (sortSpec.nonEmpty && sortOn && spec.isDefined)
         sortSpec.map((sortKey _).tupled) else Nil,
       inputSorted = sortSpec.nonEmpty && sortOn && spec.isEmpty)
+    val written = files.map(_.recordCount).sum
     txn match {
       case Some(st) => // buffer; one snapshot at transaction commit
         st.appends += ((t.tableId, name, spec.map(_.partitionId), files))
-        snap
+        (snap, written)
       case None =>
         Lake.preCommitFault.foreach(_(name)) // test-only crash injection
         val committed =
@@ -1241,7 +1293,7 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
             mergeAdjacentFiles(name, target)
         }
         maybeAutoRefresh(name)
-        committed
+        (committed, written)
     }
   }
 
@@ -2933,7 +2985,9 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
   def delete(name: String, cond: Column): Long = {
     val snap = meta.currentSnapshot()
     val t = resolve(name, Some(snap.snapshotId))
-    val matched = scan(name, snap, None, withMeta = true)
+    // the predicate also reaches catalog stats pruning: a point delete
+    // reads the files that can hold its key, not the whole table
+    val matched = scan(name, snap, Some(cond), withMeta = true)
       .filter(cond)
       .select(col("filename").as("file_path"), col("file_row_number").as("pos"))
     val n = deleteByPosition(name, t, snap, matched)
@@ -3246,7 +3300,7 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
     val t = resolve(name, Some(snap.snapshotId))
     val updAllCols = columnsAt(t.tableId, snap.snapshotId)
     val cols = updAllCols.filter(_.parentColumn.isEmpty)
-    val matched = scan(name, snap, None, withMeta = true).filter(cond)
+    val matched = scan(name, snap, Some(cond), withMeta = true).filter(cond)
     // updated rows KEEP their row ids (reference ducklake_row_id_update
     // .test; DuckLakeUpdate materializes row_id into the insert,
     // ducklake_update.cpp:158-163): the rewrite file carries the
@@ -3306,14 +3360,9 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
       col("file_row_number").as("pos"))
     val n = deleteByPosition(name, t, snap, positions, newFiles,
       newFilesPartitionId = updSpec.map(_.partitionId))
-    // update = delete+insert: net row count unchanged
-    if (n != 0) restoreRowCount(t.tableId, n)
     if (n > 0) maybeAutoRefresh(name)
     n
   }
-
-  private def restoreRowCount(tableId: Long, n: Long): Unit = ()
-  // (commitDeletes subtracted n, insertFiles added the rewritten n — net 0)
 
   /** MERGE INTO (reference ducklake_merge_into.cpp:489-634): source vs
     * target on a key; MATCHED UPDATE / DELETE, NOT MATCHED INSERT. At most
@@ -3332,7 +3381,7 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
       matchedCondition: Option[Column] = None,
       notMatchedCondition: Option[Column] = None,
       notMatchedBySourceDelete: Option[Column] = None,
-      notMatchedInsertValues: Option[Seq[(String, Column)]] = None): Unit = {
+      notMatchedInsertValues: Option[Seq[(String, Column)]] = None): Long = {
     require(!(whenMatchedUpdate.isDefined && whenMatchedDelete),
       "at most one MATCHED action via this signature — use mergeMatched " +
         "for an ordered action list")
@@ -3353,19 +3402,20 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
       whenNotMatchedInsert: Boolean = true,
       notMatchedCondition: Option[Column] = None,
       notMatchedBySourceDelete: Option[Column] = None,
-      notMatchedInsertValues: Option[Seq[(String, Column)]] = None): Unit =
+      notMatchedInsertValues: Option[Seq[(String, Column)]] = None): Long =
     mergeOn(name, source, Seq(onKey), matchedActions, whenNotMatchedInsert,
       notMatchedCondition, notMatchedBySourceDelete, notMatchedInsertValues)
 
   /** MERGE joined on a MULTI-column key (reference MERGE binds an
     * arbitrary ON condition; compound upsert keys are the
-    * test_rewrite_partitioning.test shape). */
+    * test_rewrite_partitioning.test shape). Returns the rows it affected
+    * (updated + deleted + inserted), DuckDB's MERGE `Count`. */
   def mergeOn(name: String, source: DataFrame, onKeys: Seq[String],
       matchedActions: Seq[MatchedAction],
       whenNotMatchedInsert: Boolean,
       notMatchedCondition: Option[Column],
       notMatchedBySourceDelete: Option[Column],
-      notMatchedInsertValues: Option[Seq[(String, Column)]]): Unit = {
+      notMatchedInsertValues: Option[Seq[(String, Column)]]): Long = {
     require(onKeys.nonEmpty, "MERGE needs at least one ON key")
     val snap = meta.currentSnapshot()
     val t = resolve(name, Some(snap.snapshotId))
@@ -3454,7 +3504,7 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
       }
 
     val mrgSpec = effectivePartitionSpec(t, snap.snapshotId)
-    positionsOut match {
+    val n = positionsOut match {
       case Some(pos) =>
         // rewritten (rowid-materialized) and inserted (fresh-id) rows go
         // to SEPARATE files: one carries the materialized columns, the
@@ -3470,16 +3520,18 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
             cols, partition = mrgSpec.map(partitionPlan(_, cols)),
             allCols = mrgAllCols)).getOrElse(Nil)
         deleteByPosition(name, t, snap, pos, updFiles ++ insFiles,
-          newFilesPartitionId = mrgSpec.map(_.partitionId)): Unit
+          newFilesPartitionId = mrgSpec.map(_.partitionId)) +
+          insFiles.map(_.recordCount).sum
       case None =>
         // insert-only MERGE is a plain append: small batches inline
         // below data_inlining_row_limit instead of writing parquet
         // (reference data_inlining_merge_insert_only.test) and
         // sort-on-insert applies
-        inserts.foreach(df => append(name, df.select(
-          cols.map(c => col(c.name)): _*)): Unit)
+        inserts.map(df => insert(name, df.select(
+          cols.map(c => col(c.name)): _*))).getOrElse(0L)
     }
     maybeAutoRefresh(name)
+    n
   }
 
   // ------------------------------------------------------------------- CDC
@@ -5117,6 +5169,7 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
 }
 
 object Lake {
+  private val aliasSeq = new java.util.concurrent.atomic.AtomicLong()
 
   /** Test-only fault injection: when set, invoked after an append's data
     * files are staged on disk but BEFORE the catalog commit registers

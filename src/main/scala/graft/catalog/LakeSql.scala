@@ -3,29 +3,24 @@ package graft.catalog
 import java.util.Locale
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
-/** SQL statement front-end for [[Lake.sql]]. The reference drives every
-  * table operation through SQL (INSERT/UPDATE/DELETE/MERGE INTO, CREATE /
-  * ALTER / DROP TABLE — reference test/sql corpus), so the Spark engine
-  * accepts the same statement shapes and routes them to the Lake API;
-  * anything unrecognized is treated as a query and delegated to Spark SQL
-  * (views of the current snapshot pre-registered). Scalar expressions use
-  * Spark SQL syntax — the "spark" dialect of the stored-view/macro model.
-  *
-  * DML results follow DuckDB's convention of returning an affected-row
-  * "Count" column.
+/** The DuckDB-only statements of [[Lake.sql]] — the spellings Spark's
+  * parser cannot take: DuckDB-typed CREATE TABLE and ALTER, SECRET,
+  * MACRO, SET/RESET SORTED BY and PARTITIONED BY, COMMENT ON,
+  * BEGIN/COMMIT/ROLLBACK, CHECKPOINT, DESCRIBE/SHOW, and DuckDB-style
+  * `CALL` argument text bound to [[graft.sources.GraftProcedures]].
+  * INSERT/DELETE/UPDATE/MERGE run through `spark.sql`'s commands and
+  * plain queries through Spark SQL over temp views (both in
+  * [[Lake.sql]]). Scalar expressions use Spark SQL syntax — the "spark"
+  * dialect of the stored-view/macro model. Results follow DuckDB's
+  * convention of an affected-row "Count" column.
   */
 private[catalog] object LakeSql {
 
-  private val Insert =
-    """(?is)^INSERT\s+INTO\s+([\w$.]+)\s*(?:\(([^)]*)\)\s*)?((?:SELECT|WITH|VALUES|TABLE)\b.*)$""".r
-  private val Delete =
-    """(?is)^DELETE\s+FROM\s+([\w$.]+)(?:\s+WHERE\s+(.+))?$""".r
-  private val Update =
-    """(?is)^UPDATE\s+([\w$.]+)\s+SET\s+(.+?)(?:\s+WHERE\s+(.+))?$""".r
   private val Ctas =
     """(?is)^CREATE\s+(OR\s+REPLACE\s+)?TABLE\s+([\w$.]+)\s+AS\s+(.+)$""".r
   private val CreateTable =
@@ -81,8 +76,6 @@ private[catalog] object LakeSql {
   private val Commit = """(?is)^COMMIT\s*$""".r
   private val Rollback = """(?is)^(?:ROLLBACK|ABORT)\s*$""".r
   private val Checkpoint = """(?is)^(?:FORCE\s+)?CHECKPOINT\s*$""".r
-  private val Merge =
-    """(?is)^MERGE\s+INTO\s+([\w$]+)(?:\s+(?:AS\s+)?(\w+))?\s+USING\s+(.+?)\s+ON\s+(.+?)\s+(WHEN\s+.+)$""".r
   private val CreateMacro =
     """(?is)^CREATE\s+(OR\s+REPLACE\s+)?MACRO\s+([\w$.]+)\s*(\(.+)$""".r
   private val Describe =
@@ -94,7 +87,15 @@ private[catalog] object LakeSql {
   private val DropMacro =
     """(?is)^DROP\s+MACRO\s+(TABLE\s+)?(IF\s+EXISTS\s+)?([\w$.]+)\s*$""".r
 
-  /** Try to handle `stmt` as a DML/DDL statement; None → plain query. */
+  private val BareInsert = """(?is)\bTHEN\s+INSERT(?=\s*(?:$|WHEN\b))""".r
+
+  /** DuckDB's bare MERGE `THEN INSERT` (every column) in Spark's
+    * spelling, `THEN INSERT *`, for the statement path Spark parses. */
+  def sparkDml(stmt: String): String =
+    BareInsert.replaceAllIn(stmt, "THEN INSERT *")
+
+  /** Try to handle `stmt` as a DuckDB-only statement; None → DML or a
+    * plain query. */
   def dispatch(lake: Lake, spark: SparkSession, stmt: String,
       runQuery: String => DataFrame): Option[DataFrame] = {
     import spark.implicits._
@@ -122,37 +123,6 @@ private[catalog] object LakeSql {
 
       case DropSecret(name) => Some { Secrets.drop(name); count(1) }
 
-      case Insert(tbl, colList, query) => Some {
-        val df0 = runQuery(query)
-        val names = Option(colList).map(_.split(",").map(_.trim).toSeq)
-        val tableCols = lake.schemaOf(tbl).fieldNames.toSeq
-        val df = names match {
-          case Some(ns) => df0.toDF(ns: _*)
-          case None if df0.columns.length == tableCols.length =>
-            // positional (covers VALUES, whose columns are col1, col2, …)
-            df0.toDF(tableCols: _*)
-          case None => df0
-        }
-        val n = df.count()
-        lake.append(tbl, df)
-        count(n)
-      }
-
-      case Delete(tbl, whereOpt) => Some {
-        count(lake.delete(tbl,
-          Option(whereOpt).map(expr).getOrElse(lit(true))))
-      }
-
-      case Update(tbl, setList, whereOpt) => Some {
-        val assigns = splitTop(setList).map { a =>
-          val i = a.indexOf('=')
-          require(i > 0, s"bad SET assignment: $a")
-          a.substring(0, i).trim -> expr(a.substring(i + 1).trim)
-        }.toMap
-        count(lake.update(tbl, assigns,
-          Option(whereOpt).map(expr).getOrElse(lit(true))))
-      }
-
       case Ctas(orReplace, tbl, query) => Some {
         if (orReplace != null)
           try lake.dropTable(tbl) catch { case _: IllegalArgumentException => }
@@ -176,177 +146,7 @@ private[catalog] object LakeSql {
       // maintenance table functions as CALLs (reference registers them in
       // ducklake_extension.cpp:53-126; CALL ducklake.merge_adjacent_files
       // etc.)
-      case Call(fn, rawArgs) => Some {
-        val args = splitTop(rawArgs).filter(_.nonEmpty).map(stripQuotes)
-        fn.toLowerCase(Locale.ROOT) match {
-          case "merge_adjacent_files" =>
-            // named args (reference merge_adjacent_max_files /
-            // compaction_session_target_file_size): unknown names error
-            // instead of silently applying defaults
-            val raw = splitTop(rawArgs).map(_.trim).filter(_.nonEmpty)
-            val (named0, positional0) = raw.partition(_.matches(
-              "(?is)^[a-z_]+\\s*=>.*"))
-            val named = named0.map { a =>
-              val i = a.indexOf("=>")
-              (a.substring(0, i).trim.toLowerCase(Locale.ROOT),
-                stripQuotes(a.substring(i + 2).trim))
-            }.toMap
-            named.keys.find(k => k != "table_name" &&
-              k != "max_compacted_files" && k != "target_file_size")
-              .foreach(k => throw new IllegalArgumentException(
-                s"unknown named parameter \"$k\" for merge_adjacent_files"))
-            val positional = positional0.map(stripQuotes)
-            val tbl = named.get("table_name")
-              .orElse(positional.headOption)
-              .getOrElse(throw new IllegalArgumentException(
-                "merge_adjacent_files requires a table argument " +
-                "(positional or table_name => '…')"))
-            // positional args after the table slot (none consumed when
-            // the table arrived as table_name => '…')
-            val posRest =
-              if (named.contains("table_name")) positional
-              else positional.drop(1)
-            count(lake.mergeAdjacentFiles(tbl,
-              named.get("target_file_size").map(_.toLong)
-                .orElse(posRest.headOption.map(_.toLong))
-                .getOrElse(512L * 1024 * 1024),
-              named.get("max_compacted_files").map(_.toInt)).toLong)
-          case "rewrite_data_files" =>
-            // named args like the reference: delete_threshold,
-            // max_compacted_files (test_rewrite_max_files.test)
-            val raw2 = splitTop(rawArgs).map(_.trim).filter(_.nonEmpty)
-            val (named2, pos2) = raw2.partition(_.matches(
-              "(?is)^[a-z_]+\\s*=>.*"))
-            val nm = named2.map { a =>
-              val i = a.indexOf("=>")
-              (a.substring(0, i).trim.toLowerCase(Locale.ROOT),
-                stripQuotes(a.substring(i + 2).trim))
-            }.toMap
-            nm.keys.find(k => k != "table_name" && k != "delete_threshold"
-              && k != "max_compacted_files")
-              .foreach(k => throw new IllegalArgumentException(
-                s"unknown named parameter \"$k\" for rewrite_data_files"))
-            val tbl2 = nm.get("table_name")
-              .orElse(pos2.headOption.map(stripQuotes))
-              .getOrElse(throw new IllegalArgumentException(
-                "rewrite_data_files requires a table argument"))
-            count(lake.rewriteDataFiles(tbl2,
-              nm.get("delete_threshold").map(_.toDouble)
-                .orElse(pos2.lift(1).map(p => stripQuotes(p).toDouble))
-                .getOrElse(0.95),
-              nm.get("max_compacted_files").map(_.toInt)).toLong)
-          case "expire_snapshots" =>
-            count(lake.expireSnapshots(
-              args.headOption.map(_.toLong)).size.toLong)
-          case "cleanup_old_files" =>
-            count(lake.cleanupOldFiles(
-              args.headOption.map(_.toLong)).size.toLong)
-          case "delete_orphaned_files" =>
-            count(lake.deleteOrphanedFiles(args(0)).size.toLong)
-          // bare CALL flush_inlined_data() sweeps every table (reference
-          // ducklake_flush_inlined_data('catalog')); table_name => '…'
-          // names one (data_inlining_flush.test)
-          case "flush_inlined_data" | "flush_inlined_deletes" =>
-            val f: String => Long =
-              if (fn.equalsIgnoreCase("flush_inlined_data"))
-                lake.flushInlinedData
-              else lake.flushInlinedDeletes
-            def namedArg(k: String): Option[String] =
-              splitTop(rawArgs).map(_.trim)
-                .find(_.matches(s"(?is)^$k\\s*=>.*"))
-                .map(a => stripQuotes(
-                  a.replaceFirst(s"(?is)^$k\\s*=>", "").trim))
-            def sweep(schemas: Seq[String]): Long = {
-              val sid = lake.currentSnapshotId()
-              schemas.flatMap { sc =>
-                lake.meta.listTables(sid, sc).map { t =>
-                  f(if (sc == "main") t.name else s"$sc.${t.name}")
-                }
-              }.sum
-            }
-            namedArg("table_name").orElse(args.headOption) match {
-              case Some(tbl) => count(f(tbl))
-              case None => namedArg("schema_name") match {
-                // flush one schema's tables (data_inlining_flush_schema)
-                case Some(sc) => count(sweep(Seq(sc)))
-                case None =>
-                  count(sweep(lake.meta.listSchemas().map(_.name)))
-              }
-            }
-          case "checkpoint" => lake.checkpoint(args(0)); count(0L)
-          case "set_option" =>
-            lake.setOption(args(0), args(1), args.lift(2)); count(0L)
-          case "set_commit_message" =>
-            // CALL set_commit_message(author, message [, extra_info=>'…'])
-            // (reference ducklake_set_commit_message.cpp; audit tests).
-            // Unquoted NULL → SQL NULL; '' escapes inside quoted strings.
-            def nv(s: String): String =
-              if (s == null || s.equalsIgnoreCase("NULL")) null
-              else s.replace("''", "'")
-            val extra = splitTop(rawArgs).map(_.trim)
-              .find(_.matches("(?is)^extra_info\\s*=>.*"))
-              .map(a => nv(stripQuotes(
-                a.replaceFirst("(?is)^extra_info\\s*=>", "").trim)))
-            lake.setCommitMessage(nv(args(0)), nv(args(1)), extra)
-            count(0L)
-          case "add_data_files" =>
-            // CALL add_data_files(tbl, 'file' | ['f1','f2'] | 'glob/**',
-            //   allow_missing => true, ignore_extra_columns => true,
-            //   hive_partitioning => false) — reference
-            // ducklake_add_data_files.cpp:69-84 named parameters
-            val raw = splitTop(rawArgs).map(_.trim).filter(_.nonEmpty)
-            val (named0, positional) = raw.partition(_.matches(
-              "(?is)^[a-z_]+\\s*=>.*"))
-            val named = named0.map { a =>
-              val i = a.indexOf("=>")
-              (a.substring(0, i).trim.toLowerCase(Locale.ROOT),
-                stripQuotes(a.substring(i + 2).trim))
-            }.toMap
-            named.keys.find(k => k != "allow_missing" &&
-              k != "ignore_extra_columns" && k != "hive_partitioning")
-              .foreach(k => throw new IllegalArgumentException(
-                s"unknown named parameter \"$k\" for add_data_files"))
-            def flag(k: String, dflt: Boolean): Boolean =
-              named.get(k).map(_.equalsIgnoreCase("true")).getOrElse(dflt)
-            // file list: bare strings or a ['a','b'] list literal
-            val files = positional.drop(1).flatMap { a =>
-              if (a.startsWith("[") && a.endsWith("]"))
-                a.substring(1, a.length - 1).split(',').toSeq
-                  .map(_.trim).filter(_.nonEmpty).map(stripQuotes)
-              else Seq(stripQuotes(a))
-            }
-            lake.addDataFiles(stripQuotes(positional.head), files,
-              allowMissing = flag("allow_missing", dflt = false),
-              ignoreExtraColumns =
-                flag("ignore_extra_columns", dflt = false),
-              hivePartitions = flag("hive_partitioning", dflt = true))
-            count(0L)
-          // CALL enable_logging(['DuckLakeMetadata']) — reference
-          // ducklake_metadata_logging.test; the optional logger-name arg
-          // is accepted and ignored (there is only the metadata logger)
-          // managed incremental materialized views (beyond the reference;
-          // graft.operators.IncrementalView):
-          //   CALL create_mv('mv', 'base', 'g1,g2', 'name:expr;name2:e2')
-          //   CALL refresh_mv('mv')   — definition + version checkpoint
-          //                             live as table-scoped options
-          case "create_mv" =>
-            val sums = args(3).split(";").toSeq.filter(_.nonEmpty).map { s =>
-              val i = s.indexOf(':')
-              (s.substring(0, i).trim, s.substring(i + 1).trim)
-            }
-            count(graft.operators.IncrementalView.createManaged(
-              lake, args(0), args(1),
-              args(2).split(",").toSeq.map(_.trim), sums))
-          case "refresh_mv" =>
-            count(graft.operators.IncrementalView.refreshManaged(
-              lake, args(0)))
-          case "enable_logging" => lake.enableMetadataLogging(); count(0L)
-          case "disable_logging" =>
-            lake.disableMetadataLogging(); count(0L)
-          case other => throw new IllegalArgumentException(
-            s"unknown function: $other")
-        }
-      }
+      case Call(fn, rawArgs) => Some(count(call(lake, fn, rawArgs)))
 
       // CREATE [OR REPLACE] MACRO name (a, b := 5) AS body
       //   [, (a) AS body, …]            — arity overloads
@@ -554,130 +354,67 @@ private[catalog] object LakeSql {
         count(0L)
       }
 
-      case Merge(tbl, tgtAliasOpt, usingPart, onPart, whenPart) => Some {
-        val (source, srcAlias) = parseUsing(usingPart, runQuery)
-        val onKeys = parseOnKeys(onPart)
-        // remap the statement's aliases onto the merge API's fixed t/s
-        def remap(e: String): String = {
-          var out = e
-          Option(tgtAliasOpt).foreach(a =>
-            out = out.replaceAll(s"(?i)\\b$a\\.", "t."))
-          srcAlias.foreach(a => out = out.replaceAll(s"(?i)\\b$a\\.", "s."))
-          out.replaceAll(s"(?i)\\b$tbl\\.", "t.")
-        }
-        // split the action list on top-level WHEN keywords FIRST, then
-        // match each clause with an anchored regex — a lazy `(.+?)` in a
-        // whole-statement regex can otherwise swallow the next clause
-        // (e.g. `WHEN MATCHED AND c THEN UPDATE … WHEN NOT MATCHED BY
-        // SOURCE THEN DELETE` mis-read as one conditional DELETE)
-        val UpdateRe =
-          """(?is)\AMATCHED\s+(?:AND\s+(.+?)\s+)?THEN\s+UPDATE\s+SET\s+(.+?)\s*\z""".r
-        val DeleteRe =
-          """(?is)\AMATCHED\s+(?:AND\s+(.+?)\s+)?THEN\s+DELETE\s*\z""".r
-        val BySourceRe =
-          """(?is)\ANOT\s+MATCHED\s+BY\s+SOURCE\s+(?:AND\s+(.+?)\s+)?THEN\s+DELETE\s*\z""".r
-        val InsertRe =
-          """(?is)\ANOT\s+MATCHED\s+(?:BY\s+TARGET\s+)?(?:AND\s+(.+?)\s+)?THEN\s+INSERT\s*(.*?)\s*\z""".r
-        // WHEN MATCHED clauses collect as an ORDERED list — the binder
-        // accepts any number (reference ducklake_merge_into.cpp action
-        // list); per row the first passing clause acts (mergeMatched)
-        val matchedActions =
-          scala.collection.mutable.ArrayBuffer.empty[MatchedAction]
-        var doInsert = false
-        var insertCond: Option[Column] = None
-        var insertValues: Option[Seq[(String, Column)]] = None
-        var bySourceDelete: Option[Column] = None
-        splitWhenClauses(whenPart).foreach {
-          case UpdateRe(cond, setPart) =>
-            matchedActions += MatchedUpdate(
-              splitTop(setPart).map { a =>
-                val i = a.indexOf('=')
-                a.substring(0, i).trim.split("\\.").last ->
-                  expr(remap(a.substring(i + 1).trim))
-              }.toMap,
-              Option(cond).map(c => expr(remap(c))))
-          case DeleteRe(cond) =>
-            matchedActions += MatchedDelete(
-              Option(cond).map(c => expr(remap(c))))
-          case BySourceRe(cond) =>
-            bySourceDelete = Some(Option(cond).map(c => expr(remap(c)))
-              .getOrElse(org.apache.spark.sql.functions.lit(true)))
-          case InsertRe(cond, rest) =>
-            doInsert = true
-            insertCond = Option(cond).map(c => expr(remap(c)))
-            val r = rest.trim
-            // INSERT | INSERT * → full-row star; INSERT (a, b) VALUES
-            // (x, y) → per-column values, missing columns read defaults
-            // (reference ducklake_merge_into.cpp:489-634 column binding)
-            if (r.nonEmpty && r != "*") {
-              require(r.startsWith("("),
-                s"unsupported MERGE INSERT form: INSERT $r")
-              val close = matchingParen(r)
-              val names = splitTop(r.substring(1, close))
-                .map(_.split("\\.").last.trim)
-              val after = r.substring(close + 1).trim
-              require(after.toUpperCase(Locale.ROOT).startsWith("VALUES"),
-                s"expected VALUES after MERGE INSERT column list: $r")
-              val vpart = after.substring("VALUES".length).trim
-              require(vpart.startsWith("(") &&
-                matchingParen(vpart) == vpart.length - 1,
-                s"malformed MERGE INSERT VALUES: $r")
-              val vals = splitTop(vpart.substring(1, vpart.length - 1))
-                .map(v => expr(remap(v)))
-              require(names.length == vals.length,
-                s"MERGE INSERT has ${names.length} columns but " +
-                  s"${vals.length} values")
-              insertValues = Some(names.zip(vals))
-            }
-          case other => throw new IllegalArgumentException(
-            s"unsupported MERGE clause: WHEN $other")
-        }
-        require(matchedActions.nonEmpty ||
-          doInsert || bySourceDelete.isDefined,
-          s"unsupported MERGE actions: $whenPart")
-        lake.mergeOn(tbl, source, onKeys,
-          matchedActions = matchedActions.toSeq,
-          whenNotMatchedInsert = doInsert,
-          notMatchedCondition = insertCond,
-          notMatchedBySourceDelete = bySourceDelete,
-          notMatchedInsertValues = insertValues)
-        count(source.count())
-      }
-
       case _ => None
     }
   }
 
-  /** USING (subquery) [AS] alias | USING table [alias] */
-  private def parseUsing(usingPart: String,
-      runQuery: String => DataFrame): (DataFrame, Option[String]) = {
-    val u = usingPart.trim
-    if (u.startsWith("(")) {
-      val close = matchingParen(u)
-      val sub = u.substring(1, close)
-      val alias = u.substring(close + 1).trim
-        .replaceAll("(?i)^AS\\s+", "").trim
-      (runQuery(sub), if (alias.isEmpty) None else Some(alias))
-    } else {
-      val parts = u.split("\\s+")
-      val alias = parts.drop(1).filterNot(_.equalsIgnoreCase("AS")).headOption
-      (runQuery(s"SELECT * FROM ${parts(0)}"), alias)
+  /** `CALL fn(args)`: DuckDB-style argument text — positional or
+    * `name => value`; quoted strings with `''` escapes, NULL, `['a','b']`
+    * lists — bound to the procedure's declared parameters by name and
+    * type. Unknown names and missing required arguments are errors. */
+  private def call(lake: Lake, fn: String, rawArgs: String): Long = {
+    val spec = graft.sources.GraftProcedures.spec(fn).getOrElse(
+      throw new IllegalArgumentException(s"unknown function: $fn"))
+    val Named = """(?is)([a-z_]+)\s*=>\s*(.*)""".r
+    val (namedArgs, positional) = splitTop(rawArgs).filter(_.nonEmpty)
+      .partitionMap {
+        case Named(k, v) => Left(k.toLowerCase(Locale.ROOT) -> v)
+        case v => Right(v)
+      }
+    val named = namedArgs.toMap
+    val paramNames = spec.params.map(_._1)
+    named.keys.find(!paramNames.contains(_)).foreach(k =>
+      throw new IllegalArgumentException(
+        s"unknown named parameter \"$k\" for ${spec.name}"))
+    require(positional.size <= paramNames.size,
+      s"${spec.name} takes at most ${paramNames.size} arguments")
+    paramNames.take(positional.size).find(named.contains).foreach(k =>
+      throw new IllegalArgumentException(
+        s"parameter \"$k\" of ${spec.name} given twice"))
+    val values = spec.params.zipWithIndex.map { case ((p, dt, dflt), i) =>
+      val text = named.get(p).orElse(positional.lift(i)).orElse(dflt)
+        .getOrElse(throw new IllegalArgumentException(
+          s"${spec.name} requires a ${p.stripSuffix("_name")} argument " +
+            s"(positional or $p => …)"))
+      literal(text, dt)
     }
+    spec.run(lake, InternalRow.fromSeq(values))
   }
 
-  /** AND-ed `a.k = b.k` equalities (same column name both sides) or bare
-    * `k` → key list. Compound upsert keys are the reference's
-    * test_rewrite_partitioning.test MERGE shape. */
-  private def parseOnKeys(onPart: String): Seq[String] = {
-    val Eq = """(?is)^\s*(?:[\w$]+\.)?([\w$]+)\s*=\s*(?:[\w$]+\.)?([\w$]+)\s*$""".r
-    onPart.trim.stripPrefix("(").stripSuffix(")")
-      .split("(?i)\\s+AND\\s+").toSeq.map(_.trim).map {
-        case Eq(a, b) if a.equalsIgnoreCase(b) => a
-        case bare if bare.matches("[\\w$]+") => bare
-        case other => throw new IllegalArgumentException(
-          "MERGE ON must be AND-ed equalities on shared key columns, " +
-            s"got: $other")
-      }
+  /** One DuckDB-style argument as a Catalyst value of the declared type;
+    * a single string binds to a list parameter as a one-element list. */
+  private def literal(text: String, dt: DataType): Any = {
+    val t = text.trim
+    def unquoted(v: String): String =
+      if (v.length >= 2 && v.head == '\'' && v.last == '\'')
+        v.substring(1, v.length - 1).replace("''", "'")
+      else v
+    if (t.equalsIgnoreCase("NULL")) null
+    else dt match {
+      case ArrayType(StringType, _) =>
+        val items =
+          if (t.startsWith("[") && t.endsWith("]"))
+            splitTop(t.substring(1, t.length - 1)).filter(_.nonEmpty)
+          else Seq(t)
+        new GenericArrayData(
+          items.map(v => UTF8String.fromString(unquoted(v.trim))))
+      case StringType => UTF8String.fromString(unquoted(t))
+      case LongType => unquoted(t).toLong
+      case DoubleType => unquoted(t).toDouble
+      case BooleanType => unquoted(t).toBoolean
+      case other => throw new IllegalArgumentException(
+        s"unsupported procedure parameter type $other")
+    }
   }
 
   /** `name TYPE [NOT NULL] [DEFAULT v]` → (field, default) */
@@ -871,41 +608,6 @@ private[catalog] object LakeSql {
     * ignoring commas/parens inside single-quoted strings ('' escapes a
     * quote); angle brackets tracked too when splitting type definitions —
     * never in expressions, where < and > are comparison operators */
-  /** Split a MERGE action list (starting with `WHEN …`) into clause
-    * bodies, one per top-level WHEN keyword (outside parens/quotes); the
-    * leading WHEN of each clause is dropped. */
-  private[catalog] def splitWhenClauses(s: String): Seq[String] = {
-    val starts = scala.collection.mutable.ArrayBuffer.empty[Int]
-    var depth = 0
-    var inQuote = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inQuote) { if (c == '\'') inQuote = false }
-      else c match {
-        case '\'' => inQuote = true
-        case '(' | '[' => depth += 1
-        case ')' | ']' => depth -= 1
-        case 'W' | 'w' if depth == 0 &&
-            (i == 0 || !Character.isLetterOrDigit(s.charAt(i - 1)) &&
-              s.charAt(i - 1) != '_') &&
-            i + 4 <= s.length &&
-            s.substring(i, i + 4).equalsIgnoreCase("WHEN") &&
-            (i + 4 == s.length || !Character.isLetterOrDigit(s.charAt(i + 4)) &&
-              s.charAt(i + 4) != '_') =>
-          starts += i
-        case _ => ()
-      }
-      i += 1
-    }
-    require(starts.nonEmpty && starts.head == 0,
-      s"MERGE actions must start with WHEN: $s")
-    starts.zipAll(starts.drop(1).map(Some(_)), -1, None).map {
-      case (from, to) =>
-        s.substring(from + 4, to.getOrElse(s.length)).trim
-    }.toSeq
-  }
-
   private[catalog] def splitTop(s: String,
       angle: Boolean = false): Seq[String] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[String]

@@ -1,16 +1,18 @@
 package graft.plans
 
-import graft.catalog.Lake
-import org.apache.spark.sql.SparkSession
+import graft.catalog.{Lake, MatchedDelete, MatchedUpdate}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
 import org.apache.spark.sql.catalyst.expressions.{
-  Alias, And, Attribute, AttributeReference, Expression, NamedExpression,
-  PredicateHelper}
+  Alias, And, Attribute, AttributeReference, EqualTo, Expression,
+  MetadataAttribute, NamedExpression, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.logical.{
-  Filter, LeafNode, LogicalPlan, Project, SubqueryAlias}
+  ExposesMetadataColumns, Filter, LeafNode, LogicalPlan, Project,
+  SubqueryAlias}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.graftshim.ColumnBridge
+import org.apache.spark.sql.types.{LongType, StringType}
 
 /** SQL-transparent lake access via Catalyst (SURVEY.md §4's "cleaner
   * long-term home"): `graft.<table>` resolves to a placeholder leaf during
@@ -34,6 +36,62 @@ object LakeRegistry {
   def register(alias: String, lake: Lake): Unit = lakes.put(alias, lake)
   def unregister(alias: String): Unit = lakes.remove(alias)
   def get(alias: String): Option[Lake] = Option(lakes.get(alias))
+  /** an alias `lake` is registered under, if any */
+  def aliasOf(lake: Lake): Option[String] = {
+    import scala.jdk.CollectionConverters._
+    lakes.asScala.collectFirst { case (a, l) if l eq lake => a }
+  }
+}
+
+/** Bare lake relation names → registry-qualified ones; the one helper
+  * behind view expansion and `Lake.sql`'s statement path. */
+private[graft] object LakeNames {
+  /** `plan` with every relation name that denotes a table or view of
+    * `lake` qualified by `alias`. Bare `t` (schema main) and `s.t` (`s`
+    * not itself a registered alias) resolve against the names this
+    * handle sees: committed, overlaid with the open transaction's
+    * creates, drops and renames. A view goes through `expandView` when
+    * that returns a plan (view expansion threads its cycle stack this
+    * way), which also sees views already qualified by `alias`. */
+  def qualify(plan: LogicalPlan, alias: String, lake: Lake)(
+      expandView: (String, String) => Option[LogicalPlan] = (_, _) => None)
+      : LogicalPlan = {
+    val tables = scala.collection.mutable.Map.empty[String, Seq[String]]
+    val views = scala.collection.mutable.Map
+      .empty[String, Map[String, (String, String)]]
+    def qualified(s: String, t: String): Seq[String] =
+      if (s == "main") Seq(alias, t) else Seq(alias, s, t)
+    def resolve(ur: UnresolvedRelation, s: String, t: String,
+        bare: Boolean): LogicalPlan =
+      views.getOrElseUpdate(s, lake.visibleViews(s)).get(t.toLowerCase)
+        .map(_._1) match {
+        case Some(v) => expandView(s, v).getOrElse(
+          if (bare) ur.copy(multipartIdentifier = qualified(s, v)) else ur)
+        case None if bare =>
+          tables.getOrElseUpdate(s, lake.visibleTableNames(s))
+            .find(_.equalsIgnoreCase(t))
+            .map(n => ur.copy(multipartIdentifier = qualified(s, n)))
+            .getOrElse(ur)
+        case None => ur
+      }
+    def relation(p: LogicalPlan): LogicalPlan = p match {
+      case ur: UnresolvedRelation => ur.multipartIdentifier match {
+        case Seq(t) => resolve(ur, "main", t, bare = true)
+        case Seq(s, t) if LakeRegistry.get(s).isEmpty =>
+          resolve(ur, s, t, bare = true)
+        case Seq(a, t) if a == alias => resolve(ur, "main", t, bare = false)
+        case Seq(a, s, t) if a == alias => resolve(ur, s, t, bare = false)
+        case _ => ur
+      }
+      case other => other
+    }
+    plan.transformDownWithSubqueries {
+      // an INSERT's target is a field, not a child
+      case i: org.apache.spark.sql.catalyst.plans.logical.InsertIntoStatement =>
+        i.copy(table = relation(i.table))
+      case ur: UnresolvedRelation => relation(ur)
+    }
+  }
 }
 
 /** Resolved stand-in for a lake table: carries stable attribute ids
@@ -42,7 +100,19 @@ object LakeRegistry {
   * (`VERSION AS OF` / `TIMESTAMP AS OF`). */
 case class LakeRelationPlaceholder(alias: String, table: String,
     output: Seq[Attribute], version: Option[Long] = None,
-    tsMs: Option[Long] = None) extends LeafNode {
+    tsMs: Option[Long] = None) extends LeafNode with ExposesMetadataColumns {
+  /** The scan's virtual columns (reference ducklake_table_entry.cpp:
+    * 398-411) as hidden metadata columns of the current snapshot: `WHERE
+    * rowid = 3` resolves in a DML condition or a query without widening
+    * `SELECT *`. A real column of the same name wins. */
+  override lazy val metadataOutput: Seq[AttributeReference] =
+    if (version.isDefined || tsMs.isDefined) Nil
+    else LakeRelationPlaceholder.VirtualColumns
+      .filterNot { case (n, _) => output.exists(_.name.equalsIgnoreCase(n)) }
+      .map { case (n, dt) => MetadataAttribute(n, dt, nullable = true) }
+  override def withMetadataColumns(): LogicalPlan =
+    copy(output = output ++ metadataOutput)
+
   /** Catalog-backed estimates (reference answers scan cardinality from
     * `ducklake_table_stats`, ducklake_multi_file_list.cpp:136-142): lets
     * every optimizer rule that fires BEFORE [[ExpandLakeScan]] — join
@@ -75,32 +145,29 @@ case class LakeRelationPlaceholder(alias: String, table: String,
       org.apache.spark.sql.catalyst.plans.logical.Statistics = catalogStats
 }
 
+object LakeRelationPlaceholder {
+  val VirtualColumns = Seq("rowid" -> LongType, "snapshot_id" -> LongType,
+    "filename" -> StringType, "file_row_number" -> LongType,
+    "file_index" -> LongType)
+}
+
 /** `spark.sql("INSERT INTO graft.t …")` → a lake append at execution
-  * time. Append-only (INSERT OVERWRITE and static partition specs go
-  * through `lake.sql` / the DataFrame API); the query child resolves
-  * normally first, so column types are checked by the lake's own
-  * appendAligned path. */
+  * time; `columns` names the query's output by position. Append-only
+  * (INSERT OVERWRITE and static partition specs stay on the DSv2
+  * catalog's write path); the query resolves normally first, and column
+  * types are cast by the lake's own append. */
 case class LakeInsertCommand(alias: String, table: String,
-    query: LogicalPlan, userCols: Seq[String] = Nil)
+    query: LogicalPlan, columns: Seq[String])
     extends org.apache.spark.sql.execution.command.LeafRunnableCommand {
+  override val output: Seq[Attribute] = LakeDml.countOutput
   override def innerChildren: Seq[LogicalPlan] = Seq(query)
-  override def run(session: SparkSession)
-      : Seq[org.apache.spark.sql.Row] = {
-    val lake = LakeRegistry.get(alias).getOrElse(
-      throw new IllegalStateException(s"lake alias $alias unregistered"))
+  override def run(session: SparkSession): Seq[Row] = {
     val df = org.apache.spark.sql.graftshim.DatasetBridge
       .ofRows(session, query)
-    // SQL INSERT matches by POSITION (to the explicit column list when
-    // given, else the full table schema) — the query's own output names
-    // (VALUES' col1/col2…) never reach the files
-    val names =
-      if (userCols.nonEmpty) userCols
-      else lake.schemaOf(table).fieldNames.toSeq
-    require(df.columns.length == names.length,
+    require(df.columns.length == columns.length,
       s"INSERT provides ${df.columns.length} columns, expected " +
-        s"${names.length} (${names.mkString(", ")})")
-    lake.append(table, df.toDF(names: _*))
-    Nil
+        s"${columns.length} (${columns.mkString(", ")})")
+    Seq(Row(LakeDml.lake(alias).insert(table, df.toDF(columns: _*))))
   }
 }
 
@@ -110,11 +177,8 @@ case class LakeInsertCommand(alias: String, table: String,
 case class LakeCreateViewCommand(alias: String, name: String,
     viewSql: String, orReplace: Boolean)
     extends org.apache.spark.sql.execution.command.LeafRunnableCommand {
-  override def run(session: SparkSession)
-      : Seq[org.apache.spark.sql.Row] = {
-    val lake = LakeRegistry.get(alias).getOrElse(
-      throw new IllegalStateException(s"lake alias $alias unregistered"))
-    lake.createView(name, viewSql, orReplace = orReplace)
+  override def run(session: SparkSession): Seq[Row] = {
+    LakeDml.lake(alias).createView(name, viewSql, orReplace = orReplace)
     Nil
   }
 }
@@ -123,11 +187,8 @@ case class LakeCreateViewCommand(alias: String, name: String,
 case class LakeRenameViewCommand(alias: String, name: String,
     newName: String)
     extends org.apache.spark.sql.execution.command.LeafRunnableCommand {
-  override def run(session: SparkSession)
-      : Seq[org.apache.spark.sql.Row] = {
-    val lake = LakeRegistry.get(alias).getOrElse(
-      throw new IllegalStateException(s"lake alias $alias unregistered"))
-    lake.renameView(name, newName)
+  override def run(session: SparkSession): Seq[Row] = {
+    LakeDml.lake(alias).renameView(name, newName)
     Nil
   }
 }
@@ -136,16 +197,20 @@ case class LakeRenameViewCommand(alias: String, name: String,
 case class LakeDropViewCommand(alias: String, name: String,
     ifExists: Boolean)
     extends org.apache.spark.sql.execution.command.LeafRunnableCommand {
-  override def run(session: SparkSession)
-      : Seq[org.apache.spark.sql.Row] = {
-    val lake = LakeRegistry.get(alias).getOrElse(
-      throw new IllegalStateException(s"lake alias $alias unregistered"))
-    lake.dropView(name, ifExists = ifExists)
+  override def run(session: SparkSession): Seq[Row] = {
+    LakeDml.lake(alias).dropView(name, ifExists = ifExists)
     Nil
   }
 }
 
 object LakeDml {
+  /** DuckDB's DML result: one row, the affected-row `Count` */
+  def countOutput: Seq[Attribute] =
+    Seq(AttributeReference("Count", LongType, nullable = false)())
+
+  def lake(alias: String): Lake = LakeRegistry.get(alias).getOrElse(
+    throw new IllegalStateException(s"lake alias $alias unregistered"))
+
   /** re-anchor a resolved condition/value on column NAMES so it resolves
     * against the Lake API's own scan DataFrame */
   def toColumn(e: Expression): org.apache.spark.sql.Column =
@@ -157,13 +222,9 @@ object LakeDml {
 /** `spark.sql("DELETE FROM graft.t WHERE …")` → lake positional delete. */
 case class LakeDeleteCommand(alias: String, table: String, cond: Expression)
     extends org.apache.spark.sql.execution.command.LeafRunnableCommand {
-  override def run(session: SparkSession)
-      : Seq[org.apache.spark.sql.Row] = {
-    val lake = LakeRegistry.get(alias).getOrElse(
-      throw new IllegalStateException(s"lake alias $alias unregistered"))
-    lake.delete(table, LakeDml.toColumn(cond))
-    Nil
-  }
+  override val output: Seq[Attribute] = LakeDml.countOutput
+  override def run(session: SparkSession): Seq[Row] =
+    Seq(Row(LakeDml.lake(alias).delete(table, LakeDml.toColumn(cond))))
 }
 
 /** `spark.sql("UPDATE graft.t SET … WHERE …")` → lake copy-on-write
@@ -171,60 +232,55 @@ case class LakeDeleteCommand(alias: String, table: String, cond: Expression)
 case class LakeUpdateCommand(alias: String, table: String,
     assignments: Seq[(String, Expression)], cond: Option[Expression])
     extends org.apache.spark.sql.execution.command.LeafRunnableCommand {
-  override def run(session: SparkSession)
-      : Seq[org.apache.spark.sql.Row] = {
-    val lake = LakeRegistry.get(alias).getOrElse(
-      throw new IllegalStateException(s"lake alias $alias unregistered"))
-    lake.update(table,
+  override val output: Seq[Attribute] = LakeDml.countOutput
+  override def run(session: SparkSession): Seq[Row] =
+    Seq(Row(LakeDml.lake(alias).update(table,
       assignments.map { case (n, v) => n -> LakeDml.toColumn(v) }.toMap,
       cond.map(LakeDml.toColumn).getOrElse(
-        org.apache.spark.sql.functions.lit(true)))
-    Nil
-  }
+        org.apache.spark.sql.functions.lit(true)))))
 }
 
 /** `spark.sql("MERGE INTO graft.t t USING src s ON t.k = s.k …")` →
-  * [[graft.catalog.Lake.merge]]. Values re-anchor on `t.`/`s.`-qualified
-  * names (the aliases Lake.merge itself uses for the join). */
+  * [[graft.catalog.Lake.mergeOn]]. `matched` is the ordered WHEN MATCHED
+  * list: (condition, Some(assignments) for UPDATE / None for DELETE).
+  * Expressions re-anchor on `t.`/`s.`-qualified names (the aliases
+  * mergeOn itself uses for the join). */
 case class LakeMergeCommand(alias: String, table: String,
-    source: LogicalPlan, sourceOutput: Seq[Attribute], onKey: String,
-    update: Option[Seq[(String, Expression)]], delete: Boolean,
+    source: LogicalPlan, onKeys: Seq[String],
+    matched: Seq[(Option[Expression], Option[Seq[(String, Expression)]])],
     insert: Boolean,
-    matchedCond: Option[Expression] = None,
     notMatchedCond: Option[Expression] = None,
     bySourceDeleteCond: Option[Expression] = None,
     insertValues: Option[Seq[(String, Expression)]] = None)
     extends org.apache.spark.sql.execution.command.LeafRunnableCommand {
+  override val output: Seq[Attribute] = LakeDml.countOutput
   override def innerChildren: Seq[LogicalPlan] = Seq(source)
 
   private def sideQualified(e: Expression): org.apache.spark.sql.Column = {
-    val srcIds = sourceOutput.map(_.exprId).toSet
+    val srcIds = source.output.map(_.exprId).toSet
     ColumnBridge.column(e.transform {
       case a: AttributeReference =>
         val side = if (srcIds.contains(a.exprId)) "s" else "t"
         UnresolvedAttribute(Seq(side, a.name))
     })
   }
+  private def values(vs: Seq[(String, Expression)])
+      : Seq[(String, org.apache.spark.sql.Column)] =
+    vs.map { case (n, v) => n -> sideQualified(v) }
 
-  override def run(session: SparkSession)
-      : Seq[org.apache.spark.sql.Row] = {
-    val lake = LakeRegistry.get(alias).getOrElse(
-      throw new IllegalStateException(s"lake alias $alias unregistered"))
+  override def run(session: SparkSession): Seq[Row] = {
     val src = org.apache.spark.sql.graftshim.DatasetBridge
       .ofRows(session, source)
-    lake.merge(table, src, onKey,
-      whenMatchedUpdate = update.map(_.map { case (n, v) =>
-        n -> sideQualified(v)
-      }.toMap),
-      whenMatchedDelete = delete,
+    Seq(Row(LakeDml.lake(alias).mergeOn(table, src, onKeys,
+      matched.map {
+        case (cond, Some(assigns)) =>
+          MatchedUpdate(values(assigns).toMap, cond.map(sideQualified))
+        case (cond, None) => MatchedDelete(cond.map(sideQualified))
+      },
       whenNotMatchedInsert = insert,
-      matchedCondition = matchedCond.map(sideQualified),
       notMatchedCondition = notMatchedCond.map(sideQualified),
       notMatchedBySourceDelete = bySourceDeleteCond.map(sideQualified),
-      notMatchedInsertValues = insertValues.map(_.map { case (n, v) =>
-        n -> sideQualified(v)
-      }))
-    Nil
+      notMatchedInsertValues = insertValues.map(values))))
   }
 }
 
@@ -246,30 +302,32 @@ case class ResolveLakeRelation(spark: SparkSession)
       LakeRelationPlaceholder(alias, table, attrs, version, tsMs))
   }
   private def lakeName(u: UnresolvedRelation): Option[(String, String)] =
-    u.multipartIdentifier match {
-      case Seq(alias, table) if LakeRegistry.get(alias).isDefined =>
-        Some((alias, table))
-      case Seq(alias, schema, table)
-        if LakeRegistry.get(alias).isDefined =>
-        Some((alias, s"$schema.$table"))
-      case _ => None
-    }
+    lakeIdent(u.multipartIdentifier)
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.resolveOperatorsUp {
-      // INSERT INTO graft.t … → lake append command (append-only; the
-      // query child must already be resolved so the append sees types).
-      // The table child has usually already been rewritten to the
-      // placeholder by the relation case below (children resolve first).
+      // INSERT INTO graft.t … → lake append command (append-only). The
+      // target is a field, not a child: it becomes the placeholder as soon
+      // as the statement is seen, so Spark's DSv2 insert resolution never
+      // claims a table of a `graft` catalog; the command waits for the
+      // query to resolve so the append sees its types.
       case i: org.apache.spark.sql.catalyst.plans.logical.InsertIntoStatement
-          if i.query.resolved && i.partitionSpec.isEmpty && !i.overwrite =>
+          if i.partitionSpec.isEmpty && !i.overwrite =>
         i.table match {
-          case SubqueryAlias(_, p: LakeRelationPlaceholder)
-              if p.version.isEmpty && p.tsMs.isEmpty =>
-            LakeInsertCommand(p.alias, p.table, i.query, i.userSpecifiedCols)
           case u: UnresolvedRelation if lakeName(u).isDefined =>
             val (alias, table) = lakeName(u).get
-            LakeInsertCommand(alias, table, i.query, i.userSpecifiedCols)
-          case _ => i
+            i.copy(table = placeholder(alias, table))
+          case t => org.apache.spark.sql.catalyst.analysis
+              .EliminateSubqueryAliases(t) match {
+            case p: LakeRelationPlaceholder if i.query.resolved &&
+                p.version.isEmpty && p.tsMs.isEmpty =>
+              // SQL INSERT matches by POSITION, to the explicit column
+              // list or else the table's columns — the query's own names
+              // (VALUES' col1, col2, …) never reach the files
+              LakeInsertCommand(p.alias, p.table, i.query,
+                if (i.userSpecifiedCols.nonEmpty) i.userSpecifiedCols
+                else p.output.map(_.name))
+            case _ => i
+          }
         }
       // DELETE FROM graft.t WHERE … / UPDATE graft.t SET … WHERE … →
       // lake row-level commands (condition re-anchored by column name)
@@ -297,10 +355,11 @@ case class ResolveLakeRelation(spark: SparkSession)
           LakeUpdateCommand(p.alias, p.table, assigns, u.condition)
         case _ => u
       }
-      // MERGE INTO graft.t USING … — the shapes Lake.merge supports
-      // (same-name key equality; star/simple actions with optional
-      // per-action conditions; not-matched-by-source DELETE); anything
-      // else stays for Spark's own error
+      // MERGE INTO graft.t USING … — the shapes Lake.mergeOn supports
+      // (AND-ed same-name key equalities; an ordered WHEN MATCHED list of
+      // star/simple updates and deletes, each optionally conditioned; a
+      // star or column-list insert; not-matched-by-source DELETE);
+      // anything else stays for Spark's own error
       case m: org.apache.spark.sql.catalyst.plans.logical.MergeIntoTable
           if m.sourceTable.resolved && m.mergeCondition.resolved &&
             !m.withSchemaEvolution =>
@@ -312,40 +371,41 @@ case class ResolveLakeRelation(spark: SparkSession)
               if p.version.isEmpty && p.tsMs.isEmpty => Some(p)
           case _ => None
         }
-        val keyOpt = m.mergeCondition match {
-          case org.apache.spark.sql.catalyst.expressions.EqualTo(
-            a: AttributeReference, b: AttributeReference)
-            if a.name == b.name => Some(a.name)
+        def keys(e: Expression): Option[Seq[String]] = e match {
+          case And(l, r) => for (a <- keys(l); b <- keys(r)) yield a ++ b
+          case EqualTo(a: AttributeReference, b: AttributeReference)
+              if a.name.equalsIgnoreCase(b.name) => Some(Seq(a.name))
           case _ => None
         }
-        (placeholderOpt, keyOpt) match {
-          case (Some(p), Some(key)) =>
-            val lake = LakeRegistry.get(p.alias).get
-            val tableCols = lake.schemaOf(p.table).fieldNames.toSeq
+        (placeholderOpt, keys(m.mergeCondition)) match {
+          case (Some(p), Some(onKeys)) =>
+            val tableCols = LakeDml.lake(p.alias).schemaOf(p.table)
+              .fieldNames.toSeq
             val srcAttrByName =
               m.sourceTable.output.map(a => a.name -> a).toMap
-            // matched: one star/simple update, or one delete, or none —
-            // each optionally gated by a resolved AND-condition
-            val matchedOk: Option[(Option[Seq[(String, Expression)]],
-                Boolean, Option[Expression])] = m.matchedActions match {
-              case Nil => Some((None, false, None))
-              case Seq(us: UpdateStarAction) if tableCols.forall(
-                srcAttrByName.contains) && us.condition.forall(_.resolved) =>
-                Some((Some(tableCols.map(c =>
-                  c -> (srcAttrByName(c): Expression))), false, us.condition))
-              case Seq(UpdateAction(cond, assigns, _))
-                  if cond.forall(_.resolved) =>
-                val pairs = assigns.map { a =>
-                  a.key match {
-                    case ar: AttributeReference => Some(ar.name -> a.value)
-                    case _ => None
-                  }
+            def named(assigns: Seq[Assignment])
+                : Option[Seq[(String, Expression)]] = {
+              val pairs = assigns.map { a =>
+                a.key match {
+                  case ar: AttributeReference => Some(ar.name -> a.value)
+                  case u: UnresolvedAttribute if u.nameParts.size == 1 =>
+                    Some(u.nameParts.head -> a.value)
+                  case _ => None
                 }
-                if (pairs.forall(_.isDefined))
-                  Some((Some(pairs.flatten), false, cond))
-                else None
-              case Seq(DeleteAction(cond)) if cond.forall(_.resolved) =>
-                Some((None, true, cond))
+              }
+              Option.when(pairs.forall(_.isDefined))(pairs.flatten)
+            }
+            // matched: (condition, Some(assignments) = UPDATE / None =
+            // DELETE) per clause, in statement order
+            val matched = m.matchedActions.map {
+              case us: UpdateStarAction if tableCols.forall(
+                srcAttrByName.contains) && us.condition.forall(_.resolved) =>
+                Some((us.condition, Some(tableCols.map(c =>
+                  c -> (srcAttrByName(c): Expression)))))
+              case UpdateAction(cond, assigns, _) if cond.forall(_.resolved) =>
+                named(assigns).map(a => (cond, Some(a)))
+              case DeleteAction(cond) if cond.forall(_.resolved) =>
+                Some((cond, None))
               case _ => None
             }
             // not-matched: star insert — or its post-analysis expansion
@@ -373,19 +433,8 @@ case class ResolveLakeRelation(spark: SparkSession)
                       }} => Some((true, cond, None))
                 case Seq(InsertAction(cond, assigns))
                     if cond.forall(_.resolved) &&
-                      assigns.forall(a => a.value.resolved &&
-                        (a.key match {
-                          case _: AttributeReference => true
-                          case u: UnresolvedAttribute => u.nameParts.size == 1
-                          case _ => false
-                        })) =>
-                  Some((true, cond, Some(assigns.map { a =>
-                    val name = a.key match {
-                      case ar: AttributeReference => ar.name
-                      case u: UnresolvedAttribute => u.nameParts.head
-                    }
-                    name -> a.value
-                  })))
+                      assigns.forall(_.value.resolved) =>
+                  named(assigns).map(vs => (true, cond, Some(vs)))
                 case _ => None
               }
             // not-matched-by-source: outer None = unsupported shape;
@@ -400,12 +449,11 @@ case class ResolveLakeRelation(spark: SparkSession)
                       .Literal.TrueLiteral)))
                 case _ => None
               }
-            (matchedOk, insertOk, bySource) match {
-              case (Some((upd, del, mCond)), Some((ins, iCond, iVals)),
-                  Some(bs)) =>
-                LakeMergeCommand(p.alias, p.table, m.sourceTable,
-                  m.sourceTable.output, key, upd, del, ins,
-                  matchedCond = mCond, notMatchedCond = iCond,
+            (insertOk, bySource) match {
+              case (Some((ins, iCond, iVals)), Some(bs))
+                  if matched.forall(_.isDefined) =>
+                LakeMergeCommand(p.alias, p.table, m.sourceTable, onKeys,
+                  matched.flatten, ins, notMatchedCond = iCond,
                   bySourceDeleteCond = bs, insertValues = iVals)
               case _ => m
             }
@@ -521,38 +569,18 @@ case class ResolveLakeRelation(spark: SparkSession)
       case _ => ("main", table)
     }
     val key = s"$schema.$name"
-    val sid = lake.currentSnapshotId()
     lake.viewSqlAt(schema, name) match {
       case Some(viewSql) =>
         if (stack.contains(key))
           throw new IllegalArgumentException(
             s"recursive lake view: ${(key :: stack).reverse.mkString(" -> ")}")
-        val body = spark.sessionState.sqlParser.parsePlan(viewSql)
-        def isView(s: String, t: String): Boolean =
-          lake.meta.viewByName(t, sid, s).isDefined
-        def isTable(s: String, t: String): Boolean =
-          lake.meta.tableByName(t, sid, s).isDefined
-        val qualified = body.transformDownWithSubqueries {
-          case ur: UnresolvedRelation => ur.multipartIdentifier match {
-            case Seq(t) if isView("main", t) =>
-              expandView(alias, t, key :: stack)
-            case Seq(s, t) if LakeRegistry.get(s).isEmpty && isView(s, t) =>
-              expandView(alias, s"$s.$t", key :: stack)
-            // alias-qualified nested views must expand HERE too (with the
-            // stack) — leaving them for the analyzer rule would restart
-            // cycle detection from an empty stack and loop
-            case Seq(a, t) if LakeRegistry.get(a).isDefined &&
-                a == alias && isView("main", t) =>
-              expandView(alias, t, key :: stack)
-            case Seq(a, s, t) if LakeRegistry.get(a).isDefined &&
-                a == alias && isView(s, t) =>
-              expandView(alias, s"$s.$t", key :: stack)
-            case Seq(t) if isTable("main", t) =>
-              UnresolvedRelation(Seq(alias, t))
-            case Seq(s, t) if LakeRegistry.get(s).isEmpty && isTable(s, t) =>
-              UnresolvedRelation(Seq(alias, s, t))
-            case _ => ur
-          }
+        // nested views (bare or alias-qualified) expand HERE with the
+        // stack — leaving them for the analyzer rule would restart cycle
+        // detection from an empty stack and loop
+        val qualified = LakeNames.qualify(
+          spark.sessionState.sqlParser.parsePlan(viewSql), alias, lake) {
+          (s, v) => Some(expandView(alias,
+            if (s == "main") v else s"$s.$v", key :: stack))
         }
         SubqueryAlias(name, qualified)
       case None => placeholder(alias, table)
@@ -721,8 +749,7 @@ case class ExpandLakeScan(spark: SparkSession)
 
   private def expand(p: LakeRelationPlaceholder,
       pruneCond: Option[Expression]): LogicalPlan = {
-    val lake = LakeRegistry.get(p.alias).getOrElse(
-      throw new IllegalStateException(s"lake alias ${p.alias} unregistered"))
+    val lake = LakeDml.lake(p.alias)
     // re-anchor the condition on column NAMES so it resolves against the
     // freshly-built scan DataFrame (exprIds differ)
     val filterCol = pruneCond.map { c =>
@@ -730,18 +757,25 @@ case class ExpandLakeScan(spark: SparkSession)
         case a: AttributeReference => UnresolvedAttribute(Seq(a.name))
       })
     }
+    // virtual columns in use (metadataOutput, current snapshot only)
+    val withMeta = p.output.exists(a => MetadataAttribute.isValid(a.metadata))
     val scanned = p.version match {
       case Some(v) => lake.tableAtVersion(p.table, v, filterCol)
       case None => p.tsMs match {
         case Some(ms) => lake.tableAtTime(p.table, ms, filterCol)
+        case None if withMeta => lake.scan(p.table,
+          lake.meta.currentSnapshot(), filterCol, withMeta = true)
         case None => lake.table(p.table, filterCol)
       }
     }
     val child = scanned.queryExecution.optimizedPlan
+    val have =
+      if (withMeta) p.output.map(a => child.output.find(_.name == a.name).get)
+      else child.output
     // map the scan's output onto the placeholder's stable attribute ids
     val aliases: Seq[NamedExpression] =
-      p.output.zip(child.output).map { case (want, have) =>
-        Alias(have, want.name)(exprId = want.exprId)
+      p.output.zip(have).map { case (want, h) =>
+        Alias(h, want.name)(exprId = want.exprId)
       }
     Project(aliases, child)
   }

@@ -331,4 +331,62 @@ class GraftExtensionsSpec extends AnyFunSuite {
       SparkSession.setActiveSession(base)
     }
   }
+
+  test("spark.sql MERGE with a compound ON key and ordered WHEN MATCHED " +
+      "clauses; DML returns a Count; rowid in DML conditions") {
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graftextmrg").toString
+    val lake = Lake.attach(spark, s"$dir/cat", s"$dir/data")
+    LakeRegistry.register("graft", lake)
+    try {
+      // compound upsert key (test_rewrite_partitioning.test shape)
+      lake.createTableAs("p", Seq((1, 1, 10), (1, 2, 20), (2, 1, 100),
+        (2, 2, 200)).toDF("part_key", "id", "value"))
+      Seq((1, 1, 15), (1, 3, 30), (2, 1, 150), (2, 3, 300))
+        .toDF("part_key", "id", "value").createOrReplaceTempView("psrc")
+      val upserted = spark.sql(
+        """MERGE INTO graft.p AS target USING psrc AS source
+          |ON target.part_key = source.part_key AND target.id = source.id
+          |WHEN MATCHED THEN UPDATE SET value = source.value
+          |WHEN NOT MATCHED THEN INSERT *""".stripMargin).head().getLong(0)
+      assert(upserted == 4L) // 2 updated + 2 inserted
+      assert(lake.table("p").orderBy("part_key", "id")
+        .as[(Int, Int, Int)].collect().toSeq ==
+        Seq((1, 1, 15), (1, 2, 20), (1, 3, 30),
+          (2, 1, 150), (2, 2, 200), (2, 3, 300)))
+
+      // ordered WHEN MATCHED list: per row the first passing clause acts
+      lake.createTableAs("tgt",
+        Seq((1L, 5.0), (2L, 20.0), (3L, 30.0)).toDF("k", "x"))
+      Seq((1L, 0.0), (2L, 0.0), (3L, 0.0), (4L, 4.0)).toDF("k", "x")
+        .createOrReplaceTempView("osrc")
+      spark.sql(
+        """MERGE INTO graft.tgt t USING osrc s ON t.k = s.k
+          |WHEN MATCHED AND t.x < 10 THEN DELETE
+          |WHEN MATCHED AND t.x < 25 THEN UPDATE SET x = t.x + 1
+          |WHEN MATCHED THEN UPDATE SET x = 0
+          |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+      assert(lake.table("tgt").orderBy("k").as[(Long, Double)]
+        .collect().toSeq == Seq((2L, 21.0), (3L, 0.0), (4L, 4.0)))
+
+      // virtual columns resolve in DML conditions, hidden from SELECT *
+      assert(spark.sql("SELECT * FROM graft.tgt").columns.toSeq ==
+        Seq("k", "x"))
+      val rid = spark.sql("SELECT rowid FROM graft.tgt WHERE k = 3")
+        .head().getLong(0)
+      assert(spark.sql(s"UPDATE graft.tgt SET x = 9 WHERE rowid = $rid")
+        .head().getLong(0) == 1L)
+      assert(spark.sql(s"DELETE FROM graft.tgt WHERE rowid = $rid")
+        .head().getLong(0) == 1L)
+      assert(spark.sql("INSERT INTO graft.tgt VALUES (5, 5.0), (6, 6.0)")
+        .head().getLong(0) == 2L)
+      // INSERT … SELECT … WHERE into a table of the `graft` DSv2 catalog
+      // runs the lake's INSERT command too
+      assert(spark.sql("INSERT INTO graft.tgt SELECT k + 100, x " +
+        "FROM graft.tgt WHERE k = 2").head().getLong(0) == 1L)
+      assert(lake.table("tgt").orderBy("k").select("k").as[Long]
+        .collect().toSeq == Seq(2L, 4L, 5L, 6L, 102L))
+    } finally LakeRegistry.unregister("graft")
+  }
 }

@@ -1,6 +1,11 @@
 package graft
 
+import java.nio.file.Files
+
+import graft.catalog.Lake
+import graft.plans.LakeRegistry
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.udf
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Driver-efficiency regressions: operators that must execute as ONE Spark
@@ -61,6 +66,42 @@ class JobCountSpec extends AnyFunSuite {
         SparkEntry.queries("cb_gap_stats")(spark, dir).collect(): Unit
       }
       assert(n == 1, s"cb_gap_stats ran $n jobs; expected 1")
+    }
+  }
+
+  test("small DML through SQL: 1-row INSERT and point DELETE job counts; " +
+      "lake.sql INSERT … SELECT evaluates its query once") {
+    import spark.implicits._
+    withoutAqe {
+      val dir = Files.createTempDirectory("graftjobs").toString
+      val lake = Lake.attach(spark, s"$dir/cat", s"$dir/data")
+      LakeRegistry.register("graft", lake)
+      try {
+        lake.createTableAs("t", (1L to 100L).toDF("id").coalesce(1))
+        (1 to 3).foreach(i => lake.append("t",
+          (i * 100L + 1 to i * 100L + 100).toDF("id").coalesce(1)))
+        spark.sql("INSERT INTO graft.t VALUES (1000)").collect(): Unit
+        val ins = jobsDuring {
+          spark.sql("INSERT INTO graft.t VALUES (1001)").collect(): Unit
+        }
+        // job counts of the previous release: 4 and 6
+        assert(ins <= 4, s"1-row INSERT ran $ins jobs")
+        val del = jobsDuring {
+          spark.sql("DELETE FROM graft.t WHERE id = 150").collect(): Unit
+        }
+        assert(del <= 6, s"point DELETE ran $del jobs")
+
+        // a nondeterministic probe in the WHERE clause counts how often
+        // the query's 10 source rows are evaluated
+        lake.createTableAs("s", (1L to 10L).toDF("id"))
+        val evals = spark.sparkContext.longAccumulator("probe")
+        spark.udf.register("probe",
+          udf((x: Long) => { evals.add(1); x }).asNondeterministic())
+        assert(lake.sql("INSERT INTO t SELECT id + 2000 FROM s " +
+          "WHERE probe(id) > 0").head().getLong(0) == 10L)
+        assert(evals.value == 10L,
+          s"INSERT … SELECT evaluated its query ${evals.value / 10.0} times")
+      } finally LakeRegistry.unregister("graft")
     }
   }
 }

@@ -87,4 +87,45 @@ class ProcedureSpec extends AnyFunSuite {
         procs.contains("merge_adjacent_files"))
     }
   }
+
+  test("add_data_files, table-less flush_inlined_data and " +
+      "rewrite_data_files max_compacted_files via spark.sql CALL") {
+    withLake { lake =>
+      // add_data_files registers a foreign parquet file in place
+      val ext = Files.createTempDirectory("graftprocadd").resolve("f")
+      Seq((1L, "a"), (2L, "b")).toDF("id", "v").coalesce(1)
+        .write.parquet(ext.toString)
+      val file = ext.toFile.listFiles().map(_.getPath)
+        .filter(_.endsWith(".parquet")).head
+      lake.createTable("ext", Seq((0L, "")).toDF("id", "v").schema)
+      spark.sql("CALL graft.add_data_files(table_name => 'ext', " +
+        s"files => array('$file'))")
+      assert(lake.table("ext").orderBy("id").as[(Long, String)]
+        .collect().toSeq == Seq((1L, "a"), (2L, "b")))
+
+      // rewrite with max_compacted_files: two fully-deleted files, the
+      // capped call rewrites one, the next call the other
+      lake.createTableAs("r", Seq(1).toDF("k").coalesce(1))
+      lake.append("r", Seq(2).toDF("k").coalesce(1))
+      lake.delete("r", lit(true))
+      assert(spark.sql("CALL graft.rewrite_data_files('r', " +
+        "delete_threshold => 0.99, max_compacted_files => 1)")
+        .head().getLong(0) == 1L)
+      assert(spark.sql("CALL graft.rewrite_data_files('r', " +
+        "delete_threshold => 0.99)").head().getLong(0) == 1L)
+
+      // no table: flush every table's inlined rows
+      lake.setOption("data_inlining_row_limit", "10")
+      lake.createTable("a", Seq((1, "x")).toDF("id", "v").schema)
+      lake.createTable("b", Seq((1, "x")).toDF("id", "v").schema)
+      lake.append("a", Seq((1, "x"), (2, "y")).toDF("id", "v"))
+      lake.append("b", Seq((3, "z")).toDF("id", "v"))
+      assert(lake.listFiles("a").count() == 0)
+      assert(spark.sql("CALL graft.flush_inlined_data()")
+        .head().getLong(0) == 3L)
+      assert(lake.listFiles("a").count() == 1 &&
+        lake.listFiles("b").count() == 1)
+      assert(lake.table("a").count() == 2 && lake.table("b").count() == 1)
+    }
+  }
 }

@@ -185,4 +185,45 @@ class ScanPlanSpec extends AnyFunSuite {
     assert(plan.contains("Join"), "delete filter requires the join path")
     assert(lake.table("t").count() == 90)
   }
+
+  test("point DELETE reads only the file its key can be in") {
+    val dir = Files.createTempDirectory("graftsp8").toString
+    val lake = Lake.attach(spark, s"$dir/cat", s"$dir/data")
+    // four key-clustered files: ids 1-100, 101-200, 201-300, 301-400
+    lake.createTableAs("t", (1L to 100L).toDF("id").coalesce(1))
+    (1 to 3).foreach(i =>
+      lake.append("t", (i * 100L + 1 to i * 100L + 100).toDF("id").coalesce(1)))
+    val dataFiles = lake.listFiles("t").select("data_file").as[String]
+      .collect().map(_.split('/').last).toSet
+    assert(dataFiles.size == 4)
+    // every file scan of the table's data files, summed over the
+    // executions the DELETE runs (AQE off: executedPlan is the real plan)
+    val reads = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit =
+        reads.addAndGet(qe.executedPlan.collect {
+          case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+        }.flatMap(_.relation.location.inputFiles)
+          .count(f => dataFiles.contains(f.split('/').last)).toLong): Unit
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.listenerManager.register(listener)
+    try {
+      assert(lake.delete("t", col("id") === 150L) == 1L)
+      org.apache.spark.graft.ShuffleReset.drainListenerBus(spark.sparkContext)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    }
+    // the matched positions are evaluated twice (inlined-row check,
+    // per-file counts), each over the one file holding id 150
+    assert(reads.get() == 2L, s"point delete read ${reads.get()} data files")
+    assert(lake.table("t").count() == 399)
+  }
 }

@@ -497,4 +497,17 @@ class SqlSurfaceSpec extends AnyFunSuite {
     assert(lake.sql("DESCRIBE aux.t3").collect().map(_.getString(0))
       .toSeq == Seq("q"))
   }
+
+  test("MERGE … THEN INSERT in DuckDB's bare spelling inserts every column") {
+    val dir = Files.createTempDirectory("graftsqlmrg5").toString
+    val lake = Lake.attach(spark, s"$dir/cat", s"$dir/data")
+    lake.createTableAs("tgt", Seq((1L, 10.0)).toDF("k", "x"))
+    lake.createTableAs("src", Seq((1L, 11.0), (2L, 20.0)).toDF("k", "x"))
+    assert(lake.sql(
+      """MERGE INTO tgt USING src s ON tgt.k = s.k
+        |WHEN NOT MATCHED THEN INSERT""".stripMargin).head().getLong(0) == 1L)
+    assert(lake.table("tgt").orderBy("k").as[(Long, Double)]
+      .collect().toSeq == Seq((1L, 10.0), (2L, 20.0)))
+    lake.detach()
+  }
 }

@@ -106,4 +106,21 @@ class VirtualColumnsSpec extends AnyFunSuite {
       "SELECT i FROM test WHERE file_row_number = 1").as[Int]
       .collect().toSeq == Seq(2))
   }
+
+  test("rowid in lake.sql DELETE / UPDATE conditions") {
+    val lake = freshLake()
+    lake.createTableAs("rv",
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v").coalesce(1))
+    val rid = lake.sql("SELECT rowid FROM rv WHERE id = 2").head().getLong(0)
+    assert(lake.sql(s"UPDATE rv SET v = 'B' WHERE rowid = $rid")
+      .head().getLong(0) == 1L)
+    assert(lake.sql("SELECT v FROM rv WHERE id = 2").head().getString(0) ==
+      "B")
+    // UPDATE keeps the row id, so the same rowid deletes the new version
+    assert(lake.sql(s"DELETE FROM rv WHERE rowid = $rid")
+      .head().getLong(0) == 1L)
+    assert(lake.table("rv").orderBy("id").select("id").as[Long]
+      .collect().toSeq == Seq(1L, 3L))
+    lake.detach()
+  }
 }

@@ -33,7 +33,9 @@ def main():
     reps = int(sys.argv[3]) if len(sys.argv) > 3 else 5
     oracle = json.load(open(sql_json))
     con = duckdb.connect()
-    con.execute("PRAGMA threads=32")
+    # same CPU count as the Spark side (graft.Bench reads SPARK_GRAFT_CPUS)
+    threads = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
+    con.execute(f"PRAGMA threads={threads}")
     for t in TABLES:
         # scale-up dirs hold multi-file tables (<t>.parquet/ directory of
         # part files) — glob them; raw testdata stays single-file
