@@ -8,8 +8,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{
-  And, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, IsNotNull,
-  IsNull, LessThan, LessThanOrEqual, Literal}
+  And, BinaryComparison, Cast, EqualTo, Expression, GreaterThan,
+  GreaterThanOrEqual, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -1211,6 +1211,17 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
   private[graft] def insert(name: String, df: DataFrame): Long =
     appendCounted(name, df, Nil, None)._2
 
+  /** INSERT OVERWRITE: replace every row of `name` with `df` in ONE
+    * snapshot; returns the rows inserted. The query is checkpointed
+    * before the delete, so it may read the table it overwrites. */
+  private[graft] def insertOverwrite(name: String, df: DataFrame): Long = {
+    val rows = df.localCheckpoint(eager = true)
+    def run() = { delete(name, lit(true)); insert(name, rows) }
+    try if (txn.isDefined) run() else transaction(run())
+    finally checkpointRdd(rows).foreach(
+      org.apache.spark.graft.Checkpoints.release)
+  }
+
   private def appendCounted(name: String, df: DataFrame,
       commitOptions: Seq[(String, String)],
       batchGuard: Option[(String, Long)]): (Snapshot, Long) = {
@@ -1373,15 +1384,10 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
     // mixes staged data files with a pending schema change
     val alters = scala.collection.mutable.ArrayBuffer
       .empty[(Long, AlterSpec)]
-    // temp dirs (lake-relative) holding materialized positions etc.;
-    // removed at txn end
-    val scratchDirs = scala.collection.mutable.ArrayBuffer.empty[String]
     def pendingFiles(tableId: Long): Seq[PendingDataFile] =
       appends.filter(_._1 == tableId).flatMap(_._4).toSeq
     def pendingPaths(tableId: Long): Set[String] =
       pendingFiles(tableId).map(_.path).toSet
-    def cleanupScratch(): Unit =
-      scratchDirs.foreach(d => io.deleteRecursively(d))
   }
 
   @volatile private var txn: Option[TxnState] = None
@@ -1435,7 +1441,6 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
         created, drops, newSchemas, alterList, st.macroOps.toSeq,
         st.viewOps.toSeq, renameList, partitionList, sortList, flushList)
     txn = None
-    st.cleanupScratch()
   }
 
   /** ROLLBACK: discard the open transaction — staged files removed from
@@ -1453,7 +1458,6 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
     // covered by the appends cleanup above. The table DIR is left in place:
     // dirs are shared by table name, so a concurrent writer committing the
     // same name may already own files inside it.
-    st.cleanupScratch()
   }
 
   /** Run `body` as one transaction: every append/delete/update/merge
@@ -1671,9 +1675,8 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
     val shaped =
       if (sortSpec.isEmpty) one
       else one.sortWithinPartitions(sortSpec.map((sortKey _).tupled): _*)
-    val rel = writeAndCollectPlain(name, shaped)
-    val pending = statsFor(rel, cols, allCols = flAllCols)
-      .copy(hasRowIds = true)
+    val pending = writeAndCollect(name, shaped, cols, allCols = flAllCols)
+      .head.copy(hasRowIds = true)
     txn match {
       case Some(st) => // buffered: the txn's own reads serve the file in
         // place of the inlined rows; ONE snapshot at commit
@@ -1834,66 +1837,28 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
     // empty rewrite is a legal no-op: UPDATE/MERGE matching nothing
     // (reference: zero rows updated, no files written). RECURSIVE check:
     // partitioned writes put the parts under hive subdirectories (whose
-    // names may hold literal spaces — hasFileRecursive never URI-parses).
-    if (!io.hasFileRecursive(stagingRel, ".parquet")) {
+    // names may hold literal spaces — countFilesRecursive never
+    // URI-parses).
+    val nParts = io.countFilesRecursive(stagingRel, ".parquet")
+    if (nParts == 0) {
       io.deleteRecursively(stagingRel)
       return Nil
     }
 
-    val geoCols = cols.filter(_.typeString == "geometry")
-    // geometry leaves nested under struct/list/map columns join the same
-    // single stats pass via per-row (merged) extent expressions
-    val nestedGeo = nestedGeoSpecs(allCols)
-    val written0 = geoCols.foldLeft(pqRead
-      .parquet(stagingDir)
-      .select(cols.map(c => col(c.name)
-        .cast(DuckLakeTypes.fromTypeString(c.typeString))): _*))((d, c) =>
-      // geometry: parse each WKB once into an extent struct; its fields
-      // feed plain min/max aggregates in the same single stats pass
-      d.withColumn(s"__geo_${c.name}",
-        graft.functions.GeoFunctions.geoExtent(col(c.name))))
-    val written = nestedGeo.foldLeft(written0) { case (d, (ci, ex)) =>
-      d.withColumn(s"__ngeo_${ci.columnId}", ex)
-    }
-    val statAggs = cols.flatMap { c =>
-      val dt = DuckLakeTypes.fromTypeString(c.typeString)
-      if (c.typeString == "geometry")
-        graft.functions.GeoStatsAgg.aggs(col(s"__geo_${c.name}"), c.name) :+
-          count(col(c.name)).as(s"cnt_${c.name}")
-      else if (StatsCodec.statsSupported(dt))
-        Seq(min(col(c.name)).as(s"min_${c.name}"),
-          max(col(c.name)).as(s"max_${c.name}"),
-          count(col(c.name)).as(s"cnt_${c.name}")) ++
-          (if (dt == DoubleType || dt == FloatType)
-            Seq(sum(when(isnan(col(c.name)), 1L).otherwise(0L))
-              .as(s"nan_${c.name}"))
-          else Nil)
-      else Seq(count(col(c.name)).as(s"cnt_${c.name}"))
-    }
-    val nestedGeoAggs = nestedGeo.flatMap { case (ci, _) =>
-      graft.functions.GeoStatsAgg.aggs(
-        col(s"__ngeo_${ci.columnId}"), s"n${ci.columnId}") :+
-        count(col(s"__ngeo_${ci.columnId}")).as(s"ncnt_${ci.columnId}")
-    }
-    // shredded-variant-path stats ride in the SAME aggregation pass
+    // shredded-variant-path stats ride in the same single pass
     val shredded = variantShreddedSpecs(table, cols)
-    val varAggs = shredded.zipWithIndex.flatMap { case ((ci, path, dt), i) =>
-      val g = variant_get(col(ci.name), path, dt.sql)
-      Seq(min(g).as(s"vmin_$i"), max(g).as(s"vmax_$i"),
-        count(g).as(s"vcnt_$i"))
-    }
-    // nested scalar leaves (struct fields, list elements, map keys/values)
-    // get per-file min/max in the same pass — struct-path filters prune
-    // files off them like the reference's per-leaf stats
-    val nestedLeaves = nestedLeafSpecs(allCols)
-    val leafAggs = nestedLeaves.flatMap((nestedLeafAggs _).tupled)
-    val statRows = written
+    val pass = statsPass(allCols, cols, c => Some(c.name), shredded)
+    // the written schema is known: no schema-inference job over the
+    // parts; one part is read by one task, so the per-file aggregate
+    // below needs no shuffle
+    val staged = pqRead.schema(df0.schema).parquet(stagingDir)
+    val statRows = pass.prepare(if (nParts == 1) staged.coalesce(1)
+      else staged)
       .groupBy(input_file_name().as("__file"))
-      .agg(count(lit(1)).as("__rows"),
-        statAggs ++ nestedGeoAggs ++ varAggs ++ leafAggs: _*)
+      .agg(pass.aggs.head, pass.aggs.tail: _*)
       .collect()
 
-    // belt to the hasFileRecursive braces above: a zero-record part can't
+    // belt to the countFilesRecursive braces above: a zero-record part can't
     // appear in this groupBy today (no rows → no group; Spark 4.1.2 also
     // writes no empty parts), but a writer change that restores
     // schema-only parts must not turn a no-match UPDATE/MERGE into a
@@ -1908,35 +1873,7 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
       // parser accepts and keeps byte-for-byte
       val srcPath = new org.apache.hadoop.fs.Path(
         row.getAs[String]("__file"))
-      val rows = row.getAs[Long]("__rows")
-      val stats = cols.map { c =>
-        val dt = DuckLakeTypes.fromTypeString(c.typeString)
-        val nulls = rows - row.getAs[Long](s"cnt_${c.name}")
-        if (c.typeString == "geometry") {
-          FileColumnStats(c.columnId, None, None, nulls,
-            extraStats = graft.functions.GeoStatsAgg.fromRow(row, c.name))
-        } else if (StatsCodec.statsSupported(dt)) {
-          val mn = StatsCodec.encode(row.getAs[Any](s"min_${c.name}"), dt)
-          val mx = StatsCodec.encode(row.getAs[Any](s"max_${c.name}"), dt)
-          val nan =
-            if (dt == DoubleType || dt == FloatType)
-              row.getAs[Long](s"nan_${c.name}")
-            else 0L
-          FileColumnStats(c.columnId, mn, mx, nulls, nan,
-            numeric = StatsCodec.isNumeric(dt))
-        } else FileColumnStats(c.columnId, None, None, nulls)
-      }
-      // nested geometry leaves: extent JSON under the leaf's own column
-      // id ("nulls" = rows with no parsable geometry on the path)
-      val nestedGeoStats = nestedGeo.map { case (ci, _) =>
-        FileColumnStats(ci.columnId, None, None,
-          rows - row.getAs[Long](s"ncnt_${ci.columnId}"),
-          extraStats = graft.functions.GeoStatsAgg.fromRow(
-            row, s"n${ci.columnId}"))
-      }
-      val leafStats = nestedLeaves.map { case (ci, _, _) =>
-        nestedLeafStats(row, rows, ci)
-      }
+      val (rows, stats, varStats) = pass.decode(row)
       // partition dir segments __p{i}=<escaped-value> between staging
       // root and the part file, located by the stage-UUID marker (pure
       // hex — never escaped by any layer, so this works even when the
@@ -1966,37 +1903,32 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
             s"$label=${escapeHive(v)}"
           }.mkString("/")
         }.filter(_.nonEmpty)
-      val varStats = shredded.zipWithIndex.map { case ((ci, path, dt), i) =>
-        VariantPathStats(ci.columnId, path,
-          StatsCodec.encode(row.getAs[Any](s"vmin_$i"), dt),
-          StatsCodec.encode(row.getAs[Any](s"vmax_$i"), dt),
-          rows - row.getAs[Long](s"vcnt_$i"),
-          numeric = StatsCodec.isNumeric(dt),
-          shreddedType = Some(DuckLakeTypes.toTypeString(dt)))
-      }
       val finalName = s"ducklake-${UUID.randomUUID()}.parquet"
       val relPath = hiveDirs.map(d => s"$table/$d/$finalName")
         .getOrElse(s"$table/$finalName")
       io.move(srcPath.toString, relPath)
-      PendingDataFile(relPath, rows, io.size(relPath),
-        stats ++ nestedGeoStats ++ leafStats,
+      PendingDataFile(relPath, rows, io.size(relPath), stats,
         partitionValues = partVals.toSeq, variantStats = varStats,
         writtenSorted = writtenSorted)
     }.tapEach(_ => ()).toSeq match {
       case done0 =>
         // remove staging leftovers (_SUCCESS etc.)
         io.deleteRecursively(stagingRel)
-        // format v1.1 row_group_count: one tiny distributed footer pass
-        // over one-row-per-file (never a driver parquet read); encrypted
-        // footers stay NULL — the column is nullable metadata
+        // format v1.1 row_group_count: a small write reads its few
+        // footers on the driver, a larger one in one tiny distributed
+        // pass over one-row-per-file; encrypted footers stay NULL — the
+        // column is nullable metadata
         val done =
           if (done0.isEmpty || cryptoOpts.nonEmpty) done0
           else {
             val ioRef = io
             val rels = done0.map(_.path)
-            val counts = spark.sparkContext
-              .parallelize(rels, math.min(rels.size, 32))
-              .map(r => r -> ioRef.rowGroupCount(r)).collect().toMap
+            val counts =
+              if (rels.size <= DriverFooterReads)
+                rels.map(r => r -> io.rowGroupCount(r)).toMap
+              else spark.sparkContext
+                .parallelize(rels, math.min(rels.size, 32))
+                .map(r => r -> ioRef.rowGroupCount(r)).collect().toMap
             done0.map(f => f.copy(rowGroupCount = counts.get(f.path)))
           }
         done
@@ -2698,10 +2630,15 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
     // columns which take precedence over row_id_start + row_index
     // (reference ducklake_multi_file_reader.cpp:574-596); a snapshot can mix
     // both kinds, so scan them as (epoch × materialized) groups and union.
-    val fileInfo = scanFiles.zipWithIndex.map { case (f, i) =>
-      (absUri(f.file.path), f.file.path, f.file.rowIdStart,
-        f.file.beginSnapshot, i.toLong)
-    }.toDF("__abs", "__rel", "__start", "__fsnap", "__fidx")
+    // per file, keyed by the path Spark reports: (relative path,
+    // row_id_start, begin snapshot, index in the file list)
+    val infoOf = scanFiles.zipWithIndex.map { case (f, i) =>
+      f.file.path -> (absUri(f.file.path), (f.file.path, f.file.rowIdStart,
+        f.file.beginSnapshot, i.toLong))
+    }.toMap
+    lazy val fileInfo = infoOf.values.toSeq
+      .map { case (a, (rel, start, fsnap, i)) => (a, rel, start, fsnap, i) }
+      .toDF("__abs", "__rel", "__start", "__fsnap", "__fidx")
 
     def readGroup(group: Seq[ScanFile], materialized: Boolean,
         plan: Option[(StructType, Seq[Column])]) = {
@@ -2722,7 +2659,17 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
             (if (materialized) Seq(col(RowIdCol), col(SnapCol)) else Nil)
           base0.select(projs ++ carried: _*)
       }
-      val base = base1.join(broadcast(fileInfo), Seq("__abs"))
+      // a few files look their info up in a map literal (no broadcast
+      // job); many join the broadcast file list
+      val base =
+        if (group.size > MapLiteralFiles)
+          base1.join(broadcast(fileInfo), Seq("__abs"))
+        else {
+          val info = element_at(typedLit(group.map(f => infoOf(f.file.path))
+            .toMap), col("__abs"))
+          base1.select(col("*") +: Seq("__rel", "__start", "__fsnap", "__fidx")
+            .zipWithIndex.map { case (n, i) => info(s"_${i + 1}").as(n) }: _*)
+        }
       base
         .withColumn("rowid",
           if (materialized) col(RowIdCol) else col("__start") + col("__pos"))
@@ -2896,76 +2843,46 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
   /** All deleted (file_path, pos) rows of a set of delete-file entries,
     * reading positional parquet and expanding roaring DVs (DV blobs are
     * small; at scale they'd broadcast as bitmaps rather than expand, but
-    * the anti-join form keeps one code path). */
-  /** deleted (file_path, pos, del_snap) rows of delete-file entries —
-    * like [[deleteRowsDf]] but carrying each position's DELETION
-    * snapshot (the delete file's begin snapshot) for CDC. */
-  private def deleteRowsWithSnap(entries: Seq[DeleteFileEntry],
-      relById: Map[Long, String]): Option[DataFrame] = {
-    import spark.implicits._
-    val (roaring, parquetE) = entries.partition(_.format == "roaring")
-    val pq =
-      if (parquetE.isEmpty) None
-      else {
-        val snapByAbs = parquetE
-          .map(e => absUri(e.path) -> e.beginSnapshot).toDF("__src", "del_snap")
-        Some(pqRead
-          .schema(StructType(Seq(StructField("file_path", StringType),
-            StructField("pos", LongType))))
-          .parquet(parquetE.map(e => abs(e.path)).distinct: _*)
-          .withColumn("__src", col("_metadata.file_path"))
-          .join(broadcast(snapByAbs), Seq("__src"))
-          .drop("__src"))
-      }
-    val rr =
-      if (roaring.isEmpty) None
-      else {
-        val lakeIo = io
-        val blobs = roaring.map(e =>
-          (e.path, relById(e.dataFileId), e.beginSnapshot))
-        val rows = spark.sparkContext
-          .parallelize(blobs, math.min(blobs.size, 32).max(1))
-          .flatMap { case (dvPath, dataRel, snapId) =>
-            DeletionVectors.positions(lakeIo.readAllBytes(dvPath))
-              .map(p => (dataRel, p, snapId))
-          }
-        Some(rows.toDF("file_path", "pos", "del_snap"))
-      }
-    (pq, rr) match {
-      case (Some(a), Some(b)) => Some(a.unionByName(b))
-      case (a, b) => a.orElse(b)
-    }
-  }
-
+    * the anti-join form keeps one code path). `withSnap` adds each
+    * position's DELETION snapshot (the delete file's begin snapshot,
+    * `del_snap`) for CDC. A Parquet delete part holds the rows of every
+    * data file its writer task owned: `exact` keeps a data file's rows
+    * only from its own entry. */
   private def deleteRowsDf(entries: Seq[DeleteFileEntry],
-      relById: Map[Long, String]): Option[DataFrame] = {
+      relById: Map[Long, String], exact: Boolean = false,
+      withSnap: Boolean = false): Option[DataFrame] = {
     import spark.implicits._
     val (roaring, parquetE) = entries.partition(_.format == "roaring")
-    val pq =
-      if (parquetE.isEmpty) None
-      else Some(pqRead
+    val out = (Seq("file_path", "pos") ++
+      (if (withSnap) Seq("del_snap") else Nil)).map(col)
+    val pq = Option.when(parquetE.nonEmpty) {
+      val rows = pqRead
         .schema(StructType(Seq(StructField("file_path", StringType),
           StructField("pos", LongType))))
-        .parquet(parquetE.map(e => abs(e.path)).distinct: _*))
-    val rr =
-      if (roaring.isEmpty) None
-      else {
-        // expand DV blobs executor-side (a 100k-file table would other-
-        // wise serially open 100k blobs on the driver); io is serializable
-        val lakeIo = io
-        val blobs = roaring.map(e => (e.path, relById(e.dataFileId)))
-        val rows = spark.sparkContext
-          .parallelize(blobs, math.min(blobs.size, 32).max(1))
-          .flatMap { case (dvPath, dataRel) =>
-            DeletionVectors.positions(lakeIo.readAllBytes(dvPath))
-              .map(p => (dataRel, p))
-          }
-        Some(rows.toDF("file_path", "pos"))
-      }
-    (pq, rr) match {
-      case (Some(a), Some(b)) => Some(a.unionByName(b))
-      case (a, b) => a.orElse(b)
+        .parquet(parquetE.map(e => abs(e.path)).distinct: _*)
+      val src = col("_metadata.file_path")
+      val kept = if (!exact) rows else rows.filter(
+        concat(src, lit("\n"), col("file_path")).isin(parquetE.map(e =>
+          s"${absUri(e.path)}\n${relById(e.dataFileId)}"): _*))
+      if (!withSnap) kept.select(out: _*)
+      else kept.withColumn("__src", src).join(broadcast(parquetE
+        .map(e => absUri(e.path) -> e.beginSnapshot).distinct
+        .toDF("__src", "del_snap")), Seq("__src")).select(out: _*)
     }
+    val rr = Option.when(roaring.nonEmpty) {
+      // expand DV blobs executor-side (a 100k-file table would other-
+      // wise serially open 100k blobs on the driver); io is serializable
+      val lakeIo = io
+      val blobs = roaring.map(e =>
+        (e.path, relById(e.dataFileId), e.beginSnapshot))
+      spark.sparkContext
+        .parallelize(blobs, math.min(blobs.size, 32).max(1))
+        .flatMap { case (dvPath, dataRel, snapId) =>
+          DeletionVectors.positions(lakeIo.readAllBytes(dvPath))
+            .map(p => (dataRel, p, snapId))
+        }.toDF("file_path", "pos", "del_snap").select(out: _*)
+    }
+    (pq.toSeq ++ rr).reduceOption(_ unionByName _)
   }
 
   private def readSchemaOf(relPath: String): StructType =
@@ -2988,22 +2905,83 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
     // the predicate also reaches catalog stats pruning: a point delete
     // reads the files that can hold its key, not the whole table
     val matched = scan(name, snap, Some(cond), withMeta = true)
-      .filter(cond)
-      .select(col("filename").as("file_path"), col("file_row_number").as("pos"))
-    val n = deleteByPosition(name, t, snap, matched)
+      .select(col("filename").as("__file"), col("file_row_number").as("__pos"))
+    val n = withMatched(matched, None) { (rows, perFile) =>
+      deleteByPosition(name, t, snap, positionsOf(rows), perFile)
+    }
     if (n > 0) maybeAutoRefresh(name)
     n
   }
 
+  /** Run one DML statement over its matched rows evaluated ONCE: `plan`
+    * (the pruned scan plus condition; for MERGE the join with the source),
+    * with the target position as `__file`/`__pos`, is checkpointed in the
+    * executors and every later step reads the checkpoint, so a
+    * nondeterministic condition rewrites exactly the rows it deletes. The
+    * first job counts the rows leaving each file (`leaves`, for MERGE;
+    * inlined rows under [[Lake.InlinedFile]]); no position reaches the
+    * driver. Downstream writes get one partition per maxPartitionBytes. */
+  private def withMatched[A](plan: DataFrame, leaves: Option[Column])(
+      body: (DataFrame, Map[String, Long]) => A): A = {
+    val rows = plan.localCheckpoint(eager = false)
+    try {
+      val perFile = leavingPerFile(rows, leaves)
+      val bytes = spark.sparkContext.getRDDStorageInfo
+        .filter(i => checkpointRdd(rows).exists(_.id == i.id))
+        .map(i => i.memSize + i.diskSize).sum
+      val n = bytes / spark.sessionState.conf.filesMaxPartitionBytes + 1
+      body(if (n < rows.rdd.getNumPartitions) rows.coalesce(n.toInt)
+        else rows, perFile)
+    } finally checkpointRdd(rows).foreach(
+      org.apache.spark.graft.Checkpoints.release)
+  }
+
+  private def checkpointRdd(checkpointed: DataFrame) =
+    checkpointed.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => Some(r.rdd)
+      case _ => None
+    }
+
+  /** Rows leaving each file as ONE Spark job whatever the AQE setting (an
+    * RDD shuffle is not split into query stages). MERGE first reduces by
+    * target position: a row matched twice is an error. */
+  private def leavingPerFile(rows: DataFrame,
+      leaves: Option[Column]): Map[String, Long] = {
+    val parts = math.max(1, math.min(rows.rdd.getNumPartitions,
+      spark.sparkContext.defaultParallelism))
+    // (rows, flag): per position the flag says the row leaves, per file
+    // that a row matched twice
+    val add = (a: (Long, Boolean), b: (Long, Boolean)) =>
+      (a._1 + b._1, a._2 || b._2)
+    val keyed = rows.filter(col("__file").isNotNull)
+      .select(col("__file"), col("__pos"), leaves.getOrElse(lit(true))).rdd
+      .map(r => ((r.getString(0), r.getLong(1)), (1L, r.getBoolean(2))))
+    val perFile = (if (leaves.isEmpty) keyed else keyed.reduceByKey(add, parts))
+      .map { case ((f, _), (n, l)) => (f, (if (l) 1L else 0L, n > 1)) }
+      .reduceByKey(add, parts).collect()
+    if (perFile.exists(_._2._2)) throw new IllegalStateException(
+      "The same row was updated multiple times") // reference error text
+    perFile.collect { case (f, (n, _)) if n > 0 => f -> n }.toMap
+  }
+
+  private def positionsOf(rows: DataFrame): DataFrame =
+    rows.select(col("__file").as("file_path"), col("__pos").as("pos"))
+
+  /** Delete `positions` (file_path, pos; `perFile` counts them per file,
+    * inlined rows under [[Lake.InlinedFile]]) and register `newFiles` in
+    * the same snapshot. */
   private def deleteByPosition(name: String, t: TableInfo, snap: Snapshot,
-      newDeletes0: DataFrame, newFiles: Seq[PendingDataFile] = Nil,
+      positions: DataFrame, perFile0: Map[String, Long],
+      newFiles: Seq[PendingDataFile] = Nil,
       newFilesPartitionId: Option[Long] = None): Long = {
     // inlined rows delete by ending their validity in the catalog DB —
     // in the SAME snapshot as the statement's file deletes / new files
     // (a DELETE spanning inlined + file rows is ONE commit like the
     // reference), so they thread into whichever commit happens below
-    val inlinedIds = newDeletes0.filter(col("file_path") === InlinedFile)
-      .select("pos").collect().map(_.getLong(0)).toSeq
+    val inlinedIds =
+      if (!perFile0.contains(InlinedFile)) Nil
+      else positions.filter(col("file_path") === InlinedFile)
+        .select("pos").collect().map(_.getLong(0)).toSeq
     if (inlinedIds.nonEmpty) txn.foreach { st =>
       // buffered: validity ends in the SAME catalog txn as the commit
       // (conflict-checked there); reads overlay the buffered ids
@@ -3011,14 +2989,12 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
         scala.collection.mutable.LinkedHashSet.empty[Long]) ++= inlinedIds
     }
     val endIds = if (txn.isEmpty) inlinedIds else Nil
-    val newDeletes1 = newDeletes0.filter(col("file_path") =!= InlinedFile)
     // rows flushed from inlined data earlier in this txn live in a file
     // the catalog does not know yet — a positional delete against it
     // cannot be registered; fail loudly instead of dropping the delete
     txn.foreach { st =>
       st.flushes.get(t.tableId).foreach { case (_, pf) =>
-        if (newDeletes1.filter(col("file_path") === pf.path)
-            .limit(1).count() > 0)
+        if (perFile0.contains(pf.path))
           throw new UnsupportedOperationException(
             "cannot DELETE rows flushed from inlined data in the same " +
               "transaction — commit the flush first")
@@ -3026,34 +3002,18 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
     }
     // deletes hitting rows inserted by the SAME transaction rewrite the
     // staged (uncommitted) files in place — no delete file needed, the
-    // rows simply never commit (reference transaction-local delete).
-    // The matched positions are materialized FIRST: the lazy plan reads
-    // the staged files, which the rewrite below replaces on disk.
-    val (newDeletes, pendingDeleted) = txn match {
-      case Some(st) if st.pendingPaths(t.tableId).nonEmpty =>
-        val pending = st.pendingPaths(t.tableId)
-        val tmpRel = s"$name/txnpos-${UUID.randomUUID()}"
-        newDeletes1.write.parquet(io.abs(tmpRel))
-        st.scratchDirs += tmpRel
-        val mat = spark.read.parquet(io.abs(tmpRel))
-        // driver only ever holds per-file COUNTS (bounded by the number
-        // of staged files); the hit positions themselves stay in the
-        // scratch parquet and are applied with a distributed anti-join —
-        // a txn that inserts 100M rows and deletes them all never funnels
-        // positions through the driver
-        val matPending = mat.filter(col("file_path").isin(pending.toSeq: _*))
-        val hitCounts = matPending
-          .groupBy("file_path").agg(count(lit(1)).as("n"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        val removed =
-          if (hitCounts.nonEmpty)
-            rewritePendingFiles(st, t, name, hitCounts, matPending)
-          else 0L
-        (mat.filter(!col("file_path").isin(pending.toSeq: _*)), removed)
-      case _ => (newDeletes1, 0L)
-    }
-    val perFile = newDeletes.groupBy("file_path").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    // rows simply never commit (reference transaction-local delete). The
+    // positions are checkpointed, so the rewrite replacing the staged
+    // files on disk cannot change them.
+    val pending = txn.map(_.pendingPaths(t.tableId)).getOrElse(Set.empty)
+    val hitCounts = perFile0.filter { case (p, _) => pending.contains(p) }
+    val pendingDeleted =
+      if (hitCounts.isEmpty) 0L
+      else rewritePendingFiles(txn.get, t, name, hitCounts,
+        positions.filter(col("file_path").isin(hitCounts.keys.toSeq: _*)))
+    val perFile = perFile0 -- hitCounts.keys - InlinedFile
+    val newDeletes = if (perFile.size == perFile0.size) positions
+      else positions.filter(col("file_path").isin(perFile.keys.toSeq: _*))
     if (perFile.isEmpty && newFiles.isEmpty) {
       if (endIds.nonEmpty) meta.endInlinedRows(t.tableId, endIds): Unit
       return inlinedIds.size.toLong + pendingDeleted
@@ -3086,38 +3046,41 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
       return newlyDeleted + inlinedIds.size + pendingDeleted
     }
 
-    // union with previous live deletes for the affected files — including
-    // delete files buffered earlier in the same transaction and inlined
-    // delete rows (the new delete FILE absorbs them at commit)
-    val prevCommitted =
-      meta.liveDeleteFiles(t.tableId, snap.snapshotId, affectedIds)
+    // union with previous live deletes for the affected files: each
+    // file's ONE live delete file (one buffered earlier in the same
+    // transaction supersedes the committed one) and its inlined delete
+    // rows; the new delete FILE absorbs them at commit
     val bufPrev = txn.flatMap(_.deletes.get(t.tableId)).map(_._1)
       .getOrElse(scala.collection.mutable.LinkedHashMap
         .empty[Long, (String, Long, Long, String)])
-    val prevEntries = prevCommitted.values.toSeq ++
-      bufPrev.collect { case (fid, (p, n, _, fmt))
-        if affectedIds.contains(fid) =>
+    val prevEntries = (meta.liveDeleteFiles(t.tableId, snap.snapshotId,
+      affectedIds) ++ bufPrev.collect { case (fid, (p, n, _, fmt))
+        if affectedIds.contains(fid) => fid ->
         DeleteFileEntry(-1L, t.tableId, snap.snapshotId, None, fid, p, n, fmt)
-      }
+      }).values.toSeq
     val relById = files.map(f => f.file.dataFileId -> f.file.path).toMap
     val prevInlined = meta.liveInlinedDeletes(t.tableId, snap.snapshotId)
       .collect { case (fid, pos) if affectedIds.contains(fid) =>
         (relById(fid), pos)
       }
-    val prevInlinedDf =
-      if (prevInlined.isEmpty) None
-      else {
-        import spark.implicits._
-        Some(prevInlined.toDF("file_path", "pos"))
-      }
-    val prevRows = (deleteRowsDf(prevEntries, relById).toSeq ++ prevInlinedDf)
+    import spark.implicits._
+    val prevRows = (deleteRowsDf(prevEntries, relById, exact = true).toSeq ++
+      Option.when(prevInlined.nonEmpty)(prevInlined.toDF("file_path", "pos")))
       .reduceOption(_ unionByName _)
-      .map(_.filter(col("file_path").isin(perFile.keys.toSeq: _*))
-        .distinct())
-    val all = prevRows.map(newDeletes.unionByName(_).distinct())
-      .getOrElse(newDeletes)
+      // a delete file buffered in this transaction already absorbed the
+      // committed inlined rows; outside one the sources are disjoint
+      .map(rows => if (txn.isDefined) rows.distinct() else rows)
+    // new positions were live in this statement's scan: disjoint from
+    // every earlier delete, so the union needs no second distinct, and
+    // outside a transaction each file's total is known without a job
+    val all = prevRows.map(newDeletes.unionByName(_)).getOrElse(newDeletes)
+    val totals = Option.when(txn.isEmpty)(perFile.map { case (rel, n) =>
+      rel -> (n + prevEntries.filter(_.dataFileId == byRel(rel).dataFileId)
+        .map(_.deleteCount).sum + prevInlined.count(_._1 == rel))
+    })
 
-    val (deletes, useDv) = writeDeleteArtifacts(name, all, perFile.size, byRel)
+    val (deletes, useDv) =
+      writeDeleteArtifacts(name, all, perFile.size, byRel, totals)
     txn match {
       case Some(st) => // buffer: supersedes earlier txn deletes per file
         val (m, removed) = st.deletes.getOrElse(t.tableId,
@@ -3144,16 +3107,21 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
     * never funnel through a single task and never collect() to the driver
     * — a 10⁹-row bulk delete stays distributed; the driver only sees
     * (file, path, count, size) tuples, one per affected data file).
+    * `totals` (positions per data file), when the caller knows them,
+    * spare a one-part Parquet write the job that counts them back.
     * Reference: ducklake_delete.cpp:36-206. Returns the per-data-file
     * artifact tuples and whether the DV format was used. */
   private def writeDeleteArtifacts(name: String, all: DataFrame,
-      nFilesHint: Int, byRel: Map[String, DataFileEntry])
+      nFilesHint: Int, byRel: Map[String, DataFileEntry],
+      totals: Option[Map[String, Long]] = None)
       : (Seq[(Long, String, Long, Long)], Boolean) = {
     val useDv = meta.getOption("write_deletion_vectors").contains("true")
     val nParts = math.max(1, math.min(
       spark.conf.get("spark.sql.shuffle.partitions").toInt,
       math.max(nFilesHint, 1)))
-    val shuffled = all.repartition(nParts, col("file_path"))
+    // one part needs no shuffle: every position goes to the single task
+    val shuffled = (if (nParts == 1) all.coalesce(1)
+      else all.repartition(nParts, col("file_path")))
       .sortWithinPartitions("file_path", "pos")
     val deletes =
       if (useDv) {
@@ -3197,19 +3165,27 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
         // parts move to final names and map back to their data files
         val delStageRel = s"$name/delstage-${UUID.randomUUID()}"
         shuffled.write.options(cryptoOpts).parquet(io.abs(delStageRel))
-        val staged = pqRead.parquet(io.abs(delStageRel))
-          .groupBy(input_file_name().as("__part"), col("file_path"))
-          .agg(count(lit(1)).as("n")).collect()
-        val moved = staged.map(_.getString(0)).distinct.map { p =>
+        val parts = io.listRecursive(delStageRel).filter(_.endsWith(".parquet"))
+        // (part file, data file, positions): one part holds every known
+        // total; else one job counts them back
+        val staged = totals match {
+          case Some(ts) if parts.size == 1 =>
+            ts.toSeq.map { case (data, n) => (io.abs(parts.head), data, n) }
+          case _ => pqRead.schema(all.schema).parquet(io.abs(delStageRel))
+            .select(input_file_name(), col("file_path")).rdd
+            .map(r => (r.getString(0), r.getString(1))).countByValue().toSeq
+            .map { case ((part, data), n) => (new org.apache.hadoop.fs.Path(
+              new java.net.URI(part)).toString, data, n) }
+        }
+        val moved = staged.map(_._1).distinct.map { p =>
           val rel = s"$name/ducklake-delete-${UUID.randomUUID()}.parquet"
-          io.move(new org.apache.hadoop.fs.Path(
-            new java.net.URI(p)).toString, rel)
+          io.move(p, rel)
           p -> ((rel, io.size(rel)))
         }.toMap
         io.deleteRecursively(delStageRel)
-        staged.toSeq.map { r =>
-          val (rel, size) = moved(r.getString(0))
-          (byRel(r.getString(1)).dataFileId, rel, r.getLong(2), size)
+        staged.map { case (part, data, n) =>
+          val (rel, size) = moved(part)
+          (byRel(data).dataFileId, rel, n, size)
         }
       }
     (deletes, useDv)
@@ -3246,13 +3222,10 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
 
   /** DELETE hitting rows staged by the open transaction: rewrite those
     * staged files without the matched positions (all-rows-hit files are
-    * simply dropped from the buffer). Returns rows removed. */
-  /** Rewrite staged (uncommitted) files in place after a same-txn delete.
-    * `hitCounts` is driver-side but bounded by the number of staged files;
-    * the matched positions themselves arrive as `hitRows` (a scratch-
-    * parquet DataFrame of (file_path, pos)) and are removed with a
-    * per-file distributed anti-join — no position list ever materializes
-    * on the driver. */
+    * simply dropped from the buffer). Returns rows removed. `hitCounts`
+    * is bounded by the number of staged files; the positions arrive as
+    * `hitRows` (the statement's checkpointed (file_path, pos) rows) and
+    * are removed with a per-file distributed anti-join. */
   private def rewritePendingFiles(st: TxnState, t: TableInfo, name: String,
       hitCounts: Map[String, Long], hitRows: DataFrame): Long = {
     var removed = 0L
@@ -3276,8 +3249,8 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
                         .select(col("pos").as("__pos")),
                         Seq("__pos"), "left_anti")
                       .select(cols.map(c => col(c.name)): _*)
-                    val rel = writeAndCollectPlain(name, rows.coalesce(1))
-                    Some(statsFor(rel, cols).copy(
+                    Some(writeAndCollect(name, rows.coalesce(1), cols)
+                      .head.copy(
                       partitionValues = f.partitionValues,
                       mappingId = f.mappingId))
                   }
@@ -3300,80 +3273,70 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
     val t = resolve(name, Some(snap.snapshotId))
     val updAllCols = columnsAt(t.tableId, snap.snapshotId)
     val cols = updAllCols.filter(_.parentColumn.isEmpty)
-    val matched = scan(name, snap, Some(cond), withMeta = true).filter(cond)
-    // updated rows KEEP their row ids (reference ducklake_row_id_update
-    // .test; DuckLakeUpdate materializes row_id into the insert,
-    // ducklake_update.cpp:158-163): the rewrite file carries the
-    // materialized rowid column, snapshot_id NULL → the scan serves the
-    // file's own begin snapshot. Inside a transaction rowids of staged
-    // rows are provisional, so the txn path keeps fresh ids.
-    val preserveIds = txn.isEmpty
-    val baseCols = cols.map(c =>
+    val image = cols.map(c =>
       assignments.get(c.name)
         .map(_.cast(DuckLakeTypes.fromTypeString(c.typeString)).as(c.name))
         .getOrElse(col(c.name)))
-    // small updates stay in the catalog: old versions become inlined
-    // deletes, rewritten rows re-inline WITH their row ids — one
-    // snapshot, no new parquet (reference
-    // data_inlining_update_inline_verification.test)
-    val updInlineLimit = optionFor(name, "data_inlining_row_limit")
-      .map(_.toInt).getOrElse(0)
-    if (txn.isEmpty && updInlineLimit > 0) {
-      val sample = matched.select(
-        to_json(struct(baseCols: _*)).as("j"), col("rowid"),
-        col("filename"), col("file_row_number"))
-        .limit(updInlineLimit + 1).collect()
-      if (sample.length <= updInlineLimit) {
-        if (sample.isEmpty) return 0L
-        val (inl, fileRows) = sample.toSeq
-          .partition(_.getAs[String]("filename") == InlinedFile)
+    val matched = scan(name, snap, Some(cond), withMeta = true)
+      .select(image ++ Seq(col("rowid").as("__rowid"),
+        col("filename").as("__file"), col("file_row_number").as("__pos")): _*)
+    val n = withMatched(matched, None) { (rows, perFile) =>
+      val total = perFile.values.sum
+      // small updates stay in the catalog: old versions become inlined
+      // deletes, rewritten rows re-inline WITH their row ids — one
+      // snapshot, no new parquet (reference
+      // data_inlining_update_inline_verification.test)
+      val updInlineLimit = optionFor(name, "data_inlining_row_limit")
+        .map(_.toLong).getOrElse(0L)
+      if (total == 0L) 0L
+      else if (txn.isEmpty && total <= updInlineLimit) {
+        val sample = rows.select(to_json(struct(cols.map(c => col(c.name)): _*))
+          .as("j"), col("__rowid"), col("__file"), col("__pos")).collect().toSeq
+        val (inl, fileRows) = sample.partition(_.getString(2) == InlinedFile)
         val byPath = meta.filesForScan(t.tableId, snap.snapshotId)
           .map(f => f.file.path -> f.file.dataFileId).toMap
         val dels = fileRows.map { r =>
-          val p = r.getAs[String]("filename")
-          (byPath.getOrElse(p, throw new IllegalStateException(
-            s"matched row from unknown file $p")),
-            r.getAs[Long]("file_row_number"))
+          (byPath.getOrElse(r.getString(2), throw new IllegalStateException(
+            s"matched row from unknown file ${r.getString(2)}")), r.getLong(3))
         }
         meta.inlineUpdate(t.tableId, snap.snapshotId, dels,
-          inl.map(_.getAs[Long]("rowid")),
-          sample.toSeq.map(r =>
-            (r.getAs[Long]("rowid"), r.getAs[String]("j"))))
-        maybeAutoRefresh(name)
-        return sample.length.toLong
+          inl.map(_.getLong(1)), sample.map(r => (r.getLong(1), r.getString(0))))
+        total
+      } else {
+        // updated rows KEEP their row ids (reference ducklake_row_id_update
+        // .test; DuckLakeUpdate materializes row_id into the insert,
+        // ducklake_update.cpp:158-163): the rewrite file carries the
+        // materialized rowid column, snapshot_id NULL → the scan serves the
+        // file's own begin snapshot. Inside a transaction rowids of staged
+        // rows are provisional, so the txn path keeps fresh ids.
+        val preserveIds = txn.isEmpty
+        val rewritten = rows.select(cols.map(c => col(c.name)) ++
+          (if (preserveIds) Seq(col("__rowid").as(RowIdCol),
+            lit(null).cast(LongType).as(SnapCol)) else Nil): _*)
+        // rewritten rows re-partition under the live spec (reference
+        // update_partitioning.test / update_partition_function.test): files
+        // land in the right hive dirs WITH partition values, so post-UPDATE
+        // queries keep pruning
+        val updSpec = effectivePartitionSpec(t, snap.snapshotId)
+        val newFiles = writeAndCollect(name, rewritten, cols,
+          partition = updSpec.map(partitionPlan(_, cols)),
+          allCols = updAllCols).map(f => f.copy(hasRowIds = preserveIds))
+        deleteByPosition(name, t, snap, positionsOf(rows), perFile, newFiles,
+          newFilesPartitionId = updSpec.map(_.partitionId))
       }
     }
-    val rewrittenCols: Seq[Column] =
-      if (preserveIds) baseCols :+ col("rowid").as(RowIdCol) :+
-        lit(null).cast(LongType).as(SnapCol)
-      else baseCols
-    val rewritten = matched.select(rewrittenCols: _*)
-    // rewritten rows re-partition under the live spec (reference
-    // update_partitioning.test / update_partition_function.test): files
-    // land in the right hive dirs WITH partition values, so post-UPDATE
-    // queries keep pruning
-    val updSpec = effectivePartitionSpec(t, snap.snapshotId)
-    val newFiles = writeAndCollect(name, rewritten, cols,
-      partition = updSpec.map(partitionPlan(_, cols)),
-      allCols = updAllCols).map(f => f.copy(hasRowIds = preserveIds))
-    val positions = matched.select(col("filename").as("file_path"),
-      col("file_row_number").as("pos"))
-    val n = deleteByPosition(name, t, snap, positions, newFiles,
-      newFilesPartitionId = updSpec.map(_.partitionId))
     if (n > 0) maybeAutoRefresh(name)
     n
   }
 
   /** MERGE INTO (reference ducklake_merge_into.cpp:489-634): source vs
-    * target on a key; MATCHED UPDATE / DELETE, NOT MATCHED INSERT. At most
-    * one update/delete action, like the reference. Errors if the same
-    * target row matches twice (multi-update guard). */
-  /** MERGE INTO: matched update/delete (optionally gated by
-    * `matchedCondition` — `WHEN MATCHED AND cond`), not-matched insert
+    * target on a key; at most one MATCHED update/delete (optionally gated
+    * by `matchedCondition` — `WHEN MATCHED AND cond`), not-matched insert
     * (optionally gated by `notMatchedCondition`), and
     * `notMatchedBySourceDelete` (`WHEN NOT MATCHED BY SOURCE [AND cond]
-    * THEN DELETE`). Conditions reference columns via the `t`/`s` aliases.
-    * Matched rows failing the condition are untouched. */
+    * THEN DELETE`). Conditions reference columns via the `t`/`s` aliases;
+    * matched rows failing the condition are untouched. Errors if the same
+    * target row matches twice (multi-update guard). */
   def merge(name: String, source: DataFrame, onKey: String,
       whenMatchedUpdate: Option[Map[String, Column]] = None,
       whenMatchedDelete: Boolean = false,
@@ -3421,114 +3384,103 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
     val t = resolve(name, Some(snap.snapshotId))
     val mrgAllCols = columnsAt(t.tableId, snap.snapshotId)
     val cols = mrgAllCols.filter(_.parentColumn.isEmpty)
-    val target = scan(name, snap, None, withMeta = true)
-    val src = source.alias("s")
-    val tgt = target.alias("t")
-    def onCond = onKeys.map(k => col(s"t.$k") === col(s"s.$k"))
-      .reduce(_ && _)
-    val joined0 = tgt.join(src, onCond, "inner")
-
-    val dupes = joined0.groupBy(col("t.rowid")).agg(count(lit(1)).as("n"))
-      .filter(col("n") > 1).limit(1).collect()
-    if (dupes.nonEmpty) throw new IllegalStateException(
-      "The same row was updated multiple times") // reference error text
-
+    val unknown = notMatchedInsertValues.toSeq.flatten.map(_._1)
+      .filterNot(n => cols.exists(_.name == n))
+    require(unknown.isEmpty, s"unknown column(s) ${unknown.mkString(", ")}" +
+      " in MERGE INSERT; table has " + cols.map(_.name).mkString(", "))
+    // ONE join of source and target reads each side once: matched pairs,
+    // plus source rows without a match when the MERGE inserts, plus
+    // target rows without a match when it deletes by source. `__kind`
+    // says which of the three a row is.
+    val tgt = scan(name, snap, None, withMeta = true).alias("t")
+    val src = source.withColumn("__src", lit(true)).alias("s")
+    val onCond = onKeys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _)
+    val joinType = (whenNotMatchedInsert, notMatchedBySourceDelete.isDefined)
+    match {
+      case (true, true) => "full_outer"
+      case (true, false) => "right_outer"
+      case (false, true) => "left_outer"
+      case (false, false) => "inner"
+    }
+    val (matched, notMatched, bySource) = (0, 1, 2)
+    val kind = col("__kind")
     // first-match-wins clause selection: one CASE over the ordered
-    // conditions picks each row's action index (-1 = no clause applies)
+    // conditions picks each matched row's action index (-1 = no clause)
     val actIdx = matchedActions.zipWithIndex.foldRight(lit(-1)) {
       case ((a, i), acc) =>
         when(a.condition.getOrElse(lit(true)), lit(i)).otherwise(acc)
     }
-    val joined = joined0.withColumn("__act", actIdx)
-      .filter(col("__act") >= 0)
-
-    // positions leaving the table: matched rows claimed by ANY clause
-    // (updates rewrite them, deletes remove them) + not-matched-by-source
-    val matchedPositions0 =
-      if (matchedActions.nonEmpty)
-        Some(joined.select(col("t.filename").as("file_path"),
-          col("t.file_row_number").as("pos")))
-      else None
-    // WHEN NOT MATCHED BY SOURCE [AND cond] THEN DELETE
-    val bySourceDeletes = notMatchedBySourceDelete.map { cond =>
-      tgt.join(src, onCond, "left_anti")
-        .filter(cond)
-        .select(col("t.filename").as("file_path"),
-          col("t.file_row_number").as("pos"))
-    }
-    val positionsOut = (matchedPositions0.toSeq ++ bySourceDeletes)
-      .reduceOption(_ unionByName _)
-
-    val inserts: Option[DataFrame] =
-      if (whenNotMatchedInsert) Some {
-        val anti = src.join(tgt, onCond, "left_anti")
-        val gated = notMatchedCondition.map(anti.filter).getOrElse(anti)
-        // INSERT (a, b) VALUES (…): explicit per-column values; columns
-        // absent from the list read their table default (reference
-        // ducklake_merge_into.cpp per-action column-list binding)
-        notMatchedInsertValues match {
-          case Some(vals) => alignColumns(
-            gated.select(vals.map { case (n, v) => v.as(n) }: _*), cols)
-          case None => gated
-        }
-      } else None
-
-    // rows claimed by an UPDATE clause rewrite under THAT clause's
-    // assignments: per column, a CASE keyed on the action index
     val updates = matchedActions.zipWithIndex.collect {
       case (u: MatchedUpdate, i) => (u, i)
     }
+    // each kept row's image in the table's columns: a matched row under
+    // ITS clause's assignments (per column, a CASE keyed on the action
+    // index), a not-matched row as the inserted values (source columns by
+    // name, or INSERT (a, b) VALUES (…) with table defaults elsewhere —
+    // reference ducklake_merge_into.cpp per-action column-list binding)
+    val image = cols.map { c =>
+      val dt = DuckLakeTypes.fromTypeString(c.typeString)
+      val upd = updates.foldRight(col(s"t.${c.name}").cast(dt)) {
+        case ((u, i), acc) =>
+          u.assignments.get(c.name)
+            .map(v => when(col("__act") === i, v.cast(dt)).otherwise(acc))
+            .getOrElse(acc)
+      }
+      val ins = notMatchedInsertValues match {
+        case _ if !whenNotMatchedInsert => None
+        case Some(vals) => Some(vals.toMap.get(c.name).map(_.cast(dt))
+          .getOrElse(lit(c.defaultValue.orNull).cast(dt)))
+        case None => Some(col(s"s.${c.name}").cast(dt))
+      }
+      ins.fold(upd)(when(kind === notMatched, _).otherwise(upd)).as(c.name)
+    }
+    val plan = tgt.join(src, onCond, joinType)
+      .withColumn("__kind", when(col("s.__src").isNull, bySource)
+        .when(col("t.filename").isNull, notMatched).otherwise(matched))
+      .withColumn("__act", actIdx)
+      .filter(kind === matched ||
+        kind === notMatched && notMatchedCondition.getOrElse(lit(true)) ||
+        kind === bySource && notMatchedBySourceDelete.getOrElse(lit(false)))
+      .select(image ++ Seq(kind, col("__act"), col("t.rowid").as("__rowid"),
+        col("t.filename").as("__file"),
+        col("t.file_row_number").as("__pos")): _*)
+    // rows leaving the table: matched rows claimed by ANY clause (updates
+    // rewrite them, deletes remove them) + not-matched-by-source deletes
+    val leaves = kind === matched && col("__act") >= 0 || kind === bySource
     // MERGE-updated rows keep their row ids like UPDATE (reference
     // ducklake_row_id_update.test exercises exactly this merged-update
     // shape); txn-staged rows have provisional ids, so keep fresh ones
     val preserveIds = txn.isEmpty
-    val rewrittenMatched: Option[DataFrame] =
-      if (updates.isEmpty) None
-      else Some {
-        val baseCols = cols.map { c =>
-          val dt = DuckLakeTypes.fromTypeString(c.typeString)
-          updates.foldRight(col(s"t.${c.name}")) {
-            case ((u, i), acc) =>
-              u.assignments.get(c.name)
-                .map(v => when(col("__act") === i, v.cast(dt))
-                  .otherwise(acc))
-                .getOrElse(acc)
-          }.as(c.name)
-        }
-        val outCols: Seq[Column] =
-          if (preserveIds) baseCols :+ col("t.rowid").as(RowIdCol) :+
-            lit(null).cast(LongType).as(SnapCol)
-          else baseCols
-        joined.filter(col("__act").isin(updates.map(_._2): _*))
-          .select(outCols: _*)
-      }
-
     val mrgSpec = effectivePartitionSpec(t, snap.snapshotId)
-    val n = positionsOut match {
-      case Some(pos) =>
-        // rewritten (rowid-materialized) and inserted (fresh-id) rows go
-        // to SEPARATE files: one carries the materialized columns, the
-        // other draws from row_id_start
-        val updFiles = rewrittenMatched.map(df =>
-          writeAndCollect(name, df, cols,
-            partition = mrgSpec.map(partitionPlan(_, cols)),
-            allCols = mrgAllCols).map(_.copy(hasRowIds = preserveIds)))
-          .getOrElse(Nil)
-        val insFiles = inserts.map(b =>
-          writeAndCollect(name,
-            alignColumns(b.select(cols.map(c => col(c.name)): _*), cols),
-            cols, partition = mrgSpec.map(partitionPlan(_, cols)),
-            allCols = mrgAllCols)).getOrElse(Nil)
-        deleteByPosition(name, t, snap, pos, updFiles ++ insFiles,
-          newFilesPartitionId = mrgSpec.map(_.partitionId)) +
-          insFiles.map(_.recordCount).sum
-      case None =>
+    def write(df: DataFrame) = writeAndCollect(name, df, cols,
+      partition = mrgSpec.map(partitionPlan(_, cols)), allCols = mrgAllCols)
+    val n = withMatched(plan, Some(leaves)) { (rows, perFile) =>
+      val inserts = rows.filter(kind === notMatched)
+        .select(cols.map(c => col(c.name)): _*)
+      if (matchedActions.isEmpty && notMatchedBySourceDelete.isEmpty) {
         // insert-only MERGE is a plain append: small batches inline
         // below data_inlining_row_limit instead of writing parquet
         // (reference data_inlining_merge_insert_only.test) and
         // sort-on-insert applies
-        inserts.map(df => insert(name, df.select(
-          cols.map(c => col(c.name)): _*))).getOrElse(0L)
+        if (whenNotMatchedInsert) insert(name, inserts) else 0L
+      } else {
+        // rewritten (rowid-materialized) and inserted (fresh-id) rows go
+        // to SEPARATE files: one carries the materialized columns, the
+        // other draws from row_id_start
+        val updFiles =
+          if (updates.isEmpty) Nil
+          else write(rows
+            .filter(kind === matched && col("__act").isin(updates.map(_._2): _*))
+            .select(cols.map(c => col(c.name)) ++
+              (if (preserveIds) Seq(col("__rowid").as(RowIdCol),
+                lit(null).cast(LongType).as(SnapCol)) else Nil): _*))
+            .map(_.copy(hasRowIds = preserveIds))
+        val insFiles = if (whenNotMatchedInsert) write(inserts) else Nil
+        deleteByPosition(name, t, snap, positionsOf(rows.filter(leaves)),
+          perFile, updFiles ++ insFiles,
+          newFilesPartitionId = mrgSpec.map(_.partitionId)) +
+          insFiles.map(_.recordCount).sum
+      }
     }
     maybeAutoRefresh(name)
     n
@@ -3619,7 +3571,7 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
     // each position's deletion snapshot = the EARLIEST range delete
     // file containing it (later files absorb earlier ones)
     val delRows =
-      (deleteRowsWithSnap(created.map(_._1), relById).toSeq ++ inlRowsDf)
+      (deleteRowsDf(created.map(_._1), relById, withSnap = true).toSeq ++ inlRowsDf)
         .reduce(_ unionByName _)
         .groupBy(col("file_path"), col("pos"))
         .agg(min(col("del_snap")).as("del_snap"))
@@ -3741,12 +3693,11 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
         if (sortSpec.isEmpty) one
         else one.sortWithinPartitions(
           sortSpec.map((sortKey _).tupled): _*)
-      val merged = writeAndCollectPlain(name, shaped)
       // the sortWithinPartitions above runs on the already-coalesced single
       // partition, so the one merged file is genuinely in spec order —
       // compaction is the path that RESTORES writtenSorted after updates
-      val statsFiles = statsFor(merged, cols, allCols = allCols)
-        .copy(partitionValues = pv, hasRowIds = true,
+      val statsFiles = writeAndCollect(name, shaped, cols, allCols = allCols)
+        .head.copy(partitionValues = pv, hasRowIds = true,
           writtenSorted = sortSpec.nonEmpty)
       meta.commitCompaction(t.tableId, group.map(_.file.dataFileId),
         statsFiles, group.head.file.rowIdStart,
@@ -3800,9 +3751,8 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
         inlinedDeletes = meta.liveInlinedDeletes(t.tableId, snap.snapshotId))
         .select((cols.map(c => col(c.name)) :+
           col("rowid").as(RowIdCol) :+ col("snapshot_id").as(SnapCol)): _*)
-      val merged = writeAndCollectPlain(name, rows.coalesce(1))
-      val stats = statsFor(merged, cols, allCols = allCols)
-        .copy(partitionValues =
+      val stats = writeAndCollect(name, rows.coalesce(1), cols,
+        allCols = allCols).head.copy(partitionValues =
           partVals.getOrElse(f.file.dataFileId, Nil), hasRowIds = true)
       meta.commitCompaction(t.tableId, Seq(f.file.dataFileId), stats,
         f.file.rowIdStart,
@@ -3815,18 +3765,6 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
 
   private implicit class MaxOps(s: Seq[Long]) {
     def max0: Long = if (s.isEmpty) 0L else s.max
-  }
-
-  /** write a (small) DataFrame as one parquet file, return its rel path */
-  private def writeAndCollectPlain(table: String, df: DataFrame): String = {
-    val stagingRel = s"$table/stage-${UUID.randomUUID()}"
-    df.write.options(writeOpts(table)).parquet(io.abs(stagingRel))
-    val part = io.listFiles(stagingRel)
-      .find(_.endsWith(".parquet")).get
-    val finalName = s"ducklake-${UUID.randomUUID()}.parquet"
-    io.move(part, s"$table/$finalName")
-    io.deleteRecursively(stagingRel)
-    s"$table/$finalName"
   }
 
   /** Per-file stats over table columns in ONE aggregation job; `srcNames`
@@ -3842,84 +3780,102 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
     // their min=max=value stats ride the same single pass (reference
     // MapColumnStats hive loop, ducklake_add_data_files.cpp:1119-1146)
     val hiveById = hiveConsts.toMap
-    val dfH = hiveConsts.foldLeft(pqRead.parquet(abs(relPath))) {
+    val df = hiveConsts.foldLeft(pqRead.parquet(abs(relPath))) {
       case (d, (cid, v)) =>
         val ci = cols.find(_.columnId == cid).get
         d.withColumn(s"__hive_$cid",
           lit(v.orNull).cast(DuckLakeTypes.fromTypeString(ci.typeString)))
     }
-    val df0 = dfH
-    def srcOf(c: ColumnInfo): Option[String] =
-      if (hiveById.contains(c.columnId)) Some(s"__hive_${c.columnId}")
-      else if (srcNames.isEmpty) Some(c.name)
-      else srcNames.get(c.columnId)
-    def isGeo(c: ColumnInfo): Boolean = c.typeString == "geometry"
-    // geometry columns: parse each WKB once into an extent struct, then
-    // plain min/max aggregates over its fields (reference
-    // DuckLakeColumnGeoStats collection at write)
-    val geoCols = cols.filter(c => isGeo(c) && srcOf(c).isDefined)
     // nested geometry/leaf stats only for same-named layouts (name-mapped
     // foreign files would need per-field path mapping)
-    val nestedGeo =
-      if (srcNames.isEmpty) nestedGeoSpecs(allCols) else Nil
-    val nestedLeaves =
-      if (srcNames.isEmpty) nestedLeafSpecs(allCols) else Nil
-    val df1 = geoCols.foldLeft(df0)((d, c) =>
-      d.withColumn(s"__geo_${c.columnId}",
-        graft.functions.GeoFunctions.geoExtent(col(srcOf(c).get))))
-    val df = nestedGeo.foldLeft(df1) { case (d, (ci, ex)) =>
-      d.withColumn(s"__ngeo_${ci.columnId}", ex)
+    val pass = statsPass(if (srcNames.isEmpty) allCols else Nil, cols, c =>
+      if (hiveById.contains(c.columnId)) Some(s"__hive_${c.columnId}")
+      else if (srcNames.isEmpty) Some(c.name)
+      else srcNames.get(c.columnId), Nil)
+    val (rows, stats, _) = pass.decode(pass.prepare(df)
+      .agg(pass.aggs.head, pass.aggs.tail: _*).collect()(0))
+    PendingDataFile(relPath, rows, io.size(relPath), stats)
+  }
+
+  /** One aggregation pass of per-file stats over a frame whose `srcOf(c)`
+    * column holds table column c (None: absent, all NULL): `prepare`
+    * adds the geometry extents (each WKB parsed once, reference
+    * DuckLakeColumnGeoStats), `aggs` aggregate, and `decode` turns a
+    * result row into (rows, column stats, shredded variant path stats).
+    * Nested geometry and scalar leaves (struct fields, list elements,
+    * map keys/values) of `allCols` get per-leaf stats in the same pass. */
+  private case class StatsPass(prepare: DataFrame => DataFrame,
+      aggs: Seq[Column], decode: org.apache.spark.sql.Row =>
+        (Long, Seq[FileColumnStats], Seq[VariantPathStats]))
+
+  private def statsPass(allCols: Seq[ColumnInfo], cols: Seq[ColumnInfo],
+      srcOf: ColumnInfo => Option[String],
+      shredded: Seq[(ColumnInfo, String, DataType)]): StatsPass = {
+    def isGeo(c: ColumnInfo) = c.typeString == "geometry"
+    def isFloat(dt: DataType) = dt == DoubleType || dt == FloatType
+    val geoCols = cols.filter(c => isGeo(c) && srcOf(c).isDefined)
+    val nestedGeo = nestedGeoSpecs(allCols)
+    val nestedLeaves = nestedLeafSpecs(allCols)
+    def prepare(df: DataFrame) = nestedGeo.foldLeft(geoCols.foldLeft(df)(
+      (d, c) => d.withColumn(s"__geo_${c.columnId}",
+        graft.functions.GeoFunctions.geoExtent(col(srcOf(c).get))))) {
+      case (d, (ci, ex)) => d.withColumn(s"__ngeo_${ci.columnId}", ex)
     }
-    val nestedAggs = nestedGeo.flatMap { case (ci, _) =>
+    val aggs = Seq(count(lit(1)).as("__rows")) ++ cols.flatMap { c =>
+      val dt = DuckLakeTypes.fromTypeString(c.typeString)
+      srcOf(c).toSeq.flatMap { src =>
+        val v = col(src).cast(dt)
+        val cnt = count(col(src)).as(s"cnt_${c.columnId}")
+        if (isGeo(c)) graft.functions.GeoStatsAgg.aggs(
+          col(s"__geo_${c.columnId}"), c.columnId.toString) :+ cnt
+        else if (!StatsCodec.statsSupported(dt)) Seq(cnt)
+        else Seq(min(v).as(s"min_${c.columnId}"),
+          max(v).as(s"max_${c.columnId}"), cnt) ++ Option.when(isFloat(dt))(
+          sum(when(isnan(v), 1L).otherwise(0L)).as(s"nan_${c.columnId}"))
+      }
+    } ++ nestedGeo.flatMap { case (ci, _) =>
       graft.functions.GeoStatsAgg.aggs(
         col(s"__ngeo_${ci.columnId}"), s"n${ci.columnId}") :+
         count(col(s"__ngeo_${ci.columnId}")).as(s"ncnt_${ci.columnId}")
+    } ++ shredded.zipWithIndex.flatMap { case ((ci, path, dt), i) =>
+      val g = variant_get(col(ci.name), path, dt.sql)
+      Seq(min(g).as(s"vmin_$i"), max(g).as(s"vmax_$i"),
+        count(g).as(s"vcnt_$i"))
     } ++ nestedLeaves.flatMap((nestedLeafAggs _).tupled)
-    val aggs = (count(lit(1)).as("__rows") +: nestedAggs) ++
-      cols.flatMap { c =>
-      val dt = DuckLakeTypes.fromTypeString(c.typeString)
-      srcOf(c) match {
-        case Some(src) if isGeo(c) =>
-          graft.functions.GeoStatsAgg.aggs(
-            col(s"__geo_${c.columnId}"), c.columnId.toString) :+
-            count(col(src)).as(s"cnt_${c.columnId}")
-        case Some(src) if StatsCodec.statsSupported(dt) =>
-          Seq(min(col(src).cast(dt)).as(s"min_${c.columnId}"),
-            max(col(src).cast(dt)).as(s"max_${c.columnId}"),
-            count(col(src)).as(s"cnt_${c.columnId}"))
-        case Some(src) => // no min/max for the type, but nulls still count
-          Seq(count(col(src)).as(s"cnt_${c.columnId}"))
-        case None => Nil
+    def decode(r: org.apache.spark.sql.Row) = {
+      val rows = r.getAs[Long]("__rows")
+      def nulls(key: String) = rows - r.getAs[Long](key)
+      val stats = cols.map { c =>
+        val dt = DuckLakeTypes.fromTypeString(c.typeString)
+        val id = c.columnId
+        if (srcOf(c).isEmpty) FileColumnStats(id, None, None, rows)
+        else if (isGeo(c)) FileColumnStats(id, None, None, nulls(s"cnt_$id"),
+          extraStats = graft.functions.GeoStatsAgg.fromRow(r, id.toString))
+        else if (!StatsCodec.statsSupported(dt))
+          FileColumnStats(id, None, None, nulls(s"cnt_$id"))
+        else FileColumnStats(id,
+          StatsCodec.encode(r.getAs[Any](s"min_$id"), dt),
+          StatsCodec.encode(r.getAs[Any](s"max_$id"), dt), nulls(s"cnt_$id"),
+          if (isFloat(dt)) r.getAs[Long](s"nan_$id") else 0L,
+          numeric = StatsCodec.isNumeric(dt))
       }
-    }
-    val r = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-    val rows = r.getAs[Long]("__rows")
-    val stats = cols.map { c =>
-      val dt = DuckLakeTypes.fromTypeString(c.typeString)
-      srcOf(c) match {
-        case None => FileColumnStats(c.columnId, None, None, rows)
-        case Some(_) if isGeo(c) =>
-          FileColumnStats(c.columnId, None, None,
-            rows - r.getAs[Long](s"cnt_${c.columnId}"),
-            extraStats = graft.functions.GeoStatsAgg.fromRow(
-              r, c.columnId.toString))
-        case Some(_) if StatsCodec.statsSupported(dt) =>
-          FileColumnStats(c.columnId,
-            StatsCodec.encode(r.getAs[Any](s"min_${c.columnId}"), dt),
-            StatsCodec.encode(r.getAs[Any](s"max_${c.columnId}"), dt),
-            rows - r.getAs[Long](s"cnt_${c.columnId}"),
-            numeric = StatsCodec.isNumeric(dt))
-        case _ => FileColumnStats(c.columnId, None, None,
-          rows - r.getAs[Long](s"cnt_${c.columnId}"))
+      // nested geometry leaves: extent JSON under the leaf's own column
+      // id ("nulls" = rows with no parsable geometry on the path)
+      val nested = nestedGeo.map { case (ci, _) =>
+        FileColumnStats(ci.columnId, None, None, nulls(s"ncnt_${ci.columnId}"),
+          extraStats = graft.functions.GeoStatsAgg.fromRow(
+            r, s"n${ci.columnId}"))
+      } ++ nestedLeaves.map { case (ci, _, _) => nestedLeafStats(r, rows, ci) }
+      val varStats = shredded.zipWithIndex.map { case ((ci, path, dt), i) =>
+        VariantPathStats(ci.columnId, path,
+          StatsCodec.encode(r.getAs[Any](s"vmin_$i"), dt),
+          StatsCodec.encode(r.getAs[Any](s"vmax_$i"), dt),
+          nulls(s"vcnt_$i"), numeric = StatsCodec.isNumeric(dt),
+          shreddedType = Some(DuckLakeTypes.toTypeString(dt)))
       }
+      (rows, stats ++ nested, varStats)
     }
-    val nestedStats = nestedGeo.map { case (ci, _) =>
-      FileColumnStats(ci.columnId, None, None,
-        rows - r.getAs[Long](s"ncnt_${ci.columnId}"),
-        extraStats = graft.functions.GeoStatsAgg.fromRow(
-          r, s"n${ci.columnId}"))
-    } ++ nestedLeaves.map { case (ci, _, _) => nestedLeafStats(r, rows, ci) }
-    PendingDataFile(relPath, rows, io.size(relPath), stats ++ nestedStats)
+    StatsPass(prepare, aggs, decode)
   }
 
   def expireSnapshots(olderThanMs: Option[Long] = None,
@@ -5038,7 +4994,34 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
           case (g, l2) => g.orElse(l2)
         }
       }
-    val e1 = e.transformUp {
+    // NTZ column vs TIMESTAMP value: Spark's form casts the literal (folded
+    // here to the constant the row filter compares against); a cast of
+    // the COLUMN is a constant shift only in a fixed-offset zone, so in a
+    // zone with DST that conjunct stays Spark-side
+    def ntzShift(c: Cast) = {
+      val rules = java.time.ZoneId.of(c.timeZoneId.getOrElse(
+        spark.sessionState.conf.sessionLocalTimeZone)).getRules
+      Option.when(c.dataType == TimestampType && rules.isFixedOffset &&
+        colId(c.child).exists(_._2 == TimestampNTZType))(
+        rules.getOffset(java.time.Instant.EPOCH).getTotalSeconds * 1000000L)
+    }
+    val e0 = e.transformUp {
+      case c: Cast if c.child.isInstanceOf[Literal] =>
+        val tz = c.withTimeZone(c.timeZoneId.getOrElse(
+          spark.sessionState.conf.sessionLocalTimeZone))
+        if (tz.resolved) Literal(tz.eval(), tz.dataType) else c
+      case b: BinaryComparison =>
+        def shifted(c: Cast, v: Long) =
+          ntzShift(c).map(o => (c.child, Literal(v + o, TimestampNTZType)))
+        (b.children match {
+          case Seq(c: Cast, Literal(v: Long, TimestampType)) =>
+            shifted(c, v).map { case (a, l) => Seq(a, l) }
+          case Seq(Literal(v: Long, TimestampType), c: Cast) =>
+            shifted(c, v).map { case (a, l) => Seq(l, a) }
+          case _ => None
+        }).fold(b: Expression)(b.withNewChildren)
+    }
+    val e1 = e0.transformUp {
       case x @ GreaterThanOrEqual(YearOf(a), IntLit(y)) =>
         yearRange(a, Some(y), None).getOrElse(x)
       case x @ GreaterThan(YearOf(a), IntLit(y)) =>
@@ -5220,6 +5203,12 @@ object Lake {
 
   /** pseudo-filename for rows inlined in the catalog DB */
   val InlinedFile = "__ducklake_inlined__"
+
+  /** at most this many files: footers read on the driver, not in a job */
+  private val DriverFooterReads = 4
+  /** at most this many files per scan group: row-id info from a map
+    * literal, not a broadcast join (a job) */
+  private val MapLiteralFiles = 16
 
   /** data files are immutable → their physical schema is cacheable */
   private val fileSchemaCache =

@@ -131,16 +131,17 @@ final class LakeIO(val root: String) extends Serializable {
     }
   }
 
-  /** does any FILE with the given suffix exist under `rel`, recursive —
+  /** how many FILES with the given suffix exist under `rel`, recursive —
     * no path relativization (hive partition dirs may contain literal
     * spaces that java.net.URI rejects; Hadoop's own iterator is fine) */
-  def hasFileRecursive(rel: String, suffix: String): Boolean = {
+  def countFilesRecursive(rel: String, suffix: String): Int = {
     val d = p(rel)
-    if (!fs.exists(d)) return false
+    if (!fs.exists(d)) return 0
     val it = fs.listFiles(d, true)
+    var n = 0
     while (it.hasNext)
-      if (it.next().getPath.getName.endsWith(suffix)) return true
-    false
+      if (it.next().getPath.getName.endsWith(suffix)) n += 1
+    n
   }
 
   /** absolute paths of the direct children that are files */

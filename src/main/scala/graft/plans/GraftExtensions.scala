@@ -152,12 +152,13 @@ object LakeRelationPlaceholder {
 }
 
 /** `spark.sql("INSERT INTO graft.t …")` → a lake append at execution
-  * time; `columns` names the query's output by position. Append-only
-  * (INSERT OVERWRITE and static partition specs stay on the DSv2
-  * catalog's write path); the query resolves normally first, and column
-  * types are cast by the lake's own append. */
+  * time; `columns` names the query's output by position. `overwrite`
+  * (INSERT OVERWRITE) replaces the table's rows in the same snapshot.
+  * Static partition specs stay on the DSv2 catalog's write path; the
+  * query resolves normally first, and column types are cast by the
+  * lake's own append. */
 case class LakeInsertCommand(alias: String, table: String,
-    query: LogicalPlan, columns: Seq[String])
+    query: LogicalPlan, columns: Seq[String], overwrite: Boolean = false)
     extends org.apache.spark.sql.execution.command.LeafRunnableCommand {
   override val output: Seq[Attribute] = LakeDml.countOutput
   override def innerChildren: Seq[LogicalPlan] = Seq(query)
@@ -167,7 +168,10 @@ case class LakeInsertCommand(alias: String, table: String,
     require(df.columns.length == columns.length,
       s"INSERT provides ${df.columns.length} columns, expected " +
         s"${columns.length} (${columns.mkString(", ")})")
-    Seq(Row(LakeDml.lake(alias).insert(table, df.toDF(columns: _*))))
+    val lake = LakeDml.lake(alias)
+    Seq(Row(
+      if (overwrite) lake.insertOverwrite(table, df.toDF(columns: _*))
+      else lake.insert(table, df.toDF(columns: _*))))
   }
 }
 
@@ -305,13 +309,13 @@ case class ResolveLakeRelation(spark: SparkSession)
     lakeIdent(u.multipartIdentifier)
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.resolveOperatorsUp {
-      // INSERT INTO graft.t … → lake append command (append-only). The
-      // target is a field, not a child: it becomes the placeholder as soon
-      // as the statement is seen, so Spark's DSv2 insert resolution never
-      // claims a table of a `graft` catalog; the command waits for the
-      // query to resolve so the append sees its types.
+      // INSERT [OVERWRITE] graft.t … → lake append command. The target is
+      // a field, not a child: it becomes the placeholder as soon as the
+      // statement is seen, so Spark's DSv2 insert resolution never claims
+      // a table of a `graft` catalog; the command waits for the query to
+      // resolve so the append sees its types.
       case i: org.apache.spark.sql.catalyst.plans.logical.InsertIntoStatement
-          if i.partitionSpec.isEmpty && !i.overwrite =>
+          if i.partitionSpec.isEmpty =>
         i.table match {
           case u: UnresolvedRelation if lakeName(u).isDefined =>
             val (alias, table) = lakeName(u).get
@@ -325,7 +329,7 @@ case class ResolveLakeRelation(spark: SparkSession)
               // (VALUES' col1, col2, …) never reach the files
               LakeInsertCommand(p.alias, p.table, i.query,
                 if (i.userSpecifiedCols.nonEmpty) i.userSpecifiedCols
-                else p.output.map(_.name))
+                else p.output.map(_.name), i.overwrite)
             case _ => i
           }
         }

@@ -258,9 +258,8 @@ class GraftTable(lake: Lake, tbl: String, tableSchema: StructType)
           new InsertableRelation {
             override def insert(data: org.apache.spark.sql.DataFrame,
                 overwrite: Boolean): Unit = {
-              if (truncateFirst || overwrite)
-                lake.delete(tbl, org.apache.spark.sql.functions.lit(true))
-              lake.append(tbl, data)
+              if (truncateFirst || overwrite) lake.insertOverwrite(tbl, data)
+              else lake.append(tbl, data)
             }
           }
       }

@@ -389,4 +389,34 @@ class GraftExtensionsSpec extends AnyFunSuite {
         .collect().toSeq == Seq(2L, 4L, 5L, 6L, 102L))
     } finally LakeRegistry.unregister("graft")
   }
+
+  test("spark.sql INSERT OVERWRITE … SELECT … WHERE replaces the rows " +
+      "in one snapshot") {
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graftextow").toString
+    val lake = Lake.attach(spark, s"$dir/cat", s"$dir/data")
+    LakeRegistry.register("graft", lake)
+    try {
+      lake.createTableAs("t", Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
+      lake.createTableAs("s",
+        Seq((10L, "x"), (20L, "y"), (30L, "z")).toDF("k", "v"))
+      val snaps = lake.snapshots().count()
+      assert(spark.sql("INSERT OVERWRITE graft.t SELECT k, v FROM graft.s " +
+        "WHERE k > 10").head().getLong(0) == 2L)
+      assert(lake.snapshots().count() == snaps + 1)
+      assert(lake.table("t").orderBy("k").as[(Long, String)].collect().toSeq ==
+        Seq((20L, "y"), (30L, "z")))
+      // the query may read the table it overwrites
+      assert(spark.sql("INSERT OVERWRITE graft.t SELECT k + 1, v FROM graft.t")
+        .head().getLong(0) == 2L)
+      assert(lake.table("t").orderBy("k").select("k").as[Long]
+        .collect().toSeq == Seq(21L, 31L))
+      // lake.sql takes the same statement with bare names
+      assert(lake.sql("INSERT OVERWRITE t SELECT k, v FROM s WHERE k = 10")
+        .head().getLong(0) == 1L)
+      assert(lake.table("t").select("k").as[Long].collect().toSeq ==
+        Seq(10L))
+    } finally LakeRegistry.unregister("graft")
+  }
 }

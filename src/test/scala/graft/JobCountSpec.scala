@@ -5,7 +5,7 @@ import java.nio.file.Files
 import graft.catalog.Lake
 import graft.plans.LakeRegistry
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.functions.udf
+import org.apache.spark.sql.functions.{col, lit, udf}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Driver-efficiency regressions: operators that must execute as ONE Spark
@@ -101,6 +101,66 @@ class JobCountSpec extends AnyFunSuite {
           "WHERE probe(id) > 0").head().getLong(0) == 10L)
         assert(evals.value == 10L,
           s"INSERT … SELECT evaluated its query ${evals.value / 10.0} times")
+      } finally LakeRegistry.unregister("graft")
+    }
+  }
+
+  test("small DML evaluates its matched rows once: UPDATE, MERGE and " +
+      "DELETE job counts; MERGE source and UPDATE condition run once per row") {
+    import spark.implicits._
+    withoutAqe {
+      val dir = Files.createTempDirectory("graftdmljobs").toString
+      val lake = Lake.attach(spark, s"$dir/cat", s"$dir/data")
+      LakeRegistry.register("graft", lake)
+      try {
+        // four key-clustered files of 100 rows
+        (0 until 4).foreach { i =>
+          val rows = (i * 100L + 1 to i * 100L + 100).map(k => (k, "a"))
+            .toDF("id", "v").coalesce(1)
+          if (i == 0) lake.createTableAs("u", rows) else lake.append("u", rows)
+        }
+        val upd = jobsDuring {
+          assert(spark.sql("UPDATE graft.u SET v = 'b' WHERE id = 150")
+            .head().getLong(0) == 1L)
+        }
+        // job counts of the previous release (AQE off): 11, 31 and 6
+        assert(upd <= 6, s"1-row UPDATE ran $upd jobs")
+        val src = (395L to 404L).map(k => s"(${k}L, 'm')").mkString(", ")
+        val mrg = jobsDuring {
+          assert(spark.sql(s"MERGE INTO graft.u t USING (SELECT * FROM " +
+            s"VALUES $src AS s(id, v)) s ON t.id = s.id WHEN MATCHED THEN " +
+            "UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
+            .head().getLong(0) == 10L)
+        }
+        assert(mrg <= 8, s"10-row MERGE ran $mrg jobs")
+        val del = jobsDuring {
+          assert(spark.sql("DELETE FROM graft.u WHERE id = 250")
+            .head().getLong(0) == 1L)
+        }
+        assert(del <= 4, s"point DELETE ran $del jobs")
+
+        // a nondeterministic probe counts evaluations per input row (the
+        // previous release: 5 per MERGE source row, 4 per UPDATE row)
+        val evals = spark.sparkContext.longAccumulator("dmlprobe")
+        val probe = udf((x: Long) => { evals.add(1); x }).asNondeterministic()
+        spark.udf.register("dmlprobe", probe)
+        lake.createTableAs("s", (1L to 10L).map(k => (k * 100, "s"))
+          .toDF("id", "v"))
+        assert(spark.sql("MERGE INTO graft.u t USING (SELECT dmlprobe(id) " +
+          "AS id, v FROM graft.s) s ON t.id = s.id WHEN MATCHED THEN " +
+          "UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
+          .head().getLong(0) == 10L)
+        assert(evals.value == 10L,
+          s"MERGE evaluated its source ${evals.value / 10.0} times")
+        val rows = lake.table("u").count()
+        evals.reset()
+        // (Spark's analyzer rejects a nondeterministic SQL UPDATE condition)
+        assert(lake.update("u", Map("v" -> lit("c")),
+          probe(col("id")) === 42L) == 1L)
+        assert(evals.value == rows,
+          s"UPDATE evaluated its condition ${evals.value.toDouble / rows} " +
+            "times per row")
+        assert(lake.table("u").count() == rows)
       } finally LakeRegistry.unregister("graft")
     }
   }

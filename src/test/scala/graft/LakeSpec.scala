@@ -84,6 +84,18 @@ class LakeSpec extends AnyFunSuite {
     assert(got.filter(col("id") === 5).select("d").as[Double].head() == 7.5)
   }
 
+  test("update under a nondeterministic condition rewrites exactly the " +
+      "rows it counts and keeps the row count") {
+    val lake = freshLake()
+    lake.createTableAs("nd",
+      (1L to 400L).map(i => (i, 0)).toDF("id", "v").repartition(4))
+    val coin = udf(() => scala.util.Random.nextBoolean()).asNondeterministic()
+    val n = lake.update("nd", Map("v" -> lit(1)), coin())
+    assert(lake.table("nd").count() == 400L)
+    assert(lake.table("nd").filter(col("v") === 1).count() == n)
+    assert(lake.table("nd").select("id").distinct().count() == 400L)
+  }
+
   test("UPDATE matching zero rows is a clean no-op (regression: the " +
     "empty rewrite crashed parquet schema inference on the staging dir)") {
     val lake = freshLake()

@@ -193,11 +193,21 @@ class ScanPlanSpec extends AnyFunSuite {
     lake.createTableAs("t", (1L to 100L).toDF("id").coalesce(1))
     (1 to 3).foreach(i =>
       lake.append("t", (i * 100L + 1 to i * 100L + 100).toDF("id").coalesce(1)))
-    val dataFiles = lake.listFiles("t").select("data_file").as[String]
+    assert(lake.listFiles("t").count() == 4)
+    val reads = dataFileReads(lake, "t") {
+      assert(lake.delete("t", col("id") === 150L) == 1L)
+    }
+    // the matched positions are evaluated once, over the one file
+    // holding id 150
+    assert(reads == 1L, s"point delete read $reads data files")
+    assert(lake.table("t").count() == 399)
+  }
+
+  /** data files of `lake`'s table `name` read by the scans of every query
+    * `body` executes (AQE off: executedPlan is the real plan) */
+  private def dataFileReads(lake: Lake, name: String)(body: => Unit): Long = {
+    val dataFiles = lake.listFiles(name).select("data_file").as[String]
       .collect().map(_.split('/').last).toSet
-    assert(dataFiles.size == 4)
-    // every file scan of the table's data files, summed over the
-    // executions the DELETE runs (AQE off: executedPlan is the real plan)
     val reads = new java.util.concurrent.atomic.AtomicLong()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(f: String,
@@ -215,15 +225,93 @@ class ScanPlanSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.listenerManager.register(listener)
     try {
-      assert(lake.delete("t", col("id") === 150L) == 1L)
+      body
       org.apache.spark.graft.ShuffleReset.drainListenerBus(spark.sparkContext)
     } finally {
       spark.listenerManager.unregister(listener)
       spark.conf.set("spark.sql.adaptive.enabled", aqe)
     }
-    // the matched positions are evaluated twice (inlined-row check,
-    // per-file counts), each over the one file holding id 150
-    assert(reads.get() == 2L, s"point delete read ${reads.get()} data files")
-    assert(lake.table("t").count() == 399)
+    reads.get()
+  }
+
+  test("MERGE reads each target file once") {
+    val dir = Files.createTempDirectory("graftsp9").toString
+    val lake = Lake.attach(spark, s"$dir/cat", s"$dir/data")
+    lake.createTableAs("t", (1L to 100L).map(i => (i, "a")).toDF("id", "v")
+      .coalesce(1))
+    (1 to 3).foreach(i => lake.append("t", (i * 100L + 1 to i * 100L + 100)
+      .map(k => (k, "a")).toDF("id", "v").coalesce(1)))
+    val src = Seq((150L, "m"), (250L, "m"), (999L, "n")).toDF("id", "v")
+    val reads = dataFileReads(lake, "t") {
+      assert(lake.merge("t", src, "id",
+        whenMatchedUpdate = Some(Map("v" -> col("s.v")))) == 3L)
+    }
+    assert(reads == 4L, s"MERGE read $reads data files of 4")
+    assert(lake.table("t").count() == 401L)
+    assert(lake.table("t").filter(col("v") =!= "a").count() == 3L)
+  }
+
+  test("stats pruning on an NTZ column compared with TIMESTAMP values") {
+    val dir = Files.createTempDirectory("graftsp10").toString
+    val lake = Lake.attach(spark, s"$dir/cat", s"$dir/data")
+    // eight files range-clustered by an NTZ column, nine months apart,
+    // each spanning 245 days
+    val start = java.time.LocalDateTime.of(1992, 1, 1, 0, 0)
+    val ranges = (0 until 8).map { i =>
+      val lo = start.plusMonths(9L * i)
+      (i, lo, lo.plusDays(245))
+    }
+    ranges.foreach { case (i, lo, _) =>
+      val rows = (0 until 50).map(j => (i * 100L + j, lo.plusDays(5L * j)))
+        .toDF("id", "ts").coalesce(1)
+      if (i == 0) lake.createTableAs("n", rows) else lake.append("n", rows)
+    }
+    assert(lake.table("n").schema("ts").dataType ==
+      org.apache.spark.sql.types.TimestampNTZType)
+    val all = lake.table("n").as[(Long, java.time.LocalDateTime)].collect()
+    val (y0, y1) = (java.time.Instant.parse("1996-01-01T00:00:00Z"),
+      java.time.Instant.parse("1997-01-01T00:00:00Z"))
+    // rows and files whose local times, read in `zone`, fall in [y0, y1)
+    def in(zone: String)(t: java.time.LocalDateTime, atEnd: Boolean) = {
+      val i = t.atZone(java.time.ZoneId.of(zone)).toInstant
+      if (atEnd) !i.isBefore(y0) else i.isBefore(y1)
+    }
+    def expected(zone: String) = all.filter { case (_, t) =>
+      in(zone)(t, atEnd = true) && in(zone)(t, atEnd = false)
+    }.map(_._1).sorted.toSeq
+    def overlapping(zone: String) = ranges.count { case (_, lo, hi) =>
+      in(zone)(hi, atEnd = true) && in(zone)(lo, atEnd = false) }
+    def run(df: => org.apache.spark.sql.DataFrame): (Long, Seq[Long]) = {
+      var got = Seq.empty[Long]
+      val reads = dataFileReads(lake, "n") {
+        got = df.as[Long].collect().sorted.toSeq
+      }
+      (reads, got)
+    }
+    val ts = col("ts").cast("timestamp")
+    def castFilter =
+      lake.table("n", Some(ts >= lit(y0) && ts < lit(y1))).select("id")
+    graft.plans.LakeRegistry.register("graft", lake)
+    val tz = spark.conf.get("spark.sql.session.timeZone")
+    try {
+      // SQL compares the raw column with the literal cast to NTZ: the
+      // folded literal prunes to exactly the overlapping files
+      assert(overlapping("UTC") == 2)
+      assert(run(spark.sql("SELECT id FROM graft.n WHERE ts >= TIMESTAMP " +
+        "'1996-01-01 00:00:00' AND ts < TIMESTAMP '1997-01-01 00:00:00'")) ==
+        (2L, expected("UTC")))
+      // cast(ts AS TIMESTAMP) unwraps in a fixed-offset zone
+      for (zone <- Seq("UTC", "+05:00")) {
+        spark.conf.set("spark.sql.session.timeZone", zone)
+        assert(run(castFilter) == (overlapping(zone).toLong, expected(zone)),
+          s"in zone $zone")
+      }
+      // a zone with DST keeps that conjunct out of pruning
+      spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+      assert(run(castFilter) == (8L, expected("America/Los_Angeles")))
+    } finally {
+      spark.conf.set("spark.sql.session.timeZone", tz)
+      graft.plans.LakeRegistry.unregister("graft")
+    }
   }
 }
