@@ -1852,10 +1852,19 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
     // parts; one part is read by one task, so the per-file aggregate
     // below needs no shuffle
     val staged = pqRead.schema(df0.schema).parquet(stagingDir)
+    // format v1.1 row_group_count: each part's footer is read in the same
+    // job, once per file after the aggregate (never a driver parquet
+    // read); encrypted footers stay NULL — the column is nullable metadata
+    val ioRef = io
+    val rowGroups =
+      if (cryptoOpts.nonEmpty) lit(null).cast(LongType)
+      else udf((f: String) => ioRef.rowGroupCount(
+        new org.apache.hadoop.fs.Path(f).toString)).apply(col("__file"))
     val statRows = pass.prepare(if (nParts == 1) staged.coalesce(1)
       else staged)
       .groupBy(input_file_name().as("__file"))
       .agg(pass.aggs.head, pass.aggs.tail: _*)
+      .withColumn("__rg", rowGroups)
       .collect()
 
     // belt to the countFilesRecursive braces above: a zero-record part can't
@@ -1909,28 +1918,13 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
       io.move(srcPath.toString, relPath)
       PendingDataFile(relPath, rows, io.size(relPath), stats,
         partitionValues = partVals.toSeq, variantStats = varStats,
-        writtenSorted = writtenSorted)
+        writtenSorted = writtenSorted,
+        rowGroupCount = Option(row.getAs[java.lang.Long]("__rg"))
+          .map(_.longValue))
     }.tapEach(_ => ()).toSeq match {
-      case done0 =>
+      case done =>
         // remove staging leftovers (_SUCCESS etc.)
         io.deleteRecursively(stagingRel)
-        // format v1.1 row_group_count: a small write reads its few
-        // footers on the driver, a larger one in one tiny distributed
-        // pass over one-row-per-file; encrypted footers stay NULL — the
-        // column is nullable metadata
-        val done =
-          if (done0.isEmpty || cryptoOpts.nonEmpty) done0
-          else {
-            val ioRef = io
-            val rels = done0.map(_.path)
-            val counts =
-              if (rels.size <= DriverFooterReads)
-                rels.map(r => r -> io.rowGroupCount(r)).toMap
-              else spark.sparkContext
-                .parallelize(rels, math.min(rels.size, 32))
-                .map(r => r -> ioRef.rowGroupCount(r)).collect().toMap
-            done0.map(f => f.copy(rowGroupCount = counts.get(f.path)))
-          }
         done
     }
   }
@@ -2630,15 +2624,10 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
     // columns which take precedence over row_id_start + row_index
     // (reference ducklake_multi_file_reader.cpp:574-596); a snapshot can mix
     // both kinds, so scan them as (epoch × materialized) groups and union.
-    // per file, keyed by the path Spark reports: (relative path,
-    // row_id_start, begin snapshot, index in the file list)
-    val infoOf = scanFiles.zipWithIndex.map { case (f, i) =>
-      f.file.path -> (absUri(f.file.path), (f.file.path, f.file.rowIdStart,
-        f.file.beginSnapshot, i.toLong))
-    }.toMap
-    lazy val fileInfo = infoOf.values.toSeq
-      .map { case (a, (rel, start, fsnap, i)) => (a, rel, start, fsnap, i) }
-      .toDF("__abs", "__rel", "__start", "__fsnap", "__fidx")
+    val fileInfo = scanFiles.zipWithIndex.map { case (f, i) =>
+      (absUri(f.file.path), f.file.path, f.file.rowIdStart,
+        f.file.beginSnapshot, i.toLong)
+    }.toDF("__abs", "__rel", "__start", "__fsnap", "__fidx")
 
     def readGroup(group: Seq[ScanFile], materialized: Boolean,
         plan: Option[(StructType, Seq[Column])]) = {
@@ -2659,17 +2648,7 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
             (if (materialized) Seq(col(RowIdCol), col(SnapCol)) else Nil)
           base0.select(projs ++ carried: _*)
       }
-      // a few files look their info up in a map literal (no broadcast
-      // job); many join the broadcast file list
-      val base =
-        if (group.size > MapLiteralFiles)
-          base1.join(broadcast(fileInfo), Seq("__abs"))
-        else {
-          val info = element_at(typedLit(group.map(f => infoOf(f.file.path))
-            .toMap), col("__abs"))
-          base1.select(col("*") +: Seq("__rel", "__start", "__fsnap", "__fidx")
-            .zipWithIndex.map { case (n, i) => info(s"_${i + 1}").as(n) }: _*)
-        }
+      val base = base1.join(broadcast(fileInfo), Seq("__abs"))
       base
         .withColumn("rowid",
           if (materialized) col(RowIdCol) else col("__start") + col("__pos"))
@@ -3071,16 +3050,10 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
       // committed inlined rows; outside one the sources are disjoint
       .map(rows => if (txn.isDefined) rows.distinct() else rows)
     // new positions were live in this statement's scan: disjoint from
-    // every earlier delete, so the union needs no second distinct, and
-    // outside a transaction each file's total is known without a job
+    // every earlier delete, so the union needs no second distinct
     val all = prevRows.map(newDeletes.unionByName(_)).getOrElse(newDeletes)
-    val totals = Option.when(txn.isEmpty)(perFile.map { case (rel, n) =>
-      rel -> (n + prevEntries.filter(_.dataFileId == byRel(rel).dataFileId)
-        .map(_.deleteCount).sum + prevInlined.count(_._1 == rel))
-    })
 
-    val (deletes, useDv) =
-      writeDeleteArtifacts(name, all, perFile.size, byRel, totals)
+    val (deletes, useDv) = writeDeleteArtifacts(name, all, perFile.size, byRel)
     txn match {
       case Some(st) => // buffer: supersedes earlier txn deletes per file
         val (m, removed) = st.deletes.getOrElse(t.tableId,
@@ -3107,13 +3080,10 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
     * never funnel through a single task and never collect() to the driver
     * — a 10⁹-row bulk delete stays distributed; the driver only sees
     * (file, path, count, size) tuples, one per affected data file).
-    * `totals` (positions per data file), when the caller knows them,
-    * spare a one-part Parquet write the job that counts them back.
     * Reference: ducklake_delete.cpp:36-206. Returns the per-data-file
     * artifact tuples and whether the DV format was used. */
   private def writeDeleteArtifacts(name: String, all: DataFrame,
-      nFilesHint: Int, byRel: Map[String, DataFileEntry],
-      totals: Option[Map[String, Long]] = None)
+      nFilesHint: Int, byRel: Map[String, DataFileEntry])
       : (Seq[(Long, String, Long, Long)], Boolean) = {
     val useDv = meta.getOption("write_deletion_vectors").contains("true")
     val nParts = math.max(1, math.min(
@@ -3165,18 +3135,12 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
         // parts move to final names and map back to their data files
         val delStageRel = s"$name/delstage-${UUID.randomUUID()}"
         shuffled.write.options(cryptoOpts).parquet(io.abs(delStageRel))
-        val parts = io.listRecursive(delStageRel).filter(_.endsWith(".parquet"))
-        // (part file, data file, positions): one part holds every known
-        // total; else one job counts them back
-        val staged = totals match {
-          case Some(ts) if parts.size == 1 =>
-            ts.toSeq.map { case (data, n) => (io.abs(parts.head), data, n) }
-          case _ => pqRead.schema(all.schema).parquet(io.abs(delStageRel))
-            .select(input_file_name(), col("file_path")).rdd
-            .map(r => (r.getString(0), r.getString(1))).countByValue().toSeq
-            .map { case ((part, data), n) => (new org.apache.hadoop.fs.Path(
-              new java.net.URI(part)).toString, data, n) }
-        }
+        // (part file, data file, positions), counted back in one job
+        val staged = pqRead.schema(all.schema).parquet(io.abs(delStageRel))
+          .select(input_file_name(), col("file_path")).rdd
+          .map(r => (r.getString(0), r.getString(1))).countByValue().toSeq
+          .map { case ((part, data), n) => (new org.apache.hadoop.fs.Path(
+            new java.net.URI(part)).toString, data, n) }
         val moved = staged.map(_._1).distinct.map { p =>
           val rel = s"$name/ducklake-delete-${UUID.randomUUID()}.parquet"
           io.move(p, rel)
@@ -4995,9 +4959,11 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
         }
       }
     // NTZ column vs TIMESTAMP value: Spark's form casts the literal (folded
-    // here to the constant the row filter compares against); a cast of
-    // the COLUMN is a constant shift only in a fixed-offset zone, so in a
-    // zone with DST that conjunct stays Spark-side
+    // here to the constant the row filter compares against; a cast that
+    // fails to evaluate stays unfolded, as in Spark's ConstantFolding,
+    // since And may never evaluate it); a cast of the COLUMN is a
+    // constant shift only in a fixed-offset zone, so in a zone with DST
+    // that conjunct stays Spark-side
     def ntzShift(c: Cast) = {
       val rules = java.time.ZoneId.of(c.timeZoneId.getOrElse(
         spark.sessionState.conf.sessionLocalTimeZone)).getRules
@@ -5006,10 +4972,12 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
         rules.getOffset(java.time.Instant.EPOCH).getTotalSeconds * 1000000L)
     }
     val e0 = e.transformUp {
-      case c: Cast if c.child.isInstanceOf[Literal] =>
+      case c: Cast if c.child.isInstanceOf[Literal] &&
+          (c.dataType == TimestampType || c.dataType == TimestampNTZType) =>
         val tz = c.withTimeZone(c.timeZoneId.getOrElse(
           spark.sessionState.conf.sessionLocalTimeZone))
-        if (tz.resolved) Literal(tz.eval(), tz.dataType) else c
+        scala.util.Try(tz.eval()).toOption.filter(_ => tz.resolved)
+          .fold(c: Expression)(Literal(_, tz.dataType))
       case b: BinaryComparison =>
         def shifted(c: Cast, v: Long) =
           ntzShift(c).map(o => (c.child, Literal(v + o, TimestampNTZType)))
@@ -5203,12 +5171,6 @@ object Lake {
 
   /** pseudo-filename for rows inlined in the catalog DB */
   val InlinedFile = "__ducklake_inlined__"
-
-  /** at most this many files: footers read on the driver, not in a job */
-  private val DriverFooterReads = 4
-  /** at most this many files per scan group: row-id info from a map
-    * literal, not a broadcast join (a job) */
-  private val MapLiteralFiles = 16
 
   /** data files are immutable → their physical schema is cacheable */
   private val fileSchemaCache =

@@ -52,10 +52,11 @@ final class LakeIO(val root: String) extends Serializable {
 
   /** Parquet row-group count from the file footer alone (format v1.1
     * `row_group_count` catalog column; reference row_group_count.test).
-    * Callable on executors — only the root string travels. */
-  def rowGroupCount(rel: String): Long = {
+    * `srcAbs` is an absolute URI in the form [[move]] takes. Callable on
+    * executors — only the root string travels. */
+  def rowGroupCount(srcAbs: String): Long = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile
-      .fromPath(p(rel), conf)
+      .fromPath(new Path(new URI(srcAbs)), conf)
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
     try r.getFooter.getBlocks.size.toLong finally r.close()
   }

@@ -193,13 +193,38 @@ class ScanPlanSpec extends AnyFunSuite {
     lake.createTableAs("t", (1L to 100L).toDF("id").coalesce(1))
     (1 to 3).foreach(i =>
       lake.append("t", (i * 100L + 1 to i * 100L + 100).toDF("id").coalesce(1)))
-    assert(lake.listFiles("t").count() == 4)
-    val reads = dataFileReads(lake, "t") {
-      assert(lake.delete("t", col("id") === 150L) == 1L)
+    val dataFiles = lake.listFiles("t").select("data_file").as[String]
+      .collect().map(_.split('/').last).toSet
+    assert(dataFiles.size == 4)
+    // every file scan of the table's data files, summed over the
+    // executions the DELETE runs (AQE off: executedPlan is the real plan)
+    val reads = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit =
+        reads.addAndGet(qe.executedPlan.collect {
+          case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+        }.flatMap(_.relation.location.inputFiles)
+          .count(f => dataFiles.contains(f.split('/').last)).toLong): Unit
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
     }
-    // the matched positions are evaluated once, over the one file
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.listenerManager.register(listener)
+    try {
+      assert(lake.delete("t", col("id") === 150L) == 1L)
+      org.apache.spark.graft.ShuffleReset.drainListenerBus(spark.sparkContext)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    }
+    // the matched positions are evaluated once (one checkpoint feeds the
+    // inlined-row check and the per-file counts), over the one file
     // holding id 150
-    assert(reads == 1L, s"point delete read $reads data files")
+    assert(reads.get() == 1L, s"point delete read ${reads.get()} data files")
     assert(lake.table("t").count() == 399)
   }
 
@@ -312,6 +337,36 @@ class ScanPlanSpec extends AnyFunSuite {
     } finally {
       spark.conf.set("spark.sql.session.timeZone", tz)
       graft.plans.LakeRegistry.unregister("graft")
+    }
+  }
+
+  test("a literal cast that fails is left to the row filter, not pruning") {
+    val dir = Files.createTempDirectory("graftsp11").toString
+    val lake = Lake.attach(spark, s"$dir/cat", s"$dir/data")
+    lake.createTableAs("f", (1L to 20L).map(i => (i,
+      java.time.LocalDateTime.of(2000, 1, 1, 0, 0).plusDays(i)))
+      .toDF("id", "ts").coalesce(1))
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    graft.plans.LakeRegistry.register("graft", lake)
+    try {
+      // each failing cast sits in a branch no row takes (id >= 1), which
+      // Spark's ConstantFolding leaves unfolded, so the query succeeds
+      for ((cond, n) <- Seq(
+          "IF(id < 0, CAST('x' AS INT) = 1, false)" -> 0L,
+          "IF(id < 0, ts = CAST('x' AS TIMESTAMP), true)" -> 20L,
+          "CASE WHEN id < 0 THEN ts >= CAST('x' AS TIMESTAMP_NTZ) " +
+            "ELSE id <= 5 END" -> 5L))
+        assert(spark.sql(s"SELECT id FROM graft.f WHERE $cond").count() == n,
+          cond)
+      val bad = when(col("id") < 0L, lit("x").cast("timestamp") === col("ts"))
+        .otherwise(col("id") <= 5L)
+      assert(lake.table("f", Some(bad)).count() == 5L)
+      assert(lake.delete("f", bad) == 5L)
+      assert(lake.table("f").count() == 15L)
+    } finally {
+      graft.plans.LakeRegistry.unregister("graft")
+      spark.conf.set("spark.sql.ansi.enabled", ansi)
     }
   }
 }
