@@ -193,16 +193,10 @@ object Bench {
       if (sys.env.get("SPARK_GRAFT_Q21_STREAM").contains("1"))
         qs2 + ("q21_waiting" -> qs2("q21_stream"))
       else qs2
-    val qs3 =
+    val qs =
       if (sys.env.get("SPARK_GRAFT_Q21_DEDUP").contains("1"))
         qs3a + ("q21_waiting" -> qs3a("q21_dedup"))
       else qs3a
-    // q3 formulations: TakeOrderedAndProject (default) vs bounded top-k
-    // aggregate (map-side ≤10-row partials)
-    val qs =
-      if (sys.env.get("SPARK_GRAFT_Q3_BOUNDED").contains("1"))
-        qs3 + ("q3_topk" -> qs3("q3_bounded"))
-      else qs3
     // SPARK_GRAFT_ONLY="q18_large_orders,cb_gap_stats" — subset for
     // local profiling sweeps; unset = full headline set (driver mode).
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -403,42 +397,7 @@ object Bench {
           env("SHUFFLE").getOrElse(defWidth))
         spark.conf.set("spark.sql.adaptive.enabled",
           env("AQE").getOrElse("false"))
-        val (dfsX, execX) = prepare(dirX)
-        // Per-query proof mode (SCALE.md §8/§9 stage-time tables):
-        // SPARK_GRAFT_SF1_PROOF=q5_join,q_date_trunc prints each named
-        // query's formatted plan, then runs warm-ups + ≥21 steady reps
-        // under a stage listener so per-stage wall vs per-rep wall shows
-        // whether the row's cost is work or per-stage scheduling constant.
-        env("PROOF").foreach { csv =>
-          val proofNames = csv.split(",").map(_.trim).filter(names.contains)
-          val listener = new org.apache.spark.scheduler.SparkListener {
-            override def onStageCompleted(
-                sc: org.apache.spark.scheduler.SparkListenerStageCompleted)
-                : Unit = {
-              val si = sc.stageInfo
-              val dur = for {
-                a <- si.completionTime; b <- si.submissionTime
-              } yield a - b
-              println(s"${T}STAGE ${si.stageId} tasks=${si.numTasks} " +
-                s"time=${dur.getOrElse(-1L)}ms ${si.name.take(60)}")
-            }
-          }
-          spark.sparkContext.addSparkListener(listener)
-          proofNames.foreach { n =>
-            println(s"=== $T PROOF $n ===")
-            dfsX(n).explain("formatted")
-            (1 to 6).foreach(_ => execX(n)) // JIT/C2 warm-up
-            (1 to env("PROOF_REPS").getOrElse("21").toInt).foreach { i =>
-              val t0 = System.nanoTime()
-              execX(n)
-              println(
-                f"${T}PROOF $n rep$i exec=${(System.nanoTime() - t0) / 1e6}%.1f ms")
-            }
-          }
-          // detach before the block's timed reps: a synchronous println
-          // per stage would perturb every later measurement in this run
-          spark.sparkContext.removeSparkListener(listener)
-        }
+        val (_, execX) = prepare(dirX)
         val warmX = env("WARMUPS").getOrElse("4").toInt
         (1 to warmX).foreach(_ => names.foreach(execX))
         System.gc() // drop prior-block garbage before the timed reps
@@ -632,39 +591,6 @@ object Bench {
                 println(s"${tag}CHECK $n " +
                   (if (got == ref) "OK" else s"MISMATCH got=$got ref=$ref"))
               }
-          }
-          // per-query stage-time proof, same shape as the scale blocks'
-          // (SPARK_GRAFT_SPJ_PROOF=q5_join): stage wall vs rep wall says
-          // whether an spj row's cost is merge work or scheduling
-          sys.env.get("SPARK_GRAFT_SPJ_PROOF").foreach { csv =>
-            val proofNames = csv.split(",").map(_.trim)
-              .filter(spjNames.contains)
-            val listener = new org.apache.spark.scheduler.SparkListener {
-              override def onStageCompleted(
-                  sc: org.apache.spark.scheduler.SparkListenerStageCompleted)
-                  : Unit = {
-                val si = sc.stageInfo
-                val dur = for {
-                  a <- si.completionTime; b <- si.submissionTime
-                } yield a - b
-                println(s"${tag}STAGE ${si.stageId} tasks=${si.numTasks} " +
-                  s"time=${dur.getOrElse(-1L)}ms ${si.name.take(60)}")
-              }
-            }
-            spark.sparkContext.addSparkListener(listener)
-            val proofReps = sys.env
-              .getOrElse("SPARK_GRAFT_SPJ_PROOF_REPS", "9").toInt
-            proofNames.foreach { n =>
-              println(s"=== $tag PROOF $n ===")
-              (1 to 6).foreach(_ => execS(n))
-              (1 to proofReps).foreach { i =>
-                val t0 = System.nanoTime()
-                execS(n)
-                println(f"${tag}PROOF $n rep$i " +
-                  f"exec=${(System.nanoTime() - t0) / 1e6}%.1f ms")
-              }
-            }
-            spark.sparkContext.removeSparkListener(listener)
           }
           (1 to 4).foreach(_ => spjNames.foreach(execS))
           System.gc()

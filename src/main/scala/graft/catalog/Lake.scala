@@ -5,7 +5,7 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.graftshim.ColumnBridge
+import org.apache.spark.sql.graftshim.{ColumnBridge, DatasetBridge}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{
   And, BinaryComparison, Cast, EqualTo, Expression, GreaterThan,
@@ -696,109 +696,48 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
     }
   }
 
-  /** Resolve a view's SQL at the current snapshot and run it (views store
-    * dialect + SQL text, reference ducklake_view_entry.cpp:125-142). */
+  /** Run a view's SQL at the current snapshot (views store dialect + SQL
+    * text, reference ducklake_view_entry.cpp:125-142) through the
+    * statement path of [[sql]]. */
   def view(name: String): DataFrame = {
-    val snap = meta.currentSnapshot()
     val (vs, vn) = splitName(name)
-    val sql = viewSqlAt(vs, vn)
-      .getOrElse(throw new IllegalArgumentException(s"no view $name"))
-    meta.listTables(snap.snapshotId).foreach { t =>
-      table(t.name).createOrReplaceTempView(t.name)
-    }
-    spark.sql(sql)
+    statement(viewSqlAt(vs, vn)
+      .getOrElse(throw new IllegalArgumentException(s"no view $name")))
   }
 
   /** SQL entry point — the "attach and query" experience of the reference.
     * DuckDB-only statements (DDL, CALL, SECRET, MACRO, BEGIN/COMMIT …)
-    * route to the Lake API via [[LakeSql]]; INSERT/DELETE/UPDATE/MERGE
-    * run as `spark.sql` runs them ([[runDml]]); plain queries register
-    * the lake tables they mention (current snapshot) as temp views,
-    * expand stored macros, and delegate to Spark SQL. */
+    * route to the Lake API via [[LakeSql]]; every other statement has the
+    * DuckDB spellings Spark's parser lacks rewritten (`AT (VERSION =>)`
+    * time travel, stored macros, MERGE's bare `THEN INSERT`) and runs as
+    * `spark.sql` runs it ([[statement]]). */
   def sql(sqlText: String): DataFrame = {
     val stmt = sqlText.trim.stripSuffix(";").trim
-    // DuckDB spellings Spark's parser lacks: AT (VERSION =>) time
-    // travel, metadata table functions in FROM, stored macros
-    def rewrite(q: String): String =
-      expandMacros(rewriteTableFns(rewriteAtClauses(q)),
-        meta.currentSnapshot().snapshotId)
-    def runQuery(q0: String): DataFrame = {
-      val snap = meta.currentSnapshot()
-      val q = rewrite(q0)
-      // virtual columns (reference ducklake_table_entry.cpp:398-411 +
-      // virtualcolumns tests): when the query references one, views carry
-      // rowid / snapshot_id / filename / file_row_number
-      val wantMeta =
-        "(?i)\\b(filename|file_row_number|file_index|rowid|snapshot_id)\\b".r
-          .findFirstIn(q).isDefined
-      // Register ONLY referenced relations: building the file list of
-      // every table on every statement is O(catalog size) round trips —
-      // on a thousand-table shared catalog that is the difference
-      // between one metadata query and a full catalog sweep.
-      val ident = "(?i)[a-z_][a-z0-9_$]*".r
-      var mentioned = ident.findAllIn(q.toLowerCase).toSet
-      // lake VIEWS referenced by the query resolve transparently (the
-      // reference queries views like tables): pull each used view's SQL
-      // into the mention set until fixpoint so base tables (and nested
-      // views) register too, then create them dependency-first
-      // committed views overlaid with the open txn's buffered view DDL
-      // (read-your-writes, like tables/macros) — shared overlay helper
-      val viewsByLower = visibleViews("main")
-      var usedViews = List.empty[(String, String)]
-      var frontier = mentioned.intersect(viewsByLower.keySet)
-      while (frontier.nonEmpty) {
-        val defs = frontier.toList.sorted.map(viewsByLower)
-        usedViews = usedViews ++ defs
-        val refs = defs.flatMap { case (_, s) =>
-          ident.findAllIn(s.toLowerCase) }.toSet
-        frontier = refs.intersect(viewsByLower.keySet) -- mentioned
-        mentioned ++= refs
-      }
-      meta.listTables(snap.snapshotId)
-        .filter(t => mentioned.contains(t.name.toLowerCase) ||
-          !t.name.matches("(?i)[a-z_][a-z0-9_$]*")) // odd names: keep safe
-        .foreach { t =>
-          scan(t.name, snap, None, withMeta = wantMeta)
-            .createOrReplaceTempView(t.name)
-        }
-      usedViews.reverse.foreach { case (n, s) =>
-        spark.sql(s).createOrReplaceTempView(n)
-      }
-      // tables created inside the open transaction are queryable by their
-      // own statements before commit (reference basic_transaction.test)
-      txn.foreach(_.created.values.foreach { case (s, n, _) =>
-        if (mentioned.contains(n.toLowerCase)) {
-          val full = if (s == "main") n else s"$s.$n"
-          scan(full, snap, None, withMeta = wantMeta)
-            .createOrReplaceTempView(n)
-        }
-      })
-      spark.sql(q)
-    }
-    LakeSql.dispatch(this, spark, stmt, runQuery).getOrElse(
-      if (DmlStatement.findPrefixOf(stmt).isDefined)
-        runDml(LakeSql.sparkDml(rewrite(stmt)))
-      else runQuery(stmt))
+    def run(q: String): DataFrame = statement(LakeSql.sparkDml(expandMacros(
+      rewriteAtClauses(q), meta.currentSnapshot().snapshotId)))
+    LakeSql.dispatch(this, spark, stmt, run).getOrElse(run(stmt))
   }
 
-  private val DmlStatement = """(?is)(INSERT|DELETE|UPDATE|MERGE)\s""".r
-
-  /** INSERT / DELETE / UPDATE / MERGE through the one statement path
-    * `spark.sql` takes: Spark's parser, bare lake names qualified with
-    * this handle's registry alias (names created inside an open
-    * transaction included), and the [[graft.plans.GraftExtensions]] DML
-    * commands — each returns DuckDB's one-row `Count`. */
-  private def runDml(stmt: String): DataFrame = {
+  /** One Spark SQL statement through the path `spark.sql` takes: Spark's
+    * parser, bare lake names qualified with this handle's registry alias
+    * ([[graft.plans.LakeNames.qualify]]: names created inside an open
+    * transaction included, metadata table functions bound), and the
+    * [[graft.plans.GraftExtensions]] resolver, scan rules and DML
+    * commands. A query comes back over its optimized plan, so its lake
+    * scans are bound here, as [[table]] binds them: it keeps reading this
+    * call's snapshot and still runs after [[detach]]. */
+  private def statement(stmt: String): DataFrame = {
     require(spark.sessionState.analyzer.extendedResolutionRules.exists(
       _.isInstanceOf[graft.plans.ResolveLakeRelation]),
-      "lake.sql DML needs the graft.plans.GraftExtensions session extension")
+      "lake.sql needs the graft.plans.GraftExtensions session extension")
     val plan = graft.plans.LakeNames.qualify(
       spark.sessionState.sqlParser.parsePlan(stmt), sqlAlias(), this)()
-    org.apache.spark.sql.graftshim.DatasetBridge.ofRows(spark, plan)
+    val df = DatasetBridge.ofRows(spark, plan)
+    DatasetBridge.ofRows(spark, df.queryExecution.optimizedPlan)
   }
 
   /** Per-instance [[graft.plans.LakeRegistry]] alias, registered on first
-    * `sql` DML when the handle has none; [[detach]] removes it. */
+    * `sql` statement when the handle has none; [[detach]] removes it. */
   @volatile private var ownAlias: Option[String] = None
 
   private def sqlAlias(): String = synchronized {
@@ -810,124 +749,59 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
     }
   }
 
-  private val TableFn =
-    """(?is)\b((?:FROM|JOIN)\s+)(snapshots|table_info|settings|options|list_files|table_changes|table_insertions|table_deletions|database_size|metadata_log)\s*\(([^)]*)\)""".r
-
   /** The reference's metadata table functions in FROM position
     * (ducklake_snapshots/table_info/list_files/table_changes …,
-    * base_metadata_function.cpp + default_functions.cpp) — each call
-    * becomes a registered temp view. */
-  private def rewriteTableFns(q: String): String =
-    TableFn.replaceAllIn(q, m => {
-      // depth/quote-aware arg split: quoted names may contain commas/parens
-      val args = LakeSql.splitTop(m.group(3)).filter(_.nonEmpty)
-      def arg(i: Int): String = {
-        val a = args(i)
-        if (a.startsWith("'") && a.endsWith("'") && a.length >= 2)
-          a.substring(1, a.length - 1).replace("''", "'")
-        else a
-      }
-      val df = m.group(2).toLowerCase(java.util.Locale.ROOT) match {
-        case "snapshots" => snapshots()
-        case "table_info" => tableInfo()
-        case "database_size" => databaseSize()
-        case "settings" => settings()
-        case "options" =>
-          import spark.implicits._
-          options().toDF("option_key", "option_value")
-        case "list_files" =>
-          listFiles(arg(0),
-            if (args.length > 1) Some(arg(1).toLong)
-            else None)
-        case "table_changes" =>
-          tableChanges(arg(0), arg(1).toLong, arg(2).toLong)
-        case "table_insertions" =>
-          tableInsertions(arg(0), arg(1).toLong, arg(2).toLong)
-        case "table_deletions" =>
-          tableDeletions(arg(0), arg(1).toLong, arg(2).toLong)
-        case "metadata_log" => metadataLog()
-      }
-      val vn = s"__fn_${m.group(2).toLowerCase(java.util.Locale.ROOT)}_" +
-        math.abs(m.group(3).hashCode).toString
-      df.createOrReplaceTempView(vn)
-      java.util.regex.Matcher.quoteReplacement(m.group(1) + vn)
-    })
+    * base_metadata_function.cpp + default_functions.cpp) as DataFrames;
+    * None for any other name. Arguments are literals or bare names. */
+  private[graft] def tableFunction(name: String,
+      args: Seq[Expression]): Option[DataFrame] = {
+    def arg(i: Int): String = args(i) match {
+      case u: UnresolvedAttribute => u.name
+      case e => String.valueOf(e.eval())
+    }
+    PartialFunction.condOpt(name.toLowerCase(java.util.Locale.ROOT)) {
+      case "snapshots" => snapshots()
+      case "table_info" => tableInfo()
+      case "database_size" => databaseSize()
+      case "settings" => settings()
+      case "options" =>
+        import spark.implicits._
+        options().toDF("option_key", "option_value")
+      case "list_files" =>
+        listFiles(arg(0), Option.when(args.length > 1)(arg(1).toLong))
+      case "table_changes" =>
+        tableChanges(arg(0), arg(1).toLong, arg(2).toLong)
+      case "table_insertions" =>
+        tableInsertions(arg(0), arg(1).toLong, arg(2).toLong)
+      case "table_deletions" =>
+        tableDeletions(arg(0), arg(1).toLong, arg(2).toLong)
+      case "metadata_log" => metadataLog()
+    }
+  }
 
   private val AtClause =
     """(?is)\b([\w$.]+)\s+AT\s*\(\s*(VERSION|TIMESTAMP)\s*=>\s*('[^']*'|[^\s)]+)\s*\)""".r
 
   /** `FROM t AT (VERSION => v | TIMESTAMP => 'ts')` — the reference's
-    * time-travel clause (ducklake_transaction.cpp:1613-1645) — rewritten
-    * to a snapshot-pinned temp view. */
+    * time-travel clause (ducklake_transaction.cpp:1613-1645) — in Spark's
+    * spelling, `VERSION AS OF v` / `TIMESTAMP AS OF`. A quoted timestamp
+    * reads as `java.sql.Timestamp.valueOf` reads it, a bare number as
+    * epoch milliseconds; either becomes an exact UTC instant. */
   private def rewriteAtClauses(q: String): String =
     AtClause.replaceAllIn(q, m => {
-      val tbl = m.group(1)
       val raw = m.group(3)
-      val df = m.group(2).toUpperCase(java.util.Locale.ROOT) match {
-        case "VERSION" => tableOrViewAtVersion(tbl, raw.toLong)
+      val travel = m.group(2).toUpperCase(java.util.Locale.ROOT) match {
+        case "VERSION" => s"VERSION AS OF ${raw.toLong}"
         case _ =>
           val ms =
             if (raw.startsWith("'"))
               java.sql.Timestamp
                 .valueOf(raw.stripPrefix("'").stripSuffix("'")).getTime
             else raw.toLong
-          val snap = meta.snapshotAtTime(ms).getOrElse(
-            throw new IllegalArgumentException(s"no snapshot at time $ms"))
-          tableOrViewAtVersion(tbl, snap.snapshotId)
+          s"TIMESTAMP AS OF TIMESTAMP '${java.time.Instant.ofEpochMilli(ms)}'"
       }
-      val vn = s"${tbl.replace('.', '_')}__at__${raw.replaceAll("\\W", "")}"
-      df.createOrReplaceTempView(vn)
-      java.util.regex.Matcher.quoteReplacement(vn)
+      java.util.regex.Matcher.quoteReplacement(s"${m.group(1)} $travel")
     })
-
-  /** Table OR view resolved AT a snapshot version — time travel
-    * propagates through a view to its base relations, and a view that
-    * did not exist yet errors like the reference
-    * (time_travel/time_travel_views.test). */
-  def tableOrViewAtVersion(name: String, version: Long): DataFrame = {
-    val (s, t) = splitName(name)
-    val snap = meta.snapshotByVersion(version).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot $version"))
-    if (meta.tableByName(t, snap.snapshotId, s).isDefined)
-      return tableAtVersion(name, version)
-    meta.viewByName(t, snap.snapshotId, s) match {
-      case None => throw new IllegalArgumentException(
-        s"$name does not exist at version $version")
-      case Some(viewSql) =>
-        // Pin every base table of the view's schema (and main) at the
-        // same snapshot, then resolve nested views to fixpoint — inside
-        // a CLONED session (own temp-view catalog, shared context), so
-        // the caller's temp views are never clobbered and nothing
-        // version-pinned leaks into the session after the call. "main"
-        // registers first so a same-named table in the view's own
-        // schema wins the bare-name binding.
-        val sub = spark.newSession()
-        val schemas = (Seq("main") ++ (if (s == "main") Nil else Seq(s)))
-        schemas.foreach(sc => meta.listTables(snap.snapshotId, sc)
-          .foreach { bt =>
-            val qn = if (sc == "main") bt.name else s"$sc.${bt.name}"
-            // rebind the pinned scan's plan into the SUB session so the
-            // temp view lands in ITS catalog, not the caller's
-            org.apache.spark.sql.graftshim.DatasetBridge
-              .ofRows(sub, tableAtVersion(qn, version).queryExecution.logical)
-              .createOrReplaceTempView(bt.name)
-          })
-        var pending = schemas.flatMap(sc =>
-          meta.listViews(snap.snapshotId, sc)).filterNot(_._1 == t)
-        var pass = 0
-        while (pending.nonEmpty && pass < 3) {
-          pending = pending.filterNot { case (vn2, sql2) =>
-            scala.util.Try(
-              sub.sql(sql2).createOrReplaceTempView(vn2)).isSuccess
-          }
-          pass += 1
-        }
-        // hand the CALLER a frame bound to its own session: the analyzed
-        // plan no longer references the sub-session's temp catalog
-        org.apache.spark.sql.graftshim.DatasetBridge.ofRows(spark,
-          sub.sql(viewSql).queryExecution.analyzed)
-    }
-  }
 
   /** CREATE MACRO name(params) AS body (reference ducklake_macro tables);
     * expansion is textual parameter substitution at call sites. */

@@ -13,9 +13,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * MACRO, SET/RESET SORTED BY and PARTITIONED BY, COMMENT ON,
   * BEGIN/COMMIT/ROLLBACK, CHECKPOINT, DESCRIBE/SHOW, and DuckDB-style
   * `CALL` argument text bound to [[graft.sources.GraftProcedures]].
-  * INSERT/DELETE/UPDATE/MERGE run through `spark.sql`'s commands and
-  * plain queries through Spark SQL over temp views (both in
-  * [[Lake.sql]]). Scalar expressions use Spark SQL syntax — the "spark"
+  * Queries and INSERT/DELETE/UPDATE/MERGE run as `spark.sql` runs them
+  * ([[Lake.sql]]). Scalar expressions use Spark SQL syntax — the "spark"
   * dialect of the stored-view/macro model. Results follow DuckDB's
   * convention of an affected-row "Count" column.
   */
@@ -94,10 +93,10 @@ private[catalog] object LakeSql {
   def sparkDml(stmt: String): String =
     BareInsert.replaceAllIn(stmt, "THEN INSERT *")
 
-  /** Try to handle `stmt` as a DuckDB-only statement; None → DML or a
-    * plain query. */
+  /** Try to handle `stmt` as a DuckDB-only statement; None → a query or
+    * DML for `run`, which also runs a CTAS's query. */
   def dispatch(lake: Lake, spark: SparkSession, stmt: String,
-      runQuery: String => DataFrame): Option[DataFrame] = {
+      run: String => DataFrame): Option[DataFrame] = {
     import spark.implicits._
     def count(n: Long): DataFrame = Seq(n).toDF("Count")
 
@@ -126,7 +125,7 @@ private[catalog] object LakeSql {
       case Ctas(orReplace, tbl, query) => Some {
         if (orReplace != null)
           try lake.dropTable(tbl) catch { case _: IllegalArgumentException => }
-        val df = runQuery(query)
+        val df = run(query)
         lake.createTableAs(tbl, df)
         count(lake.table(tbl).count())
       }

@@ -101,8 +101,8 @@ object RelationalQueries extends QueryPack {
     * [[graft.functions.BoundedTopK]] as a regular aggregate (k-row
     * buffer, map-side partials — the exchange carries ≤10 rows per map
     * partition) instead of TakeOrderedAndProject. Same oracle as
-    * q3_topk; swap into the bench slot with SPARK_GRAFT_Q3_BOUNDED=1.
-    * Outcome recorded in bench_runs/README (round 12). */
+    * q3_topk; registered as its own query, so Verify and the tests run
+    * it. Outcome recorded in bench_runs/README (round 12). */
   private[graft] def q3Bounded(spark: SparkSession, dir: String)
       : DataFrame = {
     val t = Tables(spark, dir)

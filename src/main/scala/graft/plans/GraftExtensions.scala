@@ -3,13 +3,15 @@ package graft.plans
 import graft.catalog.{Lake, MatchedDelete, MatchedUpdate}
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel,
+  UnresolvedAttribute, UnresolvedRelation, UnresolvedTableValuedFunction}
 import org.apache.spark.sql.catalyst.expressions.{
-  Alias, And, Attribute, AttributeReference, EqualTo, Expression,
-  MetadataAttribute, NamedExpression, PredicateHelper}
+  Alias, And, Attribute, AttributeReference, Cast, EqualTo, Expression,
+  MetadataAttribute, NamedExpression, PredicateHelper, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{
-  ExposesMetadataColumns, Filter, LeafNode, LogicalPlan, Project,
-  SubqueryAlias}
+  ExposesMetadataColumns, Filter, InsertIntoStatement, LeafNode,
+  LogicalPlan, Project, SubqueryAlias, SupportsNonDeterministicExpression,
+  UnresolvedWith}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types.{LongType, StringType}
@@ -50,47 +52,77 @@ private[graft] object LakeNames {
     * `lake` qualified by `alias`. Bare `t` (schema main) and `s.t` (`s`
     * not itself a registered alias) resolve against the names this
     * handle sees: committed, overlaid with the open transaction's
-    * creates, drops and renames. A view goes through `expandView` when
-    * that returns a plan (view expansion threads its cycle stack this
-    * way), which also sees views already qualified by `alias`. */
-  def qualify(plan: LogicalPlan, alias: String, lake: Lake)(
+    * creates, drops and renames; with `at`, the committed names of that
+    * snapshot, and each table is pinned to it (`VERSION AS OF at`). A
+    * name bound by an enclosing CTE stays the CTE's. A view goes through
+    * `expandView` when that returns a plan (view expansion threads its
+    * cycle stack this way), which also sees views already qualified by
+    * `alias`; a view under time travel stays a name for the resolver.
+    * The reference's metadata table functions in FROM bind to their
+    * DataFrames ([[graft.catalog.Lake.tableFunction]]). */
+  def qualify(plan: LogicalPlan, alias: String, lake: Lake,
+      at: Option[Long] = None)(
       expandView: (String, String) => Option[LogicalPlan] = (_, _) => None)
       : LogicalPlan = {
     val tables = scala.collection.mutable.Map.empty[String, Seq[String]]
     val views = scala.collection.mutable.Map
       .empty[String, Map[String, (String, String)]]
+    def tablesOf(s: String): Seq[String] = tables.getOrElseUpdate(s,
+      at.fold(lake.visibleTableNames(s))(
+        sid => lake.meta.listTables(sid, s).map(_.name)))
+    def viewsOf(s: String): Map[String, (String, String)] =
+      views.getOrElseUpdate(s, at.fold(lake.visibleViews(s))(sid =>
+        lake.meta.listViews(sid, s).map { case (n, q) =>
+          n.toLowerCase -> (n, q) }.toMap))
     def qualified(s: String, t: String): Seq[String] =
       if (s == "main") Seq(alias, t) else Seq(alias, s, t)
-    def resolve(ur: UnresolvedRelation, s: String, t: String,
-        bare: Boolean): LogicalPlan =
-      views.getOrElseUpdate(s, lake.visibleViews(s)).get(t.toLowerCase)
-        .map(_._1) match {
-        case Some(v) => expandView(s, v).getOrElse(
-          if (bare) ur.copy(multipartIdentifier = qualified(s, v)) else ur)
-        case None if bare =>
-          tables.getOrElseUpdate(s, lake.visibleTableNames(s))
-            .find(_.equalsIgnoreCase(t))
-            .map(n => ur.copy(multipartIdentifier = qualified(s, n)))
-            .getOrElse(ur)
-        case None => ur
-      }
-    def relation(p: LogicalPlan): LogicalPlan = p match {
-      case ur: UnresolvedRelation => ur.multipartIdentifier match {
-        case Seq(t) => resolve(ur, "main", t, bare = true)
-        case Seq(s, t) if LakeRegistry.get(s).isEmpty =>
-          resolve(ur, s, t, bare = true)
-        case Seq(a, t) if a == alias => resolve(ur, "main", t, bare = false)
-        case Seq(a, s, t) if a == alias => resolve(ur, s, t, bare = false)
-        case _ => ur
-      }
-      case other => other
+    // (schema, name, bare) of a name this lake may own
+    def target(parts: Seq[String], ctes: Set[String])
+        : Option[(String, String, Boolean)] = parts match {
+      case Seq(t) if !ctes.contains(t.toLowerCase) => Some(("main", t, true))
+      case Seq(s, t) if LakeRegistry.get(s).isEmpty => Some((s, t, true))
+      case Seq(a, t) if a == alias => Some(("main", t, false))
+      case Seq(a, s, t) if a == alias => Some((s, t, false))
+      case _ => None
     }
-    plan.transformDownWithSubqueries {
-      // an INSERT's target is a field, not a child
-      case i: org.apache.spark.sql.catalyst.plans.logical.InsertIntoStatement =>
-        i.copy(table = relation(i.table))
-      case ur: UnresolvedRelation => relation(ur)
+    def relation(ur: UnresolvedRelation, ctes: Set[String],
+        travel: Boolean): LogicalPlan =
+      target(ur.multipartIdentifier, ctes).fold(ur: LogicalPlan) {
+        case (s, t, bare) =>
+          val view = viewsOf(s).get(t.toLowerCase).map(_._1)
+          val expanded = if (travel) None else view.flatMap(expandView(s, _))
+          def name = view.orElse(
+            if (bare) tablesOf(s).find(_.equalsIgnoreCase(t)) else Some(t))
+          expanded.orElse(name.map { n =>
+            val q = ur.copy(multipartIdentifier = qualified(s, n))
+            if (at.isEmpty || view.isDefined || travel) q
+            else RelationTimeTravel(q, None, at.map(_.toString))
+          }).getOrElse(ur)
+      }
+    // top-down with the CTE names in scope; CTE definitions, an INSERT's
+    // target and a time-travel relation are fields, not children
+    def walk(p: LogicalPlan, ctes: Set[String]): LogicalPlan = p match {
+      case w: UnresolvedWith =>
+        var scope = ctes
+        val defs = w.cteRelations.map { case (n, d, depth) =>
+          val inner = if (w.allowRecursion) scope + n.toLowerCase else scope
+          scope += n.toLowerCase
+          (n, walk(d, inner).asInstanceOf[SubqueryAlias], depth)
+        }
+        w.copy(child = walk(w.child, scope), cteRelations = defs)
+      case ur: UnresolvedRelation => relation(ur, ctes, travel = false)
+      case tt @ RelationTimeTravel(ur: UnresolvedRelation, _, _) =>
+        tt.copy(relation = relation(ur, ctes, travel = true))
+      case f: UnresolvedTableValuedFunction if f.name.size == 1 =>
+        lake.tableFunction(f.name.head, f.functionArgs)
+          .fold(f: LogicalPlan)(_.queryExecution.analyzed)
+      case i: InsertIntoStatement =>
+        i.copy(table = walk(i.table, ctes), query = walk(i.query, ctes))
+      case other => other.mapChildren(walk(_, ctes)).transformExpressions {
+        case s: SubqueryExpression => s.withNewPlan(walk(s.plan, ctes))
+      }
     }
+    walk(plan, Set.empty)
   }
 }
 
@@ -104,14 +136,17 @@ case class LakeRelationPlaceholder(alias: String, table: String,
   /** The scan's virtual columns (reference ducklake_table_entry.cpp:
     * 398-411) as hidden metadata columns of the current snapshot: `WHERE
     * rowid = 3` resolves in a DML condition or a query without widening
-    * `SELECT *`. A real column of the same name wins. */
+    * `SELECT *`. A real column of the same name wins. Once merged into
+    * the output they stay the metadata output, so a query that filters on
+    * one and selects it resolves both against the same attribute. */
   override lazy val metadataOutput: Seq[AttributeReference] =
     if (version.isDefined || tsMs.isDefined) Nil
-    else LakeRelationPlaceholder.VirtualColumns
-      .filterNot { case (n, _) => output.exists(_.name.equalsIgnoreCase(n)) }
-      .map { case (n, dt) => MetadataAttribute(n, dt, nullable = true) }
+    else metadataOutputWithOutConflicts(
+      LakeRelationPlaceholder.VirtualColumns.map { case (n, dt) =>
+        MetadataAttribute(n, dt, nullable = true) },
+      renameOnConflict = false)
   override def withMetadataColumns(): LogicalPlan =
-    copy(output = output ++ metadataOutput)
+    copy(output = output ++ metadataOutput.filterNot(outputSet.contains))
 
   /** Catalog-backed estimates (reference answers scan cardinality from
     * `ducklake_table_stats`, ducklake_multi_file_list.cpp:136-142): lets
@@ -223,9 +258,17 @@ object LakeDml {
     })
 }
 
+/** A row-level command's conditions may be nondeterministic, as DuckDB's
+  * `WHERE random() < 0.5` is: the command evaluates them in the scan of
+  * its matched rows, where Spark takes them. */
+trait LakeRowLevelCommand extends SupportsNonDeterministicExpression {
+  override def allowNonDeterministicExpression: Boolean = true
+}
+
 /** `spark.sql("DELETE FROM graft.t WHERE …")` → lake positional delete. */
 case class LakeDeleteCommand(alias: String, table: String, cond: Expression)
-    extends org.apache.spark.sql.execution.command.LeafRunnableCommand {
+    extends org.apache.spark.sql.execution.command.LeafRunnableCommand
+    with LakeRowLevelCommand {
   override val output: Seq[Attribute] = LakeDml.countOutput
   override def run(session: SparkSession): Seq[Row] =
     Seq(Row(LakeDml.lake(alias).delete(table, LakeDml.toColumn(cond))))
@@ -235,7 +278,8 @@ case class LakeDeleteCommand(alias: String, table: String, cond: Expression)
   * update. */
 case class LakeUpdateCommand(alias: String, table: String,
     assignments: Seq[(String, Expression)], cond: Option[Expression])
-    extends org.apache.spark.sql.execution.command.LeafRunnableCommand {
+    extends org.apache.spark.sql.execution.command.LeafRunnableCommand
+    with LakeRowLevelCommand {
   override val output: Seq[Attribute] = LakeDml.countOutput
   override def run(session: SparkSession): Seq[Row] =
     Seq(Row(LakeDml.lake(alias).update(table,
@@ -256,7 +300,8 @@ case class LakeMergeCommand(alias: String, table: String,
     notMatchedCond: Option[Expression] = None,
     bySourceDeleteCond: Option[Expression] = None,
     insertValues: Option[Seq[(String, Expression)]] = None)
-    extends org.apache.spark.sql.execution.command.LeafRunnableCommand {
+    extends org.apache.spark.sql.execution.command.LeafRunnableCommand
+    with LakeRowLevelCommand {
   override val output: Seq[Attribute] = LakeDml.countOutput
   override def innerChildren: Seq[LogicalPlan] = Seq(source)
 
@@ -296,15 +341,17 @@ case class ResolveLakeRelation(spark: SparkSession)
     val lake = LakeRegistry.get(alias).get
     // time-travel reads resolve their attributes against the schema AT
     // that snapshot (columns may have been added/renamed since)
-    val snapId = version.orElse(
-      tsMs.map(ms => lake.meta.snapshotAtTime(ms).getOrElse(
-        throw new IllegalArgumentException(
-          s"no snapshot at time $ms for $table")).snapshotId))
+    val snapId = snapshotOf(lake, table, version, tsMs)
     val attrs = lake.schemaOf(table, snapId).map(f =>
       AttributeReference(f.name, f.dataType, f.nullable)())
     SubqueryAlias(table.split('.').last,
       LakeRelationPlaceholder(alias, table, attrs, version, tsMs))
   }
+  private def snapshotOf(lake: Lake, table: String, version: Option[Long],
+      tsMs: Option[Long]): Option[Long] =
+    version.orElse(tsMs.map(ms => lake.meta.snapshotAtTime(ms).getOrElse(
+      throw new IllegalArgumentException(
+        s"no snapshot at time $ms for $table")).snapshotId))
   private def lakeName(u: UnresolvedRelation): Option[(String, String)] =
     lakeIdent(u.multipartIdentifier)
   override def apply(plan: LogicalPlan): LogicalPlan =
@@ -375,10 +422,18 @@ case class ResolveLakeRelation(spark: SparkSession)
               if p.version.isEmpty && p.tsMs.isEmpty => Some(p)
           case _ => None
         }
+        // a side may carry the implicit cast that widens it to the other
+        def attr(e: Expression): Option[AttributeReference] = e match {
+          case a: AttributeReference => Some(a)
+          case Cast(a: AttributeReference, _, _, _) => Some(a)
+          case _ => None
+        }
         def keys(e: Expression): Option[Seq[String]] = e match {
           case And(l, r) => for (a <- keys(l); b <- keys(r)) yield a ++ b
-          case EqualTo(a: AttributeReference, b: AttributeReference)
-              if a.name.equalsIgnoreCase(b.name) => Some(Seq(a.name))
+          case EqualTo(l, r) => for {
+            a <- attr(l)
+            b <- attr(r) if a.name.equalsIgnoreCase(b.name)
+          } yield Seq(a.name)
           case _ => None
         }
         (placeholderOpt, keys(m.mergeCondition)) match {
@@ -464,8 +519,11 @@ case class ResolveLakeRelation(spark: SparkSession)
           case _ => m
         }
       // SQL time travel: SELECT … FROM graft.t VERSION AS OF n
-      //                  / TIMESTAMP AS OF '…' (reference AT (VERSION =>))
-      case tt: org.apache.spark.sql.catalyst.analysis.RelationTimeTravel =>
+      //                  / TIMESTAMP AS OF '…' (reference AT (VERSION =>)).
+      // A name that is no table there is the view stored at that
+      // snapshot, its relations pinned to the same snapshot (reference
+      // time_travel_views.test)
+      case tt: RelationTimeTravel =>
         (tt.relation match {
           case u: UnresolvedRelation => lakeName(u)
           case _ => None
@@ -480,7 +538,12 @@ case class ResolveLakeRelation(spark: SparkSession)
                   .eval(null).asInstanceOf[Long]
                 micros / 1000L
             }
-            placeholder(alias, table, ver, ts)
+            try placeholder(alias, table, ver, ts)
+            catch {
+              case _: IllegalArgumentException =>
+                expandView(alias, table, Nil,
+                  snapshotOf(LakeDml.lake(alias), table, ver, ts))
+            }
           case None => tt
         }
       // CREATE [OR REPLACE] VIEW graft.v AS … / DROP VIEW graft.v — Spark
@@ -540,7 +603,7 @@ case class ResolveLakeRelation(spark: SparkSession)
         }
       case u: UnresolvedRelation if lakeName(u).isDefined =>
         val (alias, table) = lakeName(u).get
-        viewOrPlaceholder(alias, table)
+        expandView(alias, table, Nil)
     }
 
   private def lakeIdent(parts: Seq[String]): Option[(String, String)] =
@@ -561,19 +624,19 @@ case class ResolveLakeRelation(spark: SparkSession)
     * placeholder path unchanged. A self- or mutually-recursive view
     * chain fails with a clean "recursive view" error (the reference
     * fails with a max-depth error; Spark's fixpoint analyzer would
-    * otherwise surface a confusing max-iterations internal error). */
-  private def viewOrPlaceholder(alias: String, table: String): LogicalPlan =
-    expandView(alias, table, List.empty)
-
+    * otherwise surface a confusing max-iterations internal error).
+    * `at` expands the view stored at that snapshot, with every relation
+    * under it pinned there; a view missing at `at` is an error. */
   private def expandView(alias: String, table: String,
-      stack: List[String]): LogicalPlan = {
+      stack: List[String], at: Option[Long] = None): LogicalPlan = {
     val lake = LakeRegistry.get(alias).get
     val (schema, name) = table.split('.') match {
       case Array(s, t) => (s, t)
       case _ => ("main", table)
     }
     val key = s"$schema.$name"
-    lake.viewSqlAt(schema, name) match {
+    at.fold(lake.viewSqlAt(schema, name))(
+      lake.meta.viewByName(name, _, schema)) match {
       case Some(viewSql) =>
         if (stack.contains(key))
           throw new IllegalArgumentException(
@@ -582,12 +645,14 @@ case class ResolveLakeRelation(spark: SparkSession)
         // stack — leaving them for the analyzer rule would restart cycle
         // detection from an empty stack and loop
         val qualified = LakeNames.qualify(
-          spark.sessionState.sqlParser.parsePlan(viewSql), alias, lake) {
+          spark.sessionState.sqlParser.parsePlan(viewSql), alias, lake, at) {
           (s, v) => Some(expandView(alias,
-            if (s == "main") v else s"$s.$v", key :: stack))
+            if (s == "main") v else s"$s.$v", key :: stack, at))
         }
         SubqueryAlias(name, qualified)
-      case None => placeholder(alias, table)
+      case None => at.fold(placeholder(alias, table))(v =>
+        throw new IllegalArgumentException(
+          s"$table does not exist at version $v"))
     }
   }
 }

@@ -419,4 +419,82 @@ class GraftExtensionsSpec extends AnyFunSuite {
         Seq(10L))
     } finally LakeRegistry.unregister("graft")
   }
+
+  test("DML conditions may be nondeterministic, through spark.sql and " +
+      "lake.sql") {
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graftextnd").toString
+    val lake = Lake.attach(spark, s"$dir/cat", s"$dir/data")
+    LakeRegistry.register("graft", lake)
+    try {
+      lake.createTableAs("u", (1L to 50L).map(k => (k, "a")).toDF("id", "v"))
+      spark.udf.register("ndprobe",
+        udf((x: Long) => x).asNondeterministic())
+      assert(spark.sql("UPDATE graft.u SET v = 'c' WHERE ndprobe(id) = 42")
+        .head().getLong(0) == 1L)
+      assert(lake.sql("UPDATE u SET v = 'd' WHERE ndprobe(id) = 43")
+        .head().getLong(0) == 1L)
+      assert(lake.table("u").filter(col("v") =!= "a").orderBy("id")
+        .as[(Long, String)].collect().toSeq == Seq((42L, "c"), (43L, "d")))
+      assert(lake.sql("DELETE FROM u WHERE ndprobe(id) > 45")
+        .head().getLong(0) == 5L)
+      assert(spark.sql("DELETE FROM graft.u WHERE rand() >= 0")
+        .head().getLong(0) == 45L)
+      assert(lake.table("u").count() == 0L)
+    } finally LakeRegistry.unregister("graft")
+  }
+
+  test("spark.sql MERGE whose ON key needs an implicit cast") {
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graftextcast").toString
+    val lake = Lake.attach(spark, s"$dir/cat", s"$dir/data")
+    LakeRegistry.register("graft", lake)
+    try {
+      lake.createTableAs("u", Seq((394L, "a"), (395L, "b")).toDF("id", "v"))
+      // BIGINT t.id against INT s.id: the condition analyzes as
+      // t.id = CAST(s.id AS BIGINT)
+      assert(spark.sql(
+        """MERGE INTO graft.u t
+          |USING (SELECT * FROM VALUES (395, 'm'), (396, 'n') AS s(id, v)) s
+          |ON t.id = s.id
+          |WHEN MATCHED THEN UPDATE SET v = s.v
+          |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+        .head().getLong(0) == 2L)
+      assert(lake.table("u").orderBy("id").as[(Long, String)].collect()
+        .toSeq == Seq((394L, "a"), (395L, "m"), (396L, "n")))
+    } finally LakeRegistry.unregister("graft")
+  }
+
+  test("spark.sql VERSION AS OF over a lake view matches lake.sql's AT " +
+      "form") {
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graftextvtt").toString
+    val lake = Lake.attach(spark, s"$dir/cat", s"$dir/data")
+    LakeRegistry.register("graft", lake)
+    try {
+      lake.createTableAs("t", Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
+      val vNoView = lake.currentSnapshotId()
+      lake.createView("tv", "SELECT id * 10 AS id10, v FROM t")
+      val vView = lake.currentSnapshotId()
+      lake.sql("INSERT INTO t VALUES (3, 'c')")
+      lake.sql("DELETE FROM t WHERE id = 1")
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.as[(Long, String)].collect().toSeq
+      val viaSpark = rows(spark.sql(
+        s"SELECT id10, v FROM graft.tv VERSION AS OF $vView ORDER BY id10"))
+      assert(viaSpark == Seq((10L, "a"), (20L, "b")))
+      assert(rows(lake.sql(
+        s"SELECT id10, v FROM tv AT (VERSION => $vView) ORDER BY id10")) ==
+        viaSpark)
+      // the current view reads the current table
+      assert(rows(spark.sql("SELECT id10, v FROM graft.tv ORDER BY id10")) ==
+        Seq((20L, "b"), (30L, "c")))
+      val e = intercept[IllegalArgumentException](
+        spark.sql(s"SELECT * FROM graft.tv VERSION AS OF $vNoView").collect())
+      assert(e.getMessage.contains(s"does not exist at version $vNoView"))
+    } finally LakeRegistry.unregister("graft")
+  }
 }

@@ -437,4 +437,19 @@ class LakeSpec extends AnyFunSuite {
     lake.addDataFiles("fo", Seq(f.toString))
     assert(lake.table("fo").count() == 20)
   }
+
+  test("a lake.sql result keeps its call's snapshot and outlives detach") {
+    val lake = freshLake()
+    lake.createTableAs("t", Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
+    val rows = lake.sql("SELECT id, v FROM t WHERE id > 0 ORDER BY id")
+    val n = lake.sql("SELECT COUNT(*) AS n FROM t")
+    lake.sql("INSERT INTO t VALUES (3, 'c')")
+    val before = Seq((1L, "a"), (2L, "b"))
+    assert(rows.as[(Long, String)].collect().toSeq == before)
+    assert(n.head().getLong(0) == 2L)
+    val after = lake.sql("SELECT id FROM t ORDER BY id")
+    lake.detach()
+    assert(rows.as[(Long, String)].collect().toSeq == before)
+    assert(after.as[Long].collect().toSeq == Seq(1L, 2L, 3L))
+  }
 }

@@ -259,6 +259,22 @@ class ScanPlanSpec extends AnyFunSuite {
     reads.get()
   }
 
+  test("lake.sql point SELECT reads only the file its key can be in") {
+    val dir = Files.createTempDirectory("graftsp9").toString
+    val lake = Lake.attach(spark, s"$dir/cat", s"$dir/data")
+    // four key-clustered files: ids 1-100, 101-200, 201-300, 301-400
+    lake.createTableAs("t", (1L to 100L).toDF("id").coalesce(1))
+    (1 to 3).foreach(i =>
+      lake.append("t", (i * 100L + 1 to i * 100L + 100).toDF("id").coalesce(1)))
+    assert(lake.listFiles("t").count() == 4)
+    val reads = dataFileReads(lake, "t") {
+      assert(lake.sql("SELECT id FROM t WHERE id = 150").as[Long].collect()
+        .toSeq == Seq(150L))
+    }
+    // the predicate reaches catalog stats pruning, as on spark.sql's path
+    assert(reads == 1L, s"point SELECT read $reads data files")
+  }
+
   test("MERGE reads each target file once") {
     val dir = Files.createTempDirectory("graftsp9").toString
     val lake = Lake.attach(spark, s"$dir/cat", s"$dir/data")

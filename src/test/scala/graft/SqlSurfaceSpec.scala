@@ -172,6 +172,23 @@ class SqlSurfaceSpec extends AnyFunSuite {
     assert(gone == Seq(2L))
   }
 
+  test("AT (TIMESTAMP => …) takes a quoted local timestamp or epoch " +
+      "milliseconds") {
+    val dir = Files.createTempDirectory("graftsqlts").toString
+    val lake = Lake.attach(spark, s"$dir/cat", s"$dir/data")
+    lake.createTableAs("tt", Seq(1L).toDF("id"))
+    val created = lake.snapshots().orderBy(desc("snapshot_id")).head()
+      .getTimestamp(1)
+    Thread.sleep(5)
+    lake.sql("INSERT INTO tt VALUES (2)")
+    def count(at: String): Long = lake.sql(
+      s"SELECT COUNT(*) AS n FROM tt AT (TIMESTAMP => $at)").head().getLong(0)
+    assert(count(s"'$created'") == 1L)
+    assert(count(created.getTime.toString) == 1L)
+    assert(count(s"${created.getTime + 60000L}") == 2L)
+    lake.detach()
+  }
+
   test("views time-travel through to their base tables " +
       "(reference time_travel_views.test)") {
     val dir = Files.createTempDirectory("graftsqlvtt").toString
@@ -508,6 +525,56 @@ class SqlSurfaceSpec extends AnyFunSuite {
         |WHEN NOT MATCHED THEN INSERT""".stripMargin).head().getLong(0) == 1L)
     assert(lake.table("tgt").orderBy("k").as[(Long, Double)]
       .collect().toSeq == Seq((1L, 10.0), (2L, 20.0)))
+    lake.detach()
+  }
+
+  test("lake.sql leaves the session's temp views as they were") {
+    val dir = Files.createTempDirectory("graftsqltv").toString
+    val lake = Lake.attach(spark, s"$dir/cat", s"$dir/data")
+    lake.createTableAs("t", Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
+    val v1 = lake.currentSnapshotId()
+    lake.createView("tv", "SELECT id, v FROM t WHERE id > 1")
+    val v2 = lake.currentSnapshotId()
+    lake.sql("INSERT INTO t VALUES (3, 'c')")
+    def tempViews: Set[String] = spark.catalog.listTables().collect()
+      .filter(_.isTemporary).map(_.name).toSet
+    val before = tempViews
+    def same[A](what: String)(body: => A): A = {
+      val out = body
+      assert(tempViews == before, s"$what changed the session's temp views")
+      out
+    }
+    assert(same("a SELECT")(
+      lake.sql("SELECT COUNT(*) AS n FROM t").head().getLong(0)) == 3L)
+    assert(same("a CTAS")(
+      lake.sql("CREATE TABLE t2 AS SELECT id FROM t WHERE id < 3")
+        .head().getLong(0)) == 2L)
+    assert(same("an AT read of a table")(
+      lake.sql(s"SELECT COUNT(*) AS n FROM t AT (VERSION => $v1)")
+        .head().getLong(0)) == 2L)
+    assert(same("an AT read of a view")(
+      lake.sql(s"SELECT COUNT(*) AS n FROM tv AT (VERSION => $v2)")
+        .head().getLong(0)) == 1L)
+    assert(same("a table function")(
+      lake.sql("SELECT COUNT(*) AS n FROM list_files('t')")
+        .head().getLong(0)) == lake.listFiles("t").count())
+    assert(same("lake.view")(lake.view("tv").count()) == 2L)
+    lake.detach()
+  }
+
+  test("a CTE named like a lake table reads the CTE") {
+    val dir = Files.createTempDirectory("graftsqlcte").toString
+    val lake = Lake.attach(spark, s"$dir/cat", s"$dir/data")
+    lake.createTableAs("base", Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
+    assert(lake.sql(
+      """WITH base AS (SELECT id * 100 AS id FROM base WHERE id = 2)
+        |SELECT id FROM base""".stripMargin)
+      .as[Long].collect().toSeq == Seq(200L))
+    // a later CTE sees an earlier one; the table stays reachable elsewhere
+    assert(lake.sql(
+      """WITH x AS (SELECT id FROM base), base AS (SELECT id + 1 AS id FROM x)
+        |SELECT b.id FROM base b JOIN x ON b.id = x.id""".stripMargin)
+      .as[Long].collect().toSeq == Seq(2L))
     lake.detach()
   }
 }
