@@ -919,27 +919,26 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
   }
 
   private def resolve(name: String,
-      snapshotId: Option[Long] = None): TableInfo = {
+      snapshotId: Option[Long] = None): TableInfo =
+    lookup(name, snapshotId).getOrElse(
+      throw new IllegalArgumentException(s"no table $name"))
+
+  private def lookup(name: String,
+      snapshotId: Option[Long]): Option[TableInfo] = {
     val (s, t0) = splitName(name)
     // tables created inside the open transaction resolve for their own
     // statements (and no one else's — the catalog learns of them at commit)
-    txn.flatMap(_.createdByName(s, t0)).foreach { pid =>
-      return TableInfo(pid, "", -1L, t0, name)
+    txn.flatMap(_.createdByName(s, t0)) match {
+      case Some(pid) => Some(TableInfo(pid, "", -1L, t0, name))
+      case None =>
+        // buffered renames rebind names for the txn's own statements: the
+        // requested CURRENT name translates back to the committed one
+        val t = txn.fold(Option(t0))(txnCommittedName(_, s, t0))
+        t.flatMap(n => meta.tableByName(n,
+            snapshotId.getOrElse(meta.currentSnapshot().snapshotId), s))
+          // tables dropped inside the open transaction are gone for reads
+          .filterNot(info => txn.exists(_.dropped.contains(info.tableId)))
     }
-    // buffered renames rebind names for the txn's own statements: the
-    // requested CURRENT name translates back to the committed one
-    val t = txn match {
-      case Some(st) => txnCommittedName(st, s, t0)
-        .getOrElse(throw new IllegalArgumentException(s"no table $name"))
-      case None => t0
-    }
-    val sid = snapshotId.getOrElse(meta.currentSnapshot().snapshotId)
-    val info = meta.tableByName(t, sid, s)
-      .getOrElse(throw new IllegalArgumentException(s"no table $name"))
-    // tables dropped inside the open transaction are gone for our reads
-    if (txn.exists(_.dropped.contains(info.tableId)))
-      throw new IllegalArgumentException(s"no table $name")
-    info
   }
 
   /** columnsOf with the open transaction's created-table and
@@ -1051,10 +1050,15 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
     meta.listSchemas().map(_.name) ++
       txn.toSeq.flatMap(_.createdSchemas)
 
-  def schemaOf(name: String, snapshotId: Option[Long] = None): StructType = {
+  def schemaOf(name: String, snapshotId: Option[Long] = None): StructType =
+    tableSchemaAt(name, snapshotId).getOrElse(
+      throw new IllegalArgumentException(s"no table $name"))
+
+  /** [[schemaOf]], or None when no table has that name at the snapshot */
+  private[graft] def tableSchemaAt(name: String,
+      snapshotId: Option[Long]): Option[StructType] = {
     val sid = snapshotId.getOrElse(meta.currentSnapshot().snapshotId)
-    val t = resolve(name, Some(sid))
-    toStruct(columnsAt(t.tableId, sid))
+    lookup(name, Some(sid)).map(t => toStruct(columnsAt(t.tableId, sid)))
   }
 
   private def toStruct(cols: Seq[ColumnInfo]): StructType =

@@ -14,7 +14,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{
   UnresolvedWith}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.graftshim.ColumnBridge
-import org.apache.spark.sql.types.{LongType, StringType}
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
 /** SQL-transparent lake access via Catalyst (SURVEY.md §4's "cleaner
   * long-term home"): `graft.<table>` resolves to a placeholder leaf during
@@ -91,8 +91,12 @@ private[graft] object LakeNames {
         case (s, t, bare) =>
           val view = viewsOf(s).get(t.toLowerCase).map(_._1)
           val expanded = if (travel) None else view.flatMap(expandView(s, _))
+          // under time travel the name need not exist now: the resolver
+          // looks it up at the snapshot
           def name = view.orElse(
-            if (bare) tablesOf(s).find(_.equalsIgnoreCase(t)) else Some(t))
+            if (bare) tablesOf(s).find(_.equalsIgnoreCase(t))
+              .orElse(Option.when(travel)(t))
+            else Some(t))
           expanded.orElse(name.map { n =>
             val q = ur.copy(multipartIdentifier = qualified(s, n))
             if (at.isEmpty || view.isDefined || travel) q
@@ -258,17 +262,14 @@ object LakeDml {
     })
 }
 
-/** A row-level command's conditions may be nondeterministic, as DuckDB's
-  * `WHERE random() < 0.5` is: the command evaluates them in the scan of
-  * its matched rows, where Spark takes them. */
-trait LakeRowLevelCommand extends SupportsNonDeterministicExpression {
-  override def allowNonDeterministicExpression: Boolean = true
-}
-
-/** `spark.sql("DELETE FROM graft.t WHERE …")` → lake positional delete. */
+/** `spark.sql("DELETE FROM graft.t WHERE …")` → lake positional delete.
+  * The condition may be nondeterministic, as DuckDB's `WHERE random() <
+  * 0.5` is: the command evaluates it in the scan of its matched rows
+  * (so may UPDATE's and MERGE's). */
 case class LakeDeleteCommand(alias: String, table: String, cond: Expression)
     extends org.apache.spark.sql.execution.command.LeafRunnableCommand
-    with LakeRowLevelCommand {
+    with SupportsNonDeterministicExpression {
+  override def allowNonDeterministicExpression: Boolean = true
   override val output: Seq[Attribute] = LakeDml.countOutput
   override def run(session: SparkSession): Seq[Row] =
     Seq(Row(LakeDml.lake(alias).delete(table, LakeDml.toColumn(cond))))
@@ -279,7 +280,8 @@ case class LakeDeleteCommand(alias: String, table: String, cond: Expression)
 case class LakeUpdateCommand(alias: String, table: String,
     assignments: Seq[(String, Expression)], cond: Option[Expression])
     extends org.apache.spark.sql.execution.command.LeafRunnableCommand
-    with LakeRowLevelCommand {
+    with SupportsNonDeterministicExpression {
+  override def allowNonDeterministicExpression: Boolean = true
   override val output: Seq[Attribute] = LakeDml.countOutput
   override def run(session: SparkSession): Seq[Row] =
     Seq(Row(LakeDml.lake(alias).update(table,
@@ -301,7 +303,8 @@ case class LakeMergeCommand(alias: String, table: String,
     bySourceDeleteCond: Option[Expression] = None,
     insertValues: Option[Seq[(String, Expression)]] = None)
     extends org.apache.spark.sql.execution.command.LeafRunnableCommand
-    with LakeRowLevelCommand {
+    with SupportsNonDeterministicExpression {
+  override def allowNonDeterministicExpression: Boolean = true
   override val output: Seq[Attribute] = LakeDml.countOutput
   override def innerChildren: Seq[LogicalPlan] = Seq(source)
 
@@ -335,14 +338,14 @@ case class LakeMergeCommand(alias: String, table: String,
 
 case class ResolveLakeRelation(spark: SparkSession)
     extends Rule[LogicalPlan] {
-  private def placeholder(alias: String, table: String,
-      version: Option[Long] = None,
-      tsMs: Option[Long] = None): LogicalPlan = {
-    val lake = LakeRegistry.get(alias).get
-    // time-travel reads resolve their attributes against the schema AT
-    // that snapshot (columns may have been added/renamed since)
-    val snapId = snapshotOf(lake, table, version, tsMs)
-    val attrs = lake.schemaOf(table, snapId).map(f =>
+  private def placeholder(alias: String, table: String): LogicalPlan =
+    placeholder(alias, table, LakeRegistry.get(alias).get.schemaOf(table),
+      None, None)
+  // time-travel reads resolve their attributes against the schema AT
+  // that snapshot (columns may have been added/renamed since)
+  private def placeholder(alias: String, table: String, schema: StructType,
+      version: Option[Long], tsMs: Option[Long]): LogicalPlan = {
+    val attrs = schema.map(f =>
       AttributeReference(f.name, f.dataType, f.nullable)())
     SubqueryAlias(table.split('.').last,
       LakeRelationPlaceholder(alias, table, attrs, version, tsMs))
@@ -422,17 +425,22 @@ case class ResolveLakeRelation(spark: SparkSession)
               if p.version.isEmpty && p.tsMs.isEmpty => Some(p)
           case _ => None
         }
-        // a side may carry the implicit cast that widens it to the other
-        def attr(e: Expression): Option[AttributeReference] = e match {
+        // a side may carry only the implicit cast that widens it to the
+        // other side's type; mergeOn's bare `t.k === s.k` join gets the
+        // same cast, while any other cast would be dropped there
+        def attr(e: Expression, other: Expression)
+            : Option[AttributeReference] = e match {
           case a: AttributeReference => Some(a)
-          case Cast(a: AttributeReference, _, _, _) => Some(a)
+          case Cast(a: AttributeReference, dt, _, _)
+              if dt == other.dataType && Cast.canUpCast(a.dataType, dt) =>
+            Some(a)
           case _ => None
         }
         def keys(e: Expression): Option[Seq[String]] = e match {
           case And(l, r) => for (a <- keys(l); b <- keys(r)) yield a ++ b
           case EqualTo(l, r) => for {
-            a <- attr(l)
-            b <- attr(r) if a.name.equalsIgnoreCase(b.name)
+            a <- attr(l, r)
+            b <- attr(r, l) if a.name.equalsIgnoreCase(b.name)
           } yield Seq(a.name)
           case _ => None
         }
@@ -538,12 +546,11 @@ case class ResolveLakeRelation(spark: SparkSession)
                   .eval(null).asInstanceOf[Long]
                 micros / 1000L
             }
-            try placeholder(alias, table, ver, ts)
-            catch {
-              case _: IllegalArgumentException =>
-                expandView(alias, table, Nil,
-                  snapshotOf(LakeDml.lake(alias), table, ver, ts))
-            }
+            val lake = LakeDml.lake(alias)
+            val sid = snapshotOf(lake, table, ver, ts)
+            lake.tableSchemaAt(table, sid).fold(
+              expandView(alias, table, Nil, sid))(
+              placeholder(alias, table, _, ver, ts))
           case None => tt
         }
       // CREATE [OR REPLACE] VIEW graft.v AS … / DROP VIEW graft.v — Spark

@@ -497,4 +497,38 @@ class GraftExtensionsSpec extends AnyFunSuite {
       assert(e.getMessage.contains(s"does not exist at version $vNoView"))
     } finally LakeRegistry.unregister("graft")
   }
+
+  test("spark.sql MERGE whose ON key narrows a column is left to Spark") {
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graftextnarrow").toString
+    val lake = Lake.attach(spark, s"$dir/cat", s"$dir/data")
+    LakeRegistry.register("graft", lake)
+    try {
+      lake.createTableAs("p", Seq((1.5, "a")).toDF("price", "v"))
+      lake.createTableAs("d",
+        Seq((java.sql.Timestamp.valueOf("2024-01-02 10:00:00"), "a"))
+          .toDF("ts", "v"))
+      // a cast the statement wrote (DOUBLE → INT, TIMESTAMP → DATE) is no
+      // key the lake's merge joins on: the MERGE fails rather than insert
+      // the rows it matches
+      for (sql <- Seq(
+        """MERGE INTO graft.p t
+          |USING (SELECT * FROM VALUES (1, 'm') AS s(price, v)) s
+          |ON CAST(t.price AS INT) = s.price
+          |WHEN MATCHED THEN UPDATE SET v = s.v
+          |WHEN NOT MATCHED THEN INSERT *""".stripMargin,
+        """MERGE INTO graft.d t
+          |USING (SELECT DATE'2024-01-02' AS ts, 'm' AS v) s
+          |ON CAST(t.ts AS DATE) = s.ts
+          |WHEN MATCHED THEN UPDATE SET v = s.v
+          |WHEN NOT MATCHED THEN INSERT *""".stripMargin)) {
+        val e = intercept[Exception](spark.sql(sql).collect())
+        assert(e.getMessage.contains("UNSUPPORTED_FEATURE"), e.getMessage)
+      }
+      assert(lake.table("p").as[(Double, String)].collect().toSeq ==
+        Seq((1.5, "a")))
+      assert(lake.table("d").count() == 1L)
+    } finally LakeRegistry.unregister("graft")
+  }
 }

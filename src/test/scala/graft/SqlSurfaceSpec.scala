@@ -577,4 +577,23 @@ class SqlSurfaceSpec extends AnyFunSuite {
       .as[Long].collect().toSeq == Seq(2L))
     lake.detach()
   }
+
+  test("AT (VERSION => v) reads a table since dropped or renamed") {
+    val dir = Files.createTempDirectory("graftsqlatdrop").toString
+    val lake = Lake.attach(spark, s"$dir/cat", s"$dir/data")
+    lake.createTableAs("gone", Seq(1L, 2L).toDF("id"))
+    lake.createTableAs("moved", Seq(3L).toDF("id"))
+    val before = lake.currentSnapshotId()
+    lake.sql("DROP TABLE gone")
+    lake.sql("ALTER TABLE moved RENAME TO moved2")
+    assert(lake.sql(s"SELECT COUNT(*) AS n FROM gone AT (VERSION => $before)")
+      .head().getLong(0) == 2L)
+    assert(lake.sql(s"SELECT id FROM moved AT (VERSION => $before)")
+      .as[Long].collect().toSeq == Seq(3L))
+    val e = intercept[IllegalArgumentException](
+      lake.sql(s"SELECT * FROM gone AT (VERSION => ${lake.currentSnapshotId()})")
+        .collect())
+    assert(e.getMessage.contains("does not exist at version"))
+    lake.detach()
+  }
 }
