@@ -23,7 +23,25 @@ import graft.plans.{GraftExtensions, LakeRegistry}
   * stats-pruned scans. `spark.sql.shuffle.partitions` is left at
   * Spark's default/AQE-coalesced value on purpose: AQE right-sizes
   * reducer counts per query, which no static setting does across a
-  * 100 TB query mix. */
+  * 100 TB query mix.
+  *
+  * Two codegen defaults let a statement reuse the classes that earlier
+  * statements compiled, so a repeated pipeline costs neither a Janino
+  * compile on the driver nor a fresh JIT warm-up of new bytecode:
+  *
+  *  - `spark.sql.codegen.cache.maxEntries` = 1000. Spark's cache keys a
+  *    class by (class loader, source) and holds 100 by default. In local
+  *    mode every whole-stage class is compiled twice, once by the
+  *    driver's compile check and once in the task, so a benchmark
+  *    `lake_read` run (lake build plus ten queries) needs about 260
+  *    classes, and a repeated query finds its classes evicted from that
+  *    LRU. An entry holds one generated source and its class: about
+  *    20 KB of heap, 20 MB for a full cache. It is a static conf that
+  *    `CodeGenerator` reads once per JVM, at its first compile, so it
+  *    applies only when the lake session is the JVM's first session.
+  *  - `spark.sql.codegen.useIdInClassName` = false. With the stage id
+  *    in the class name, the same pipeline at another stage position is
+  *    new source and compiles again. */
 object LakeSession {
 
   def builder(): SparkSession.Builder =
@@ -45,6 +63,8 @@ object LakeSession {
       // reporting scan (the spj catalog surface) join co-bucketed tables
       // with zero exchange; inert for every other scan
       .config("spark.sql.sources.v2.bucketing.enabled", "true")
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.sql.catalog.graft", "graft.sources.GraftTableCatalog")
       .withExtensions(new GraftExtensions)
 

@@ -41,13 +41,6 @@ final class LakeIO(val root: String) extends Serializable {
   def absUri(rel: String): String =
     fs.makeQualified(new Path(rootPath, rel)).toString
 
-  /** lake-relative form of an absolute URI/path under the root */
-  def relativize(absPath: String): String = {
-    val q = fs.makeQualified(new Path(new URI(absPath))).toUri.getPath
-    val r = rootPath.toUri.getPath.stripSuffix("/")
-    q.stripPrefix(r).stripPrefix("/")
-  }
-
   def mkdirs(rel: String): Unit = { fs.mkdirs(new Path(rootPath, rel)): Unit }
 
   /** Parquet row-group count from the file footer alone (format v1.1
@@ -121,28 +114,27 @@ final class LakeIO(val root: String) extends Serializable {
   /** lake-relative paths of every FILE under `rel`, recursive — covers
     * hive partition subdirectories (orphan sweep parity with the
     * reference's `read_blob(DATA_PATH || '**')` glob). */
-  def listRecursive(rel: String): Seq[String] = {
-    val d = p(rel)
-    if (!fs.exists(d)) Nil
-    else {
-      val it = fs.listFiles(d, true)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (it.hasNext) buf += relativize(it.next().getPath.toString)
-      buf.toSeq
-    }
-  }
+  def listRecursive(rel: String): Seq[String] = walkFiles(rel).toSeq
 
-  /** how many FILES with the given suffix exist under `rel`, recursive —
-    * no path relativization (hive partition dirs may contain literal
-    * spaces that java.net.URI rejects; Hadoop's own iterator is fine) */
-  def countFilesRecursive(rel: String, suffix: String): Int = {
+  /** how many FILES with the given suffix exist under `rel`, recursive */
+  def countFilesRecursive(rel: String, suffix: String): Int =
+    walkFiles(rel).count(_.endsWith(suffix))
+
+  /** Lake-relative paths of the files under `rel`, one `listStatus` per
+    * directory. `FileSystem.listFiles(dir, true)` would wrap each status
+    * in a `LocatedFileStatus`, which reads its permissions: on the local
+    * file system that starts one `ls -ld` subprocess per file. Paths are
+    * joined from the listed names and never URI-parsed, so hive partition
+    * dirs keep their literal spaces and `%`-escapes. */
+  private def walkFiles(rel: String): Iterator[String] = {
+    def walk(dir: Path, relDir: String): Iterator[String] =
+      fs.listStatus(dir).iterator.flatMap { st =>
+        val r = if (relDir.isEmpty) st.getPath.getName
+          else s"$relDir/${st.getPath.getName}"
+        if (st.isDirectory) walk(st.getPath, r) else Iterator.single(r)
+      }
     val d = p(rel)
-    if (!fs.exists(d)) return 0
-    val it = fs.listFiles(d, true)
-    var n = 0
-    while (it.hasNext)
-      if (it.next().getPath.getName.endsWith(suffix)) n += 1
-    n
+    if (!fs.exists(d)) Iterator.empty else walk(d, rel.stripSuffix("/"))
   }
 
   /** absolute paths of the direct children that are files */

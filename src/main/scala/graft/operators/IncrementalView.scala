@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.QueryDsl.boundedBroadcast
 import graft.catalog.Lake
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -159,9 +160,8 @@ object IncrementalView {
     val dirtyKeys = delta.filter(col("d_del") > 0L)
       .select(groupCols.map(col): _*).distinct()
     if (!dirtyKeys.isEmpty) {
-      val baseAt = lake.tableAtVersion(base, to)
       val recomputed = aggregate(
-        baseAt.join(broadcast(dirtyKeys), groupCols, "left_semi"),
+        dirtyGroupRows(lake, base, mvName, to, dirtyKeys, groupCols),
         groupCols, sums, extrema)
       val allAggs = "n_rows" +: (sums.map(_._1) ++ extrema.names)
       lake.merge(mvName, recomputed, key,
@@ -188,6 +188,15 @@ object IncrementalView {
     // clean groups whose membership dropped to zero leave the view too
     lake.delete(mvName, col("n_rows") === 0L)
   }
+
+  /** The base rows AT `to` of the groups in `dirtyKeys`. The dirty keys
+    * are groups of the view, so the view's footprint bounds the
+    * broadcast side. */
+  private[graft] def dirtyGroupRows(lake: Lake, base: String, mvName: String,
+      to: Long, dirtyKeys: DataFrame, groupCols: Seq[String]): DataFrame =
+    lake.tableAtVersion(base, to).join(
+      boundedBroadcast(dirtyKeys, lake.tableSizeBytes(mvName)),
+      groupCols, "left_semi")
 
   /** Fold a batch of change rows (schema: base columns + `change_type`
     * insert/delete) into the MV — the primitive [[refresh]] and

@@ -159,6 +159,36 @@ class HeadlinePlanSpec extends AnyFunSuite {
 
   // ---- round-14: scale-safe broadcast hints (VERDICT r13 item 3) ----
 
+  /** Plan of IncrementalView's recompute input for two dirty groups of a
+    * fresh view (built under the caller's session settings). */
+  private def dirtyGroupPlan(): SparkPlan = {
+    import org.apache.spark.sql.functions.col
+    val d = java.nio.file.Files.createTempDirectory("graftmvplan").toString
+    val lake = graft.catalog.Lake.attach(spark, s"$d/cat", s"$d/data")
+    lake.createTableAs("base", spark.range(100)
+      .select((col("id") % 10).as("g"), col("id").as("v")))
+    graft.operators.IncrementalView.materialize(lake, "base", "mv",
+      Seq("g"), Seq("s" -> col("v")))
+    val dirty = spark.range(2).select(col("id").as("g"))
+    graft.operators.IncrementalView.dirtyGroupRows(lake, "base", "mv",
+      lake.currentSnapshotId(), dirty, Seq("g"))
+      .queryExecution.executedPlan
+  }
+
+  test("IncrementalView: under the cap the dirty-group keys broadcast") {
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val p = dirtyGroupPlan()
+      assert(count(p)(_.isInstanceOf[BroadcastExchangeExec]) == 1,
+        p.toString.take(2000))
+      assert(nonBroadcastJoins(p) == 0, p.toString.take(2000))
+    } finally {
+      spark.conf.unset("spark.sql.adaptive.enabled")
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
+  }
+
   test("boundedBroadcast: when the bounding-table estimate exceeds the " +
     "cap the hint DROPS and the plan degrades to a shuffle join — the " +
     "100 TB behavior, where a pinned broadcast() would OOM the driver") {
@@ -168,10 +198,10 @@ class HeadlinePlanSpec extends AnyFunSuite {
     spark.conf.set("spark.graft.broadcast.cap", "0")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      // every broadcast in these five is a bounded hint on an O(SF)
-      // side (q9/q7/q8 keep their fixed-25-row nation hints — excluded)
+      // every broadcast in these is a bounded hint on an O(SF) side
+      // (q9/q7/q8 keep their fixed-25-row nation hints — excluded)
       for (q <- Seq("q4_priority", "q17_small_qty", "q20_excess_supply",
-        "q14_promo_share", "q16_supplier_cnt")) {
+        "q14_promo_share", "q16_supplier_cnt", "lake_join_prune")) {
         val p = SparkEntry.queries(q)(spark, dir)
           .queryExecution.executedPlan
         assert(count(p)(_.isInstanceOf[BroadcastExchangeExec]) == 0,
@@ -179,6 +209,11 @@ class HeadlinePlanSpec extends AnyFunSuite {
         assert(nonBroadcastJoins(p) >= 1,
           s"$q lost its join entirely:\n" + p.toString.take(2000))
       }
+      // the incremental view's dirty-group semi-join
+      val p = dirtyGroupPlan()
+      assert(count(p)(_.isInstanceOf[BroadcastExchangeExec]) == 0,
+        "dirty keys still broadcast under cap=0:\n" + p.toString.take(2000))
+      assert(nonBroadcastJoins(p) == 1, p.toString.take(2000))
     } finally {
       spark.conf.unset("spark.sql.adaptive.enabled")
       spark.conf.unset("spark.graft.broadcast.cap")

@@ -257,4 +257,27 @@ class PartitioningSpec extends AnyFunSuite {
     assert(lake.table("pd").count() == 67)
     assert(lake.tableAtVersion("pd", v1).count() == 100)
   }
+
+  test("orphan sweep over hive dirs whose names hold spaces and escapes") {
+    val dir = Files.createTempDirectory("graftpart").toString
+    val lake = Lake.attach(spark, s"$dir/catalog", s"$dir/data")
+    val df = Seq((1, "a b"), (2, "x:y"), (3, "p%q"), (4, "a b")).toDF("id", "k")
+    lake.createTable("sp", df.schema)
+    lake.setPartitionedBy("sp", Seq(("k", "identity")))
+    lake.append("sp", df)
+    // every live file is known, whatever its dir name
+    assert(lake.deleteOrphanedFiles("sp", dryRun = true).isEmpty)
+    val live = lake.listFiles("sp").collect().map(_.getString(0))
+    assert(live.exists(_.contains("k=a b/")) &&
+      live.exists(_.contains("k=x%3Ay/")) &&
+      live.exists(_.contains("k=p%25q/")), live.toSeq)
+    // a stray file in the spaced dir is the one orphan
+    val spaced = live.find(_.contains("k=a b/")).get
+    val stray =
+      s"$dir/data/${spaced.take(spaced.lastIndexOf('/'))}/stray.parquet"
+    Files.write(java.nio.file.Paths.get(stray), Array[Byte](1))
+    assert(lake.deleteOrphanedFiles("sp") == Seq("sp/k=a b/stray.parquet"))
+    assert(!Files.exists(java.nio.file.Paths.get(stray)))
+    assert(lake.table("sp").count() == 4)
+  }
 }

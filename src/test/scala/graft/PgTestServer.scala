@@ -1,15 +1,16 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import scala.sys.process._
 
 /** One PostgreSQL server per test JVM for the live-Postgres catalog specs
   * (reference test/configs/postgres.json runs its suites against a real
   * server). Boots a throwaway cluster under /tmp on a free port with
-  * trust auth; PG refuses to run as root, so every server command runs as
-  * `nobody`. `urlBase` is None when any precondition is missing (no
-  * binaries, not root, boot failure) — specs `assume` on it. */
+  * trust auth, and removes it at JVM exit; PG refuses to run as root, so
+  * every server command runs as `nobody`. `urlBase` is None when any
+  * precondition is missing (no binaries, not root, boot failure) — specs
+  * `assume` on it. */
 object PgTestServer {
 
   private def sh(cmd: String): (Int, String) = {
@@ -40,7 +41,9 @@ object PgTestServer {
       Process(Seq("bash", "-c", s"command -v $b")).!(ProcessLogger(_ => ())) == 0)
     if (!haveBins || !"root".equals(System.getProperty("user.name")))
       return None
-    val root = Files.createTempDirectory("graftpg")
+    // under /tmp, not java.io.tmpdir: `nobody` must reach the cluster,
+    // and the test groups' temp roots sit under the repository's target/
+    val root = Files.createTempDirectory(Paths.get("/tmp"), "graftpg")
     // the cluster runs as nobody: it needs to own its data dir
     Process(Seq("chown", "-R", "nobody", root.toString)).!!
     val (ic, iout) = sh(s"initdb -A trust -D $root/data")
@@ -56,6 +59,7 @@ object PgTestServer {
     if (sc != 0) { System.err.println(s"[pg] start failed: $sout"); return None }
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       sh(s"pg_ctl -D $root/data -m immediate stop"): Unit
+      Process(Seq("rm", "-rf", root.toString)).! : Unit
     }))
     Some(s"jdbc:postgresql://127.0.0.1:$port")
   }
