@@ -96,6 +96,7 @@ class HttpCatalogServer(backingJdbcUrl: String, port: Int = 0) {
     sessions.clear()
     pool.shutdown()
     pool.awaitTermination(5, TimeUnit.SECONDS): Unit
+    MetadataManager.shutdownDerby(backingJdbcUrl)
   }
 
   private def readAll(in: InputStream): Array[Byte] = {

@@ -1039,13 +1039,21 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
     * down cleanly (flushes its log, frees file handles — the handle can
     * be re-attached afterwards); server/HTTP catalogs hold no local
     * state, so it is a no-op there. An open transaction is rolled back
-    * first, like the reference's detach. */
+    * first, like the reference's detach. A lake from
+    * [[Lake.attachEphemeral]] then deletes its work folder, catalog and
+    * data with it. */
   def detach(): Unit = {
     if (txn.isDefined) rollback()
     ownAlias.foreach(graft.plans.LakeRegistry.unregister)
     ownAlias = None
     meta.shutdown()
+    workDir.foreach(d =>
+      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(d)): Unit)
+    workDir = None
   }
+
+  /** the throwaway folder [[detach]] deletes (set by attachEphemeral) */
+  @volatile private var workDir: Option[String] = None
   def listSchemas(): Seq[String] =
     meta.listSchemas().map(_.name) ++
       txn.toSeq.flatMap(_.createdSchemas)
@@ -1668,10 +1676,13 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
         }
       }
 
-  /** Write df under a staging dir, collect per-file stats in ONE agg pass,
-    * move files to their final ducklake-<uuid> names (hive-style partition
-    * dirs when a spec is set, NULL keys → __HIVE_DEFAULT_PARTITION__ like
-    * the reference, ducklake_partition_data.cpp:125-128), return entries. */
+  /** Write df under a staging dir in ONE job whose tasks compute each
+    * file's stats as they write it ([[FileStatsTracker]]), move files to
+    * their final ducklake-<uuid> names (hive-style partition dirs when a
+    * spec is set, NULL keys → __HIVE_DEFAULT_PARTITION__ like the
+    * reference, ducklake_partition_data.cpp:125-128), return entries. A
+    * write of zero rows returns no entry: an empty rewrite is a legal
+    * no-op (UPDATE/MERGE matching nothing writes no file). */
   private def writeAndCollect(table: String, df: DataFrame,
       cols: Seq[ColumnInfo],
       partition: Option[Seq[(String, Column)]] = None,
@@ -1679,8 +1690,7 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
       allCols: Seq[ColumnInfo] = Nil,
       sortKeys: Seq[Column] = Nil,
       inputSorted: Boolean = false): Seq[PendingDataFile] = {
-    val stageMarker = s"stage-${UUID.randomUUID()}"
-    val stagingRel = s"$table/$stageMarker"
+    val stagingRel = s"$table/stage-${UUID.randomUUID()}"
     val stagingDir = io.abs(stagingRel)
     // per_thread_output=false → one output file per insert instead of one
     // per task (reference per_thread_output option)
@@ -1690,121 +1700,54 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
     // per task partition AND tasks map 1:1 to files — coalesce(1)
     // concatenates sorted runs, which is NOT a sorted file
     val writtenSorted = (inputSorted || sortKeys.nonEmpty) && !coalesced
-    val writer0 = partition match {
-      case Some(parts) =>
-        val withParts = parts.zipWithIndex.foldLeft(df0) {
-          case (d, ((_, expr), i)) => d.withColumn(s"__p$i", expr)
-        }
-        // sort-on-insert under a partition spec: (partition cols ++ sort
-        // keys) — satisfies the dynamic-partition writer's required
-        // ordering exactly, so it inserts no sort of its own and the
-        // per-file key order survives (see the append-path comment)
-        val shaped =
-          if (sortKeys.isEmpty) withParts
-          else withParts.sortWithinPartitions(
-            parts.indices.map(i => col(s"__p$i")) ++ sortKeys: _*)
-        shaped.write.options(writeOpts(table))
-          .partitionBy(parts.indices.map(i => s"__p$i"): _*)
-      case None => df0.write.options(writeOpts(table))
+    val parts = partition.getOrElse(Nil)
+    val partCols = parts.indices.map(i => s"__p$i")
+    val withParts = parts.zipWithIndex.foldLeft(df0) {
+      case (d, ((_, expr), i)) => d.withColumn(partCols(i), expr)
     }
-    maxRowsPerFile.fold(writer0)(n =>
-      writer0.option("maxRecordsPerFile", n)).parquet(stagingDir)
-
-    // a zero-row write leaves a staging dir with no parquet parts (only
-    // _SUCCESS) — the stats read below would fail schema inference. An
-    // empty rewrite is a legal no-op: UPDATE/MERGE matching nothing
-    // (reference: zero rows updated, no files written). RECURSIVE check:
-    // partitioned writes put the parts under hive subdirectories (whose
-    // names may hold literal spaces — countFilesRecursive never
-    // URI-parses).
-    val nParts = io.countFilesRecursive(stagingRel, ".parquet")
-    if (nParts == 0) {
-      io.deleteRecursively(stagingRel)
-      return Nil
-    }
-
-    // shredded-variant-path stats ride in the same single pass
-    val shredded = variantShreddedSpecs(table, cols)
-    val pass = statsPass(allCols, cols, c => Some(c.name), shredded)
-    // the written schema is known: no schema-inference job over the
-    // parts; one part is read by one task, so the per-file aggregate
-    // below needs no shuffle
-    val staged = pqRead.schema(df0.schema).parquet(stagingDir)
-    // format v1.1 row_group_count: each part's footer is read in the same
-    // job, once per file after the aggregate (never a driver parquet
-    // read); encrypted footers stay NULL — the column is nullable metadata
-    val ioRef = io
-    val rowGroups =
-      if (cryptoOpts.nonEmpty) lit(null).cast(LongType)
-      else udf((f: String) => ioRef.rowGroupCount(
-        new org.apache.hadoop.fs.Path(f).toString)).apply(col("__file"))
-    val statRows = pass.prepare(if (nParts == 1) staged.coalesce(1)
-      else staged)
-      .groupBy(input_file_name().as("__file"))
-      .agg(pass.aggs.head, pass.aggs.tail: _*)
-      .withColumn("__rg", rowGroups)
-      .collect()
-
-    // belt to the countFilesRecursive braces above: a zero-record part can't
-    // appear in this groupBy today (no rows → no group; Spark 4.1.2 also
-    // writes no empty parts), but a writer change that restores
-    // schema-only parts must not turn a no-match UPDATE/MERGE into a
-    // committed 0-row data file — drop them here so the no-op contract
-    // survives writer behavior, and let the staging cleanup below remove
-    // the bytes
-    statRows.toSeq.filter(_.getAs[Long]("__rows") > 0L)
-      .sortBy(_.getAs[String]("__file")).map { row =>
-      // Path(String), NOT new URI(...): input_file_name() is only
-      // partially URI-escaped — hive partition dirs may contain literal
-      // spaces (timestamp values), which URI rejects while Hadoop's own
-      // parser accepts and keeps byte-for-byte
-      val srcPath = new org.apache.hadoop.fs.Path(
-        row.getAs[String]("__file"))
+    // sort-on-insert under a partition spec: (partition cols ++ sort
+    // keys) — satisfies the dynamic-partition writer's required ordering
+    // exactly, so it inserts no sort of its own and the per-file key
+    // order survives (see the append-path comment)
+    val shaped =
+      if (parts.isEmpty || sortKeys.isEmpty) withParts
+      else withParts.sortWithinPartitions(partCols.map(col) ++ sortKeys: _*)
+    // shredded-variant-path stats ride in the same aggregates; format
+    // v1.1 row_group_count comes from each footer as its task closes it
+    // (encrypted footers stay NULL — the column is nullable metadata)
+    val pass = statsPass(allCols, cols, c => Some(c.name),
+      variantShreddedSpecs(table, cols))
+    val tracker = FileStatsTracker(spark, df0.schema, pass.prepare, pass.aggs,
+      depth = parts.size, rowGroupsFrom = Option.when(cryptoOpts.isEmpty)(io))
+    LakeWrite.parquet(shaped, stagingDir, partCols, writeOpts(table) ++
+      maxRowsPerFile.map(n => "maxRecordsPerFile" -> n.toString), tracker)
+    // hive_file_pattern=false → flat layout: partition values live only
+    // in the catalog (reads never do directory discovery, so pruning is
+    // unaffected; object stores prefer flat keys)
+    val hiveLayout = parts.nonEmpty &&
+      optionFor(table, "hive_file_pattern").forall(_ == "true")
+    val done = tracker.files.map { case (f, row) =>
       val (rows, stats, varStats) = pass.decode(row)
-      // partition dir segments __p{i}=<escaped-value> between staging
-      // root and the part file, located by the stage-UUID marker (pure
-      // hex — never escaped by any layer, so this works even when the
-      // lake ROOT path contains characters input_file_name escapes).
-      // TWO decode layers on the values: the hive writer escaped special
-      // chars (':' → %3A) and input_file_name URI-escaped the '%' on top
-      // (→ %253A) — while leaving spaces raw, which is why the path
-      // parses with Hadoop's Path, not java.net.URI
-      val rawPath = srcPath.toUri.getPath
-      val mIdx = rawPath.indexOf(stageMarker)
-      require(mIdx >= 0, s"staged file outside staging dir: $rawPath")
-      val segs = rawPath.substring(mIdx + stageMarker.length)
-        .stripPrefix("/").split("/").toSeq
-      val partVals = segs.dropRight(1).zipWithIndex.map { case (seg, i) =>
-        val v = unescapeHive(unescapeHive(
-          seg.substring(seg.indexOf('=') + 1)))
-        (i.toLong, v)
-      }
-      // hive_file_pattern=false → flat layout: partition values live only
-      // in the catalog (reads never do directory discovery, so pruning is
-      // unaffected; object stores prefer flat keys)
-      val hiveDirs = partition
-        .filter(_ => optionFor(table, "hive_file_pattern")
-          .forall(_ == "true"))
-        .map { parts =>
-          partVals.zip(parts).map { case ((_, v), (label, _)) =>
-            s"$label=${escapeHive(v)}"
-          }.mkString("/")
-        }.filter(_.nonEmpty)
+      // __p{i}=<value> dirs above the part file, in the writer's own hive
+      // escaping (the committer's paths carry no URL escaping)
+      val partVals = f.relPath.split('/').toSeq.dropRight(1).zipWithIndex
+        .map { case (seg, i) =>
+          (i.toLong, unescapeHive(seg.substring(seg.indexOf('=') + 1)))
+        }
+      val hiveDirs = partVals.zip(parts).map { case ((_, v), (label, _)) =>
+        s"$label=${escapeHive(v)}/"
+      }.mkString
       val finalName = s"ducklake-${UUID.randomUUID()}.parquet"
-      val relPath = hiveDirs.map(d => s"$table/$d/$finalName")
-        .getOrElse(s"$table/$finalName")
-      io.move(srcPath.toString, relPath)
+      val relPath =
+        if (hiveLayout) s"$table/$hiveDirs$finalName" else s"$table/$finalName"
+      io.move(s"$stagingDir/${f.relPath}", relPath)
       PendingDataFile(relPath, rows, io.size(relPath), stats,
-        partitionValues = partVals.toSeq, variantStats = varStats,
-        writtenSorted = writtenSorted,
-        rowGroupCount = Option(row.getAs[java.lang.Long]("__rg"))
-          .map(_.longValue))
-    }.tapEach(_ => ()).toSeq match {
-      case done =>
-        // remove staging leftovers (_SUCCESS etc.)
-        io.deleteRecursively(stagingRel)
-        done
+        partitionValues = partVals, variantStats = varStats,
+        writtenSorted = writtenSorted, rowGroupCount = f.rowGroups)
     }
+    // remove staging leftovers (_SUCCESS, empty parts)
+    io.deleteRecursively(stagingRel)
+    done
   }
 
   // ----------------------------------------------------------------- scans
@@ -3010,25 +2953,21 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
       } else {
         // positional delete parquet, one part file per shuffle task (each
         // data file's positions wholly in one part, sorted (file, pos));
-        // parts move to final names and map back to their data files
+        // the writing task counts each part's positions per data file,
+        // and parts move to final names
         val delStageRel = s"$name/delstage-${UUID.randomUUID()}"
-        shuffled.write.options(cryptoOpts).parquet(io.abs(delStageRel))
-        // (part file, data file, positions), counted back in one job
-        val staged = pqRead.schema(all.schema).parquet(io.abs(delStageRel))
-          .select(input_file_name(), col("file_path")).rdd
-          .map(r => (r.getString(0), r.getString(1))).countByValue().toSeq
-          .map { case ((part, data), n) => (new org.apache.hadoop.fs.Path(
-            new java.net.URI(part)).toString, data, n) }
-        val moved = staged.map(_._1).distinct.map { p =>
+        val delStageDir = io.abs(delStageRel)
+        val counts = new DeleteCountTracker(
+          shuffled.schema.fieldIndex("file_path"))
+        LakeWrite.parquet(shuffled, delStageDir, Nil, cryptoOpts, counts)
+        val out = counts.parts.flatMap { case (part, perData) =>
           val rel = s"$name/ducklake-delete-${UUID.randomUUID()}.parquet"
-          io.move(p, rel)
-          p -> ((rel, io.size(rel)))
-        }.toMap
-        io.deleteRecursively(delStageRel)
-        staged.map { case (part, data, n) =>
-          val (rel, size) = moved(part)
-          (byRel(data).dataFileId, rel, n, size)
+          io.move(s"$delStageDir/$part", rel)
+          val size = io.size(rel)
+          perData.map { case (data, n) => (byRel(data).dataFileId, rel, n, size) }
         }
+        io.deleteRecursively(delStageRel)
+        out
       }
     (deletes, useDv)
   }
@@ -3609,14 +3548,15 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
     def max0: Long = if (s.isEmpty) 0L else s.max
   }
 
-  /** Per-file stats over table columns in ONE aggregation job; `srcNames`
+  /** Per-file stats of a file read back, in ONE aggregation job; `srcNames`
     * (columnId → parquet column name) redirects to foreign names for
     * name-mapped files — columns absent from the file record all-NULL
     * stats. */
   private def statsFor(relPath: String, cols: Seq[ColumnInfo],
       srcNames: Map[Long, String] = Map.empty,
       allCols: Seq[ColumnInfo] = Nil,
-      hiveConsts: Seq[(Long, Option[String])] = Nil): PendingDataFile = {
+      hiveConsts: Seq[(Long, Option[String])] = Nil,
+      shredded: Seq[(ColumnInfo, String, DataType)] = Nil): PendingDataFile = {
     // hive-served columns (add_data_files hive_partitioning) are a
     // per-file constant: aggregate over an injected literal column so
     // their min=max=value stats ride the same single pass (reference
@@ -3633,14 +3573,32 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
     val pass = statsPass(if (srcNames.isEmpty) allCols else Nil, cols, c =>
       if (hiveById.contains(c.columnId)) Some(s"__hive_${c.columnId}")
       else if (srcNames.isEmpty) Some(c.name)
-      else srcNames.get(c.columnId), Nil)
-    val (rows, stats, _) = pass.decode(pass.prepare(df)
+      else srcNames.get(c.columnId), shredded)
+    val (rows, stats, varStats) = pass.decode(pass.prepare(df)
       .agg(pass.aggs.head, pass.aggs.tail: _*).collect()(0))
-    PendingDataFile(relPath, rows, io.size(relPath), stats)
+    PendingDataFile(relPath, rows, io.size(relPath), stats,
+      variantStats = varStats)
   }
 
-  /** One aggregation pass of per-file stats over a frame whose `srcOf(c)`
-    * column holds table column c (None: absent, all NULL): `prepare`
+  /** A lake data file's stats as [[statsFor]] computes them from the file
+    * read back: the table's nested leaves and shredded variant paths, and
+    * the footer's row-group count (None when encrypted) — what the write
+    * job's in-task stats of that file must equal. */
+  private[graft] def readBackStats(name: String,
+      relPath: String): PendingDataFile = {
+    val sid = meta.currentSnapshot().snapshotId
+    val allCols = columnsAt(resolve(name, Some(sid)).tableId, sid)
+    val cols = allCols.filter(_.parentColumn.isEmpty)
+    statsFor(relPath, cols, allCols = allCols,
+      shredded = variantShreddedSpecs(name, cols)).copy(rowGroupCount =
+      Option.when(cryptoOpts.isEmpty)(io.rowGroupCount(abs(relPath))))
+  }
+
+  /** The per-file stats aggregates, one definition of each stat: a write
+    * job evaluates them per file in the task writing it
+    * ([[FileStatsTracker]]), [[statsFor]] over a file read back. They read
+    * a frame whose `srcOf(c)` column holds table column c (None: absent,
+    * all NULL): `prepare`
     * adds the geometry extents (each WKB parsed once, reference
     * DuckLakeColumnGeoStats), `aggs` aggregate, and `decode` turns a
     * result row into (rows, column stats, shredded variant path stats).
@@ -4580,10 +4538,10 @@ class Lake(val spark: SparkSession, val meta: MetadataManager,
     * a per-row extent expression over the written rows: struct hops are
     * `getField`, a list hop lifts to array context (`transform` for
     * deeper hops, `flatten` for list-of-list), map hops take keys/values.
-    * Feeds the same single stats pass as top-level columns (reference
+    * Feeds the same per-file stats aggregates as top-level columns (reference
     * nested geo stats, ducklake_geo_stats.cpp + the shredding model). */
-  /** Scalar nested leaves with per-row read expressions for the single
-    * write-stats pass (the reference stores min/max for EVERY leaf field
+  /** Scalar nested leaves with per-row read expressions for the per-file
+    * stats aggregates (the reference stores min/max for EVERY leaf field
     * id — nested struct/list/map included — and prunes files on struct-
     * path filters; min_max_nested_leaf_rewrite_corruption.test shows the
     * stats surviving rewrites). Boolean = the expression yields a per-row
@@ -5120,9 +5078,11 @@ object Lake {
     * per lake); a `jdbc:` URL → that shared server with one
     * METADATA_SCHEMA per lake (the reference's transaction_schema
     * sharing shape). Lets the FULL lake oracle sweep hash-check any
-    * backend end to end without touching query code. */
-  def attachEphemeral(spark: SparkSession, workDir: String): Lake =
-    sys.props.get("graft.catalog").orElse(
+    * backend end to end without touching query code. The lake owns
+    * `workDir`: [[Lake.detach]] deletes it, so a DataFrame over the lake
+    * must be materialized before the detach. */
+  def attachEphemeral(spark: SparkSession, workDir: String): Lake = {
+    val lake = sys.props.get("graft.catalog").orElse(
       sys.env.get("SPARK_GRAFT_CATALOG")) match {
       case Some("sqlite") =>
         attach(spark, s"jdbc:sqlite:$workDir/cat.db", s"$workDir/data")
@@ -5132,6 +5092,9 @@ object Lake {
         attach(spark, url, s"$workDir/data", metadataSchema = Some(schema))
       case _ => attach(spark, s"$workDir/cat", s"$workDir/data")
     }
+    lake.workDir = Some(workDir)
+    lake
+  }
 
 
   /** `metadataSchema` mirrors the reference's METADATA_SCHEMA attach

@@ -1,7 +1,5 @@
 package graft.catalog
 
-import java.net.URI
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
@@ -36,20 +34,21 @@ final class LakeIO(val root: String) extends Serializable {
     * what Spark readers/writers accept) */
   def abs(rel: String): String = p(rel).toString
 
-  /** fully-qualified URI form matching Spark's `_metadata.file_path`
-    * rendering (scheme + single slash on local FS) */
+  /** fully-qualified, URL-encoded form: Spark's `_metadata.file_path`
+    * rendering (`Path.toUri`; scheme + single slash on local FS, a space
+    * as `%20`, a literal `%` of a hive escape as `%25`) */
   def absUri(rel: String): String =
-    fs.makeQualified(new Path(rootPath, rel)).toString
+    fs.makeQualified(new Path(rootPath, rel)).toUri.toString
 
   def mkdirs(rel: String): Unit = { fs.mkdirs(new Path(rootPath, rel)): Unit }
 
   /** Parquet row-group count from the file footer alone (format v1.1
     * `row_group_count` catalog column; reference row_group_count.test).
-    * `srcAbs` is an absolute URI in the form [[move]] takes. Callable on
+    * `srcAbs` is an absolute path in the form [[move]] takes. Callable on
     * executors — only the root string travels. */
   def rowGroupCount(srcAbs: String): Long = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile
-      .fromPath(new Path(new URI(srcAbs)), conf)
+      .fromPath(new Path(srcAbs), conf)
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
     try r.getFooter.getBlocks.size.toLong finally r.close()
   }
@@ -67,12 +66,13 @@ final class LakeIO(val root: String) extends Serializable {
   def deleteRecursively(rel: String): Boolean =
     fs.delete(new Path(rootPath, rel), true)
 
-  /** rename src (absolute Path string) to the lake-relative dst */
+  /** rename src (absolute path in `Path.toString` form, as a write
+    * committer renders it: no URL escaping) to the lake-relative dst */
   def move(srcAbs: String, dstRel: String): Unit = {
     val dst = new Path(rootPath, dstRel)
     val parent = dst.getParent
     if (parent != null) fs.mkdirs(parent)
-    if (!fs.rename(new Path(new URI(srcAbs)), dst))
+    if (!fs.rename(new Path(srcAbs), dst))
       throw new java.io.IOException(s"rename $srcAbs -> $dst failed")
   }
 
@@ -115,10 +115,6 @@ final class LakeIO(val root: String) extends Serializable {
     * hive partition subdirectories (orphan sweep parity with the
     * reference's `read_blob(DATA_PATH || '**')` glob). */
   def listRecursive(rel: String): Seq[String] = walkFiles(rel).toSeq
-
-  /** how many FILES with the given suffix exist under `rel`, recursive */
-  def countFilesRecursive(rel: String, suffix: String): Int =
-    walkFiles(rel).count(_.endsWith(suffix))
 
   /** Lake-relative paths of the files under `rel`, one `listStatus` per
     * directory. `FileSystem.listFiles(dir, true)` would wrap each status

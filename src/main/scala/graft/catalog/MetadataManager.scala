@@ -84,15 +84,7 @@ class MetadataManager(val jdbcUrl: String,
     * ("database shut down") signals success. Non-Derby catalogs hold no
     * local engine state — no-op. A later connect() transparently
     * re-boots the database. */
-  def shutdown(): Unit =
-    if (jdbcUrl.startsWith("jdbc:derby:")) {
-      val base = jdbcUrl.stripSuffix(";create=true")
-      try { DriverManager.getConnection(s"$base;shutdown=true"); () }
-      catch {
-        case e: SQLException if e.getSQLState == "08006" => () // expected
-        case _: SQLException => ()
-      }
-    }
+  def shutdown(): Unit = MetadataManager.shutdownDerby(jdbcUrl)
 
   /** Raw backend connection for tests/tools that inspect catalog rows
     * directly — routes through the same backend resolution as every
@@ -1028,17 +1020,8 @@ class MetadataManager(val jdbcUrl: String,
         Boolean.box(f.writtenSorted))
       f.columnStats.foreach(st =>
         statRows += colStatsArgs(fid, tableId, f.recordCount, st))
-      f.variantStats.foreach { st =>
-        def num(v: Option[String]): Object =
-          if (!st.numeric) null
-          else v.flatMap(x => scala.util.Try(x.toDouble).toOption)
-            .map(Double.box).orNull
-        varRows += Seq(
-          Long.box(fid), Long.box(tableId), Long.box(st.columnId), st.path,
-          st.shreddedType.orNull, Long.box(f.recordCount),
-          Long.box(st.nullCount), st.minValue.orNull, st.maxValue.orNull,
-          num(st.minValue), num(st.maxValue))
-      }
+      f.variantStats.foreach(st =>
+        varRows += variantStatsArgs(fid, tableId, f.recordCount, st))
       f.partitionValues.foreach { case (keyIndex, v) =>
         partRows += Seq(
           Long.box(fid), Long.box(tableId), Long.box(keyIndex), v)
@@ -1056,12 +1039,7 @@ class MetadataManager(val jdbcUrl: String,
         |VALUES (?, ?, ?, NULL, ?, ?, true, 'parquet', ?, ?, NULL, ?, ?, ?, ?, ?, ?)""".stripMargin,
       fileRows.toSeq)
     execBatch(c, ColStatsSql, statRows.toSeq)
-    execBatch(c,
-      """INSERT INTO ducklake_file_variant_stats (data_file_id, table_id,
-        |column_id, variant_path, shredded_type, value_count, null_count,
-        |min_value, max_value, min_numeric, max_numeric)
-        |VALUES (?, ?, ?, ?, ?, ?, ?, ?, ?, ?, ?)""".stripMargin,
-      varRows.toSeq)
+    execBatch(c, VariantStatsSql, varRows.toSeq)
     execBatch(c,
       """INSERT INTO ducklake_file_partition_value (data_file_id, table_id,
         |partition_key_index, partition_value) VALUES (?, ?, ?, ?)""".stripMargin,
@@ -1215,6 +1193,24 @@ class MetadataManager(val jdbcUrl: String,
       Long.box(valueCount), Long.box(s.nullCount),
       s.minValue.orNull, s.maxValue.orNull, num(s.minValue), num(s.maxValue),
       Boolean.box(s.nanCount > 0), s.extraStats.orNull)
+  }
+
+  private val VariantStatsSql =
+    """INSERT INTO ducklake_file_variant_stats (data_file_id, table_id,
+      |column_id, variant_path, shredded_type, value_count, null_count,
+      |min_value, max_value, min_numeric, max_numeric)
+      |VALUES (?, ?, ?, ?, ?, ?, ?, ?, ?, ?, ?)""".stripMargin
+
+  private def variantStatsArgs(fid: Long, tableId: Long, valueCount: Long,
+      st: VariantPathStats): Seq[Any] = {
+    def num(v: Option[String]): Object =
+      if (!st.numeric) null
+      else v.flatMap(x => scala.util.Try(x.toDouble).toOption)
+        .map(Double.box).orNull
+    Seq(Long.box(fid), Long.box(tableId), Long.box(st.columnId), st.path,
+      st.shreddedType.orNull, Long.box(valueCount), Long.box(st.nullCount),
+      st.minValue.orNull, st.maxValue.orNull, num(st.minValue),
+      num(st.maxValue))
   }
 
   private def insertColStats(c: Connection, fid: Long, tableId: Long,
@@ -2134,12 +2130,15 @@ class MetadataManager(val jdbcUrl: String,
         """INSERT INTO ducklake_data_file (data_file_id, table_id,
           |begin_snapshot, end_snapshot, file_order, path, path_is_relative,
           |file_format, record_count, file_size_bytes, footer_size,
-          |row_id_start, partition_id, has_row_ids, written_sorted)
-          |VALUES (?, ?, ?, NULL, 0, ?, true, 'parquet', ?, ?, NULL, ?, ?, true, ?)""".stripMargin,
+          |row_id_start, partition_id, row_group_count, has_row_ids,
+          |written_sorted)
+          |VALUES (?, ?, ?, NULL, 0, ?, true, 'parquet', ?, ?, NULL, ?, ?, ?, true, ?)""".stripMargin,
         Long.box(fid), Long.box(tableId), Long.box(snap.snapshotId),
         merged.path, Long.box(merged.recordCount),
         Long.box(merged.fileSizeBytes), Long.box(mergedRowIdStart),
-        partitionId.map(Long.box).orNull, Boolean.box(merged.writtenSorted))
+        partitionId.map(Long.box).orNull,
+        merged.rowGroupCount.map(Long.box).orNull,
+        Boolean.box(merged.writtenSorted))
       merged.partitionValues.foreach { case (keyIndex, v) =>
         exec(c,
           """INSERT INTO ducklake_file_partition_value (data_file_id,
@@ -2149,6 +2148,8 @@ class MetadataManager(val jdbcUrl: String,
       }
       merged.columnStats.foreach(s => insertColStats(c, fid, tableId,
         merged.recordCount, s))
+      merged.variantStats.foreach(st => exec(c, VariantStatsSql,
+        variantStatsArgs(fid, tableId, merged.recordCount, st): _*))
       if (removedRows != 0L) {
         exec(c,
           "UPDATE ducklake_table_stats SET record_count = record_count - ? WHERE table_id = ?",
@@ -2633,14 +2634,17 @@ class MetadataManager(val jdbcUrl: String,
         """INSERT INTO ducklake_data_file (data_file_id, table_id,
           |begin_snapshot, end_snapshot, file_order, path,
           |path_is_relative, file_format, record_count, file_size_bytes,
-          |footer_size, row_id_start, partition_id, has_row_ids)
-          |VALUES (?, ?, ?, NULL, 0, ?, true, 'parquet', ?, ?, NULL, ?, NULL, ?)""".stripMargin,
+          |footer_size, row_id_start, partition_id, row_group_count,
+          |has_row_ids)
+          |VALUES (?, ?, ?, NULL, 0, ?, true, 'parquet', ?, ?, NULL, ?, NULL, ?, ?)""".stripMargin,
         Long.box(fid), Long.box(tableId), Long.box(snap.snapshotId),
         f.path, Long.box(f.recordCount), Long.box(f.fileSizeBytes),
         Long.box(explicitRowIdStart.getOrElse(0L)),
-        Boolean.box(f.hasRowIds))
+        f.rowGroupCount.map(Long.box).orNull, Boolean.box(f.hasRowIds))
       f.columnStats.foreach(s => insertColStats(c, fid, tableId,
         f.recordCount, s))
+      f.variantStats.foreach(st => exec(c, VariantStatsSql,
+        variantStatsArgs(fid, tableId, f.recordCount, st): _*))
     }
     if (!isFlush && rowIds.nonEmpty) {
       exec(c,
@@ -3366,4 +3370,16 @@ object MetadataManager {
 
   /** Embedded-Derby URL for a catalog directory. */
   def derbyUrl(dir: String): String = s"jdbc:derby:$dir;create=true"
+
+  /** Shut an embedded Derby database down (flushes its log, frees its
+    * file handles); any other URL is left alone. */
+  def shutdownDerby(jdbcUrl: String): Unit =
+    if (jdbcUrl.startsWith("jdbc:derby:")) {
+      val base = jdbcUrl.stripSuffix(";create=true")
+      try { DriverManager.getConnection(s"$base;shutdown=true"); () }
+      catch {
+        case e: SQLException if e.getSQLState == "08006" => () // expected
+        case _: SQLException => ()
+      }
+    }
 }

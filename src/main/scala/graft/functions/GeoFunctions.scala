@@ -406,8 +406,8 @@ case class StBboxIntersects(children: Seq[Expression])
       cs: IndexedSeq[Expression]): Expression = copy(children = cs)
 }
 
-/** Shared geo-stats aggregation pieces for the lake's two stats-collection
-  * paths (per-insert grouped job and per-file statsFor): 8 extent min/max
+/** Shared geo-stats aggregation pieces of the lake's per-file stats
+  * (evaluated in the writing task, or over a file read back): 8 extent min/max
   * aggregates + type set + empty flag over a pre-projected
   * [[GeoExtentStruct]] column, and the row-side extraction back into the
   * serialized extent JSON. */

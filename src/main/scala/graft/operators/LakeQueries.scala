@@ -27,15 +27,14 @@ object LakeQueries extends QueryPack {
     Lake.attachEphemeral(spark,
       Files.createTempDirectory("graft-lakeq").toString)
 
-  /** Shut the throwaway lake's embedded catalog down before handing the
-    * result back: scan plans resolve their file lists (and inlined rows)
-    * eagerly, so materialization never touches the catalog — and a full
-    * verify/test run attaches hundreds of throwaway lakes in one JVM, so
-    * leaving each Derby instance booted exhausts the process fd limit
-    * (same lifecycle the HTTP-catalog query demonstrates by stopping its
-    * server before returning). */
+  /** Materialize the result, then detach the throwaway lake, which shuts
+    * its embedded catalog down and deletes its folder: a full verify/test
+    * run attaches hundreds of throwaway lakes in one JVM, so leaving each
+    * Derby instance booted exhausts the process fd limit (same lifecycle
+    * the HTTP-catalog query demonstrates by stopping its server before
+    * returning), and leaving each folder fills the temp disk. */
   private[operators] def detached(lake: Lake, df: => DataFrame): DataFrame = {
-    val out = df
+    val out = df.localCheckpoint()
     lake.detach()
     out
   }
@@ -511,8 +510,6 @@ object LakeQueries extends QueryPack {
     * its host engine (ducklake_insert.cpp:49-78). */
   private def qSqlCtas(spark: SparkSession, dir: String): DataFrame = {
     val lake = freshLake(spark)
-    // keep registered after return: the result DataFrame executes lazily
-    // (Verify materializes it right after this fn, before the next query)
     graft.plans.LakeRegistry.register("graft", lake)
     Tables(spark, dir).orders.createOrReplaceTempView("orders_src")
     spark.sql(
@@ -525,9 +522,11 @@ object LakeQueries extends QueryPack {
         |FROM graft.o WHERE o_orderstatus = 'P'""".stripMargin)
     spark.sql("CREATE TABLE graft.scratch AS SELECT 1 AS x")
     spark.sql("DROP TABLE graft.scratch")
-    spark.sql(
+    val out = detached(lake, spark.sql(
       """SELECT o_orderkey, o_totalprice FROM graft.o
-        |ORDER BY o_orderkey""".stripMargin)
+        |ORDER BY o_orderkey""".stripMargin))
+    graft.plans.LakeRegistry.unregister("graft")
+    out
   }
 
   private val qSqlCtasSql =
@@ -544,9 +543,8 @@ object LakeQueries extends QueryPack {
     * ([[graft.catalog.HttpCatalogServer]] — the reference's quack
     * metadata backend re-expressed): every metadata statement of the
     * create/insert/delete sequence crosses the wire; data files go
-    * straight to storage. The service is stopped before returning — the
-    * scan's file list is resolved at plan time, so materialization needs
-    * no catalog. */
+    * straight to storage. The result is materialized, then the service
+    * is stopped and the lake's folder deleted. */
   private def qHttpCatalog(spark: SparkSession, dir: String): DataFrame = {
     val tmp = java.nio.file.Files.createTempDirectory("graft_http").toString
     val server = new graft.catalog.HttpCatalogServer(
@@ -560,8 +558,11 @@ object LakeQueries extends QueryPack {
       lake.delete("o", col("o_totalprice") < 50000.0)
       lake.table("o")
         .select(col("o_orderkey"), col("o_totalprice"))
-        .orderBy(col("o_orderkey"))
-    } finally server.stop()
+        .orderBy(col("o_orderkey")).localCheckpoint()
+    } finally {
+      server.stop()
+      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(tmp)): Unit
+    }
   }
 
   private val qHttpCatalogSql =

@@ -611,14 +611,10 @@ object PipelineQueries extends QueryPack {
     graft.streaming.LakeSink.ingestAvailable(lake, "ev", stream,
       s"ing_${java.util.UUID.randomUUID().toString.replace("-", "")}",
       s"$work/ckpt")
-    // scan plan resolves its file list eagerly; shut the throwaway
-    // catalog down so its Derby fds release (fd-bounded verify runs)
-    val out = lake.table("ev")
+    LakeQueries.detached(lake, lake.table("ev")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), countDistinct(col("user_id")).as("nu"))
-      .orderBy(col("event_type"))
-    lake.detach()
-    out
+      .orderBy(col("event_type")))
   }
 
   private val streamIngestSql =
@@ -682,9 +678,8 @@ object PipelineQueries extends QueryPack {
       }
       .start()
     q.awaitTermination()
-    val out = lake.table("last_ev").orderBy(col("user_id"))
-    lake.detach()
-    out
+    LakeQueries.detached(lake,
+      lake.table("last_ev").orderBy(col("user_id")))
   }
 
   private val streamUpsertSql =

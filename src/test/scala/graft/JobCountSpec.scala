@@ -84,12 +84,15 @@ class JobCountSpec extends AnyFunSuite {
         val ins = jobsDuring {
           spark.sql("INSERT INTO graft.t VALUES (1001)").collect(): Unit
         }
-        // job counts of the previous release: 4 and 6
-        assert(ins <= 4, s"1-row INSERT ran $ins jobs")
+        // one job: the write, whose tasks also compute the file's stats
+        // (2 when a second job read the file back for them)
+        assert(ins <= 1, s"1-row INSERT ran $ins jobs")
         val del = jobsDuring {
           spark.sql("DELETE FROM graft.t WHERE id = 150").collect(): Unit
         }
-        assert(del <= 6, s"point DELETE ran $del jobs")
+        // 4 when the delete file was read back to count its positions
+        assert(del <= 3, s"point DELETE ran $del jobs")
+        info(s"jobs: 1-row INSERT $ins, point DELETE $del")
 
         // a nondeterministic probe in the WHERE clause counts how often
         // the query's 10 source rows are evaluated
@@ -123,8 +126,8 @@ class JobCountSpec extends AnyFunSuite {
           assert(spark.sql("UPDATE graft.u SET v = 'b' WHERE id = 150")
             .head().getLong(0) == 1L)
         }
-        // job counts of the previous release (AQE off): 11, 31 and 6
-        assert(upd <= 6, s"1-row UPDATE ran $upd jobs")
+        // 6 with the stats read-back and the delete-file count-back jobs
+        assert(upd <= 4, s"1-row UPDATE ran $upd jobs")
         val src = (395L to 404L).map(k => s"(${k}L, 'm')").mkString(", ")
         val mrg = jobsDuring {
           assert(spark.sql(s"MERGE INTO graft.u t USING (SELECT * FROM " +
@@ -132,16 +135,19 @@ class JobCountSpec extends AnyFunSuite {
             "UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
             .head().getLong(0) == 10L)
         }
-        // 1 count, 2 × (write, stats) for the rewritten and inserted
-        // files, 2 for the delete file, and 4 broadcasts: the target side,
-        // its delete rows, and the file list of each of its two scan
-        // groups (the UPDATE above left a row-id-materialized file)
-        assert(mrg <= 11, s"10-row MERGE ran $mrg jobs")
+        // 1 count, 2 writes (the rewritten and the inserted rows), 1 for
+        // the delete file, and 4 broadcasts: the target side, its delete
+        // rows, and the file list of each of its two scan groups (the
+        // UPDATE above left a row-id-materialized file); 11 with a stats
+        // read-back job per write and a delete-file count-back job
+        assert(mrg <= 8, s"10-row MERGE ran $mrg jobs")
         val del = jobsDuring {
           assert(spark.sql("DELETE FROM graft.u WHERE id = 250")
             .head().getLong(0) == 1L)
         }
-        assert(del <= 4, s"point DELETE ran $del jobs")
+        // 4 with the delete-file count-back job
+        assert(del <= 3, s"point DELETE ran $del jobs")
+        info(s"jobs: 1-row UPDATE $upd, 10-row MERGE $mrg, point DELETE $del")
 
         // a nondeterministic probe counts evaluations per input row (the
         // previous release: 5 per MERGE source row, 4 per UPDATE row)

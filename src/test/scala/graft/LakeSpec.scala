@@ -18,6 +18,16 @@ class LakeSpec extends AnyFunSuite {
     Lake.attach(spark, s"$dir/catalog", s"$dir/data")
   }
 
+  test("an ephemeral lake deletes its work folder on detach") {
+    val work = Files.createTempDirectory("graftephem")
+    val lake = Lake.attachEphemeral(spark, work.toString)
+    lake.createTableAs("t", Seq((1, "a"), (2, "b")).toDF("id", "v"))
+    assert(lake.table("t").count() == 2)
+    assert(Files.exists(work.resolve("data")))
+    lake.detach()
+    assert(!Files.exists(work), s"$work left behind")
+  }
+
   test("create + append + scan round-trip with NULLs") {
     val lake = freshLake()
     lake.createTable("test", StructType(Seq(

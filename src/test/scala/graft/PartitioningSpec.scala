@@ -280,4 +280,46 @@ class PartitioningSpec extends AnyFunSuite {
     assert(!Files.exists(java.nio.file.Paths.get(stray)))
     assert(lake.table("sp").count() == 4)
   }
+
+  test("UPDATE and DELETE on identity partition values holding a space, " +
+      "':' or '%' match their rows and keep every other partition") {
+    val lake = freshLake()
+    val df = Seq((1, "a b"), (2, "x:y"), (3, "p%q"), (4, "a b"), (5, "plain"))
+      .toDF("id", "k")
+    lake.createTable("sp", df.schema)
+    lake.setPartitionedBy("sp", Seq(("k", "identity")))
+    lake.append("sp", df)
+    def all() = lake.table("sp").as[(Int, String)].collect().toSet
+    var expect = df.as[(Int, String)].collect().toSet
+    for (v <- Seq("a b", "x:y", "p%q", "plain")) {
+      val n = expect.count(_._2 == v)
+      assert(lake.update("sp", Map("id" -> (col("id") + 10)),
+        col("k") === v) == n, v)
+      expect = expect.map { case (i, k) => (if (k == v) i + 10 else i, k) }
+      assert(all() == expect, s"after UPDATE of $v")
+    }
+    for (v <- Seq("x:y", "a b", "p%q")) {
+      assert(lake.delete("sp", col("k") === v) ==
+        expect.count(_._2 == v), v)
+      expect = expect.filterNot(_._2 == v)
+      assert(all() == expect, s"after DELETE of $v")
+    }
+    assert(all() == Set((15, "plain")))
+  }
+
+  test("a lake whose root path holds a space keeps earlier deletes of a " +
+      "file through a second DELETE") {
+    val dir = Files.createTempDirectory("graft part").toString
+    val lake = Lake.attach(spark, s"$dir/cat alog", s"$dir/da ta")
+    lake.createTableAs("t", (1 to 10).map(i => (i, s"v$i")).toDF("id", "v")
+      .coalesce(1))
+    assert(lake.delete("t", col("id") === 3) == 1)
+    assert(lake.delete("t", col("id") === 7) == 1)
+    assert(lake.table("t").as[(Int, String)].collect().map(_._1).sorted
+      .toSeq == ((1 to 10).toSet - 3 - 7).toSeq.sorted)
+    assert(lake.tableWithRowId("t").count() == 8)
+    assert(lake.update("t", Map("v" -> lit("u")), col("id") === 5) == 1)
+    assert(lake.table("t").filter(col("v") === "u").count() == 1)
+    assert(lake.table("t").count() == 8)
+  }
 }

@@ -19,12 +19,27 @@ import org.scalatest.funsuite.AnyFunSuite
   * complete, minimal history of the random workload. */
 @org.scalatest.tags.Slow
 class RandomizedDmlSpec extends AnyFunSuite {
+  import RandomizedDmlSpec.runSeed
+
+  test("random DML sequences match the model (file-backed)") {
+    runSeed(seed = 42L, ops = 25, inline = false)
+  }
+
+  test("random DML sequences match the model (inlining on)") {
+    runSeed(seed = 1337L, ops = 25, inline = true)
+  }
+}
+
+object RandomizedDmlSpec extends org.scalatest.Assertions {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   private case class R(id: Long, v: Int, s: String)
 
-  private def runSeed(seed: Long, ops: Int, inline: Boolean): Unit = {
+  /** Runs the sequence of `seed`; `afterOp` sees the lake after each op,
+    * once its contents matched the model. */
+  def runSeed(seed: Long, ops: Int, inline: Boolean,
+      afterOp: Lake => Unit = _ => ()): Unit = {
     val dir = Files.createTempDirectory(s"graftrand$seed").toString
     val lake = Lake.attach(spark, s"$dir/catalog", s"$dir/data")
     if (inline) lake.setOption("data_inlining_row_limit", "8")
@@ -102,6 +117,7 @@ class RandomizedDmlSpec extends AnyFunSuite {
       }
       assert(actual() == model.values.toSet,
         s"seed=$seed op#$i diverged from the model")
+      afterOp(lake)
     }
 
     // time travel reproduces every recorded snapshot
@@ -131,13 +147,5 @@ class RandomizedDmlSpec extends AnyFunSuite {
     assert(folded == model.values.toSet,
       s"seed=$seed CDC replay diverged from the final state")
     lake.detach()
-  }
-
-  test("random DML sequences match the model (file-backed)") {
-    runSeed(seed = 42L, ops = 25, inline = false)
-  }
-
-  test("random DML sequences match the model (inlining on)") {
-    runSeed(seed = 1337L, ops = 25, inline = true)
   }
 }
